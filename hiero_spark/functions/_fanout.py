@@ -1,13 +1,8 @@
 """Scan-width utility shared across operator families.
 
-`fan_out` started life in functions/dedup.py; by round 14 it was used
-by seven operator modules (dedup, setsim, similarity, incremental,
-overlap, bloom, pipeline, spans, paragraphs) and its single-function
-evidence blast radius in dedup.py hit 24 registered queries — above
-the <20 bound tests/test_evidence_slice.py pins for routine dedup.py
-edits.  It lives here so an edit to dedup proper no longer lapses
-every set-similarity and ANN pin; an edit to THIS module correctly
-lapses exactly the queries whose plans depend on scan widening.
+`fan_out` widens a narrow scan before CPU-bound map work. Most text
+operator modules call it (dedup, set similarity, ANN, BM25, Bloom,
+pipeline, spans, ...), so it sits in a module of its own.
 """
 
 from __future__ import annotations

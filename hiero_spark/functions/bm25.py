@@ -202,8 +202,13 @@ def bm25_topk_indexed(
         )
         .collect()
     )
-    n_docs = float(setup[0]["n_docs"])
-    avgdl = float(setup[0]["total_toks"]) / n_docs
+    if setup:
+        n_docs = float(setup[0]["n_docs"])
+        avgdl = float(setup[0]["total_toks"]) / n_docs
+    else:
+        # no query terms: the cross join is empty, so score an empty
+        # postings read — same result schema as any other probe
+        n_docs = avgdl = 1.0
     buckets = sorted({r["b"] for r in setup})
     tf = (
         spark.read.parquet(f"{path}/postings")

@@ -1,11 +1,6 @@
-"""Round-6 curation-audit queries: contamination grading, entropy
-quality signal, per-group selection, keep-first line dedup, and domain
-mixture weights.
-
-Registered in their own module so the evidence system's blast radius
-stays narrow: these share helper modules (dedup shingling, text quality)
-by IMPORT, which puts those files in each query's hash closure without
-editing them — existing pins stay valid.
+"""Curation-audit queries: contamination grading, entropy quality
+signal, per-group selection, keep-first line dedup, and domain mixture
+weights.
 """
 
 from __future__ import annotations

@@ -1,9 +1,5 @@
-"""Round-7 additions: BM25 full-text ranking, triangle counting, and
-deterministic weighted (PPS) sampling.
-
-Own module so the evidence system's hash blast radius stays narrow
-(same rationale as queries/curation.py): helpers are pulled in by
-IMPORT, existing pins stay valid.
+"""Retrieval, graph and sampling queries: BM25 full-text ranking,
+triangle counting, and deterministic weighted (PPS) sampling.
 """
 
 from __future__ import annotations

@@ -1,5 +1,6 @@
 """Dataset-assembly operators: splits, vocabulary, decontamination, PII."""
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -39,7 +40,11 @@ def test_token_vocab_counts(spark):
     assert got == [("a", 2), ("b", 3)][::-1] + [("c", 1)]
 
 
-def test_contaminated_docs_exact(spark):
+@pytest.fixture
+def decontam_frames(spark, tmp_path):
+    """(evals, train), read back from parquet so their plans carry real
+    size statistics: an in-memory createDataFrame frame reports Spark's
+    default size (Long.MaxValue), which alone opens the Bloom gate."""
     train = spark.createDataFrame(
         [(1, "the quick brown fox jumps")], "doc_id long, text string"
     )
@@ -50,8 +55,40 @@ def test_contaminated_docs_exact(spark):
         ],
         "doc_id long, text string",
     )
+    out = []
+    for name, df in (("evals", evals), ("train", train)):
+        df.write.parquet(str(tmp_path / name))
+        out.append(spark.read.parquet(str(tmp_path / name)))
+    return tuple(out)
+
+
+def test_contaminated_docs_exact(decontam_frames):
+    evals, train = decontam_frames
     got = {r["doc_id"] for r in pl.contaminated_docs(evals, train, "text", "doc_id").collect()}
     assert got == {10}
+
+
+@pytest.mark.parametrize("arm", [pl.contaminated_docs, pl.contaminated_docs_hashed])
+def test_contaminated_docs_bloom_gate_forced_open(spark, decontam_frames, monkeypatch, arm):
+    """A 1-byte broadcast threshold opens the size gate, so the Bloom
+    pre-filter runs; the id set must equal the gate-closed answer."""
+    evals, train = decontam_frames
+    calls = []
+    real = pl._bloom_prefilter
+    monkeypatch.setattr(
+        pl, "_bloom_prefilter", lambda *a: calls.append(a) or real(*a)
+    )
+    closed = {r["doc_id"] for r in arm(evals, train, "text", "doc_id").collect()}
+    assert not calls
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        opened = {r["doc_id"] for r in arm(evals, train, "text", "doc_id").collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert len(calls) == 1
+    assert opened == closed == {10}
 
 
 def test_scrub_pii_redacts_and_counts(spark):

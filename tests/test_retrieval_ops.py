@@ -73,6 +73,20 @@ def test_bm25_query_terms_case_folded(spark, tmp_path):
     assert probed == lo
 
 
+def test_bm25_indexed_empty_query_is_empty_frame(spark, tmp_path):
+    """No query terms: an empty result with the schema of a real probe,
+    not an IndexError from the empty setup collect."""
+    from hiero_spark.functions.bm25 import bm25_topk_indexed, save_text_index
+
+    docs = _docs(spark, [(0, "alpha beta"), (1, "beta gamma")])
+    path = str(tmp_path / "idx")
+    save_text_index(docs, path, n_buckets=8)
+    empty = bm25_topk_indexed(spark, path, [], k=5, n_buckets=8)
+    probe = bm25_topk_indexed(spark, path, ["beta"], k=5, n_buckets=8)
+    assert empty.schema == probe.schema
+    assert empty.collect() == []
+
+
 def test_triangle_count_known_graphs(spark):
     # K4 has 4 triangles; a pendant edge adds none. Edges given directed,
     # with a duplicate and a reversed copy — canonicalization must dedup.
