@@ -3,13 +3,23 @@
 Mirrors hiero's dataset-loading entry point (`InitialObjectTarget.loadTable`
 -> `LoadFilesMap`, SURVEY.md §3.2): loading is lazy, column-pruned, and
 partition-parallel — all free via `spark.read.parquet`.
+
+hiero loads a table once and sends every later sketch to the loaded
+dataset. The part of a load that costs a Spark job is parquet schema
+inference (a job that reads a footer), so the catalog resolves each
+table's schema once per Spark application and path, and later loads pass
+it to `spark.read.schema(...)`, which only lists the files. The schema is
+re-inferred when the path's files change. Only the schema is memoized:
+every load still builds a fresh relation (see `_SCHEMAS`).
 """
 
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -44,17 +54,57 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-# Loaded-table memo per (application, sf_dir, table): hiero keeps the
-# browsed table memory-resident (the paper's core architecture — sketches
-# are sub-second *because* the columnar data is already in RAM across the
-# worker tree). Opt in with SPARK_GRAFT_TABLE_CACHE=1 for interactive
-# sessions that re-sketch the same table many times: first touch pays the
-# scan, later sketches read the in-memory columnar cache (MEMORY_AND_DISK,
-# so a working set beyond executor memory spills instead of OOMing). The
-# default stays off because caching replaces the parquet scan — and its
-# filter pushdown + column pruning — with an InMemoryTableScan, which is
-# the wrong trade for one-shot batch queries.
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+# Parquet schema memo: (applicationId, path) -> (fingerprint, schema).
+# Only the schema is kept, never the DataFrame: each load must be a fresh
+# relation, because two loads of one table in a plan (a self-join) need
+# distinct attribute ids, and files added or removed under the path must
+# still be listed. The fingerprint (see `_fingerprint`) catches a path
+# rewritten with another schema. nanosAsLong, which changes how events.ts
+# is inferred, is pinned by `_ensure_session_confs` before every read, so
+# the key leaves it out. Two threads missing at once both infer and store
+# the same value.
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """The local file state a parquet path's schema depends on: for a file,
+    (inode, size, mtime_ns); for a directory (a Spark-written table), the
+    sorted (relpath, size, mtime_ns) of every file under it.  None when the
+    path is not on the local file system or cannot be read, and then the
+    schema is always inferred."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return None
+    local = url.path if url.scheme else path
+    try:
+        if not os.path.isdir(local):
+            st = os.stat(local)
+            return (st.st_ino, st.st_size, st.st_mtime_ns)
+        files = []
+        for root, _dirs, names in os.walk(local):
+            for n in names:
+                full = os.path.join(root, n)
+                st = os.stat(full)
+                files.append(
+                    (os.path.relpath(full, local), st.st_size, st.st_mtime_ns)
+                )
+        return tuple(sorted(files))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)`, inferring the schema only on the first
+    read of `path` in this application or after its files changed."""
+    key = (spark.sparkContext.applicationId, path)
+    fp = _fingerprint(path)
+    memo = _SCHEMAS.get(key)
+    if fp is not None and memo is not None and memo[0] == fp:
+        return spark.read.schema(memo[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if fp is not None:
+        _SCHEMAS[key] = (fp, df.schema)
+    return df
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -87,18 +137,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     _ensure_session_confs(spark)
-    caching = os.environ.get("SPARK_GRAFT_TABLE_CACHE", "0") == "1"
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if caching and key in _TABLE_MEMO:
-        return _TABLE_MEMO[key]
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = _read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         df = normalize_events_ts(df)
-    if caching:
-        from pyspark.storagelevel import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        _TABLE_MEMO[key] = df
     return df
 
 

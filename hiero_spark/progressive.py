@@ -65,17 +65,24 @@ def progressive_merge(
     partial outputs (the monoid merge). The final emission equals the
     whole-input sketch when partial_fn/merge_fn form a proper monoid.
 
-    Each partial is persisted when it first computes (round 9): Spark
-    unions are lazy, so without the persist tier i re-executed all i
-    prior slice scans and total work was the same O(tiers²/2) slices as
-    progressive_prefix — the docstring's one-scan claim is only true
-    because the (bounded, sketch-sized) partials are cached.  The caller
-    owns the session-level cache lifetime (sketches are O(buckets) rows;
-    spark.catalog.clearCache() reclaims)."""
+    Each partial is persisted when it first computes: Spark unions are
+    lazy, so without the persist tier i re-executed all i prior slice
+    scans and total work was the same O(tiers²/2) slices as
+    progressive_prefix — the one-scan claim holds only because the
+    (bounded, sketch-sized) partials are cached while the stream runs.
+    The partials are unpersisted when the generator finishes or is
+    closed, so collect each emission before advancing; a caller that
+    stops early must `close()` the generator to release them."""
     merged: DataFrame | None = None
-    for i in range(tiers):
-        part = partial_fn(
-            df.filter(_tier_pred(key_cols, tiers, i, exact=True))
-        ).persist()
-        merged = part if merged is None else merged.unionByName(part)
-        yield (i + 1) / tiers, merge_fn(merged)
+    parts: list[DataFrame] = []
+    try:
+        for i in range(tiers):
+            part = partial_fn(
+                df.filter(_tier_pred(key_cols, tiers, i, exact=True))
+            ).persist()
+            parts.append(part)
+            merged = part if merged is None else merged.unionByName(part)
+            yield (i + 1) / tiers, merge_fn(merged)
+    finally:
+        for part in parts:
+            part.unpersist()

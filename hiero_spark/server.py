@@ -686,10 +686,13 @@ class HieroHandler(BaseHTTPRequestHandler):
                     out_q.put(e)  # genuine failure: surface to the handler
             finally:
                 # PySpark has no clearJobGroup; reset the thread-locals so
-                # a pooled thread can't leak the group onto later jobs
+                # a pooled thread can't leak the group onto later jobs.
+                # Closing the stream makes one left mid-way (cancel,
+                # failure) release the partials progressive_merge persisted.
                 try:
                     sc.setLocalProperty("spark.jobGroup.id", None)
                     sc.setLocalProperty("spark.job.description", None)
+                    stream.close()
                 except Exception:
                     pass
                 state["done"] = True

@@ -10,9 +10,11 @@ regresses.
 """
 
 import json
+import os
 import re
 
 DRIVER_TAIL_BYTES = 2000
+BENCH_PY = os.path.join(os.path.dirname(__file__), os.pardir, "bench.py")
 
 
 def _line_for(n_queries: int) -> str:
@@ -68,7 +70,7 @@ def test_stdout_line_fits_driver_tail():
     shed = json.loads(_line_for(36))
     shed.pop("task_counts")
     assert len(json.dumps(shed)) < DRIVER_TAIL_BYTES - 56
-    src = open("bench.py").read()
+    src = open(BENCH_PY).read()
     assert "if len(line) > 1700:" in src
     assert 'line_obj.pop("task_counts", None)' in src
 
@@ -77,7 +79,7 @@ def test_bench_emits_no_bulky_maps_on_stdout():
     """The per-query calibrated map and common-subset detail belong in
     BENCH_DETAIL.json; their reappearance on the stdout line is exactly
     the r10 overflow."""
-    src = open("bench.py").read()
+    src = open(BENCH_PY).read()
     # the detail-file dump must carry them ...
     detail = src.split('json.dump(')[1]
     assert '"queries_calibrated": queries_calibrated' in detail

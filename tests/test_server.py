@@ -274,6 +274,21 @@ def test_progressive_merge_mode_final_equals_prefix_exact(api):
         assert finals["merge"] == finals["prefix"], path
 
 
+def test_progressive_merge_releases_its_persists(api, spark):
+    """A drained merge-mode stream unpersists the per-tier partials it
+    cached, so a long-lived server does not accumulate them."""
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    url = (
+        api
+        + "/api/progressive/histogram?table=lineitem&col=l_quantity"
+        + "&buckets=8&tiers=3&key=l_orderkey&mode=merge"
+    )
+    with urllib.request.urlopen(url, timeout=300) as r:
+        lines = [json.loads(x) for x in r.read().splitlines() if x.strip()]
+    assert [ln["fraction"] for ln in lines][-1] == 1.0
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 def test_progressive_bad_mode_400(api):
     with pytest.raises(urllib.error.HTTPError) as e:
         _get(api, "/api/progressive/histogram?table=orders&col=o_totalprice&mode=nope")
