@@ -1,20 +1,25 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-compact JSON line: {"metric": ..., "value": N, "unit": "sec",
-"queries": {...}, "sf": ..., "calibration_sec": ...}. Detail blocks
-(multifile timings, ANN/decontam/pyds payoffs, per-round new-operator
-timings) go to BENCH_DETAIL.json next to this file — stdout stays small
-enough that a byte-tail of it always contains the full line.
+"""Headline benchmark: times the HEADLINE queries at $SPARK_GRAFT_SF_DIR
+(default `hiero_spark.catalog.DEFAULT_SF_DIR`) on local[$SPARK_GRAFT_CPUS]
+and prints ONE compact JSON line, last on stdout (see `stdout_line`).
 
-Each query is executed to completion (count() drains the plan without
-pulling rows to the driver). Timings are STEADY-STATE: every headline
-query runs once untimed first, so one-time costs (JVM start, parquet
-footer reads, whole-stage-codegen compilation — measured at ~6.5 s of
-n1_minhash_near_dups's 7.5 s cold number in round 1) are excluded, and
-the reported figure is the per-query marginal cost a long-lived session
-pays. Set SPARK_GRAFT_BENCH_COLD=1 to skip the warm-up and measure the
-cold numbers instead.
+Each query is timed as a caller pays for it: `spec.fn(spark, sf_dir)`
+(the Python plan build plus any eager jobs the function runs before it
+returns) followed by a `noop` write, which materializes every output
+column.  `count()` is not used: Catalyst prunes the output expressions
+under it, so aggregates such as `a11_quantiles_exact`'s exact
+percentiles would never run.
+
+One untimed pass over every query pays the JVM, parquet-footer and
+codegen costs first.  Then each query is timed N_REPS times and the
+minimum is kept.  Tracked operator caches and the session cache are
+released before every rep, so each rep recomputes everything from the
+parquet inputs and no query's time includes another's cache backlog.
+
+Per-query build and total times go to BENCH_DETAIL.json next to this
+file.  Run:
+
+    SPARK_GRAFT_CPUS=$(nproc) python bench.py
 """
 
 from __future__ import annotations
@@ -44,166 +49,72 @@ HEADLINE = [
     "n1_minhash_near_dups",
     "n2_ann_brute_force",
     "n4_token_count",
-    # round 2 additions (judge: compare r1-comparable subsets per-query)
     "q13_customer_distribution",
     "q15_top_supplier",
     "q22_global_sales_opportunity",
     "n6_decontamination",
-    # round 3 additions
     "n6_decontamination_hashed",
-    # round 5 additions (judge: r1/r2/r3-comparable subsets per-query)
     "n4_repetition_stats",
     "n1_url_dedup",
     "n5_boilerplate_removal",
-    # round 9 additions (round-8 verdict #5: the heavyweight round-8 ops
-    # were invisible to round-over-round regression tracking; the
-    # r1-comparable subset above stays intact for the baseline gate)
     "n1_entity_resolution",
     "n1_containment_join",
     "n7_connected_components",
     "s19_time_travel",
 ]
 
-
-def calibrate() -> float:
-    """Fixed-work CPU reference (round-6 verdict item 4): a pinned numpy
-    matmul chain plus a pure-Python loop, timed min-of-3. Machine/sandbox
-    drift scales this constant the same way it scales query wall-clock, so
-    a uniform bench elevation (r4: 2.4x, r6: 1.4x — both later proved
-    environmental) is separable from a real plan regression by comparing
-    per-query time in units of calibration_sec across rounds."""
-    import numpy as np
-
-    rng = np.random.default_rng(0)
-    a = rng.standard_normal((600, 600))
-    best = None
-    for _ in range(3):
-        t0 = time.perf_counter()
-        b = a.copy()
-        for _ in range(8):
-            b = b @ a
-            b /= np.abs(b).max()
-        acc = 0
-        for i in range(1_000_000):
-            acc += i * i % 7
-        dt = time.perf_counter() - t0
-        best = dt if best is None or dt < best else best
-    return round(best, 4)
+N_REPS = 3
+# Names the timing method.  Totals taken under a different basis (the
+# earlier `count()` bases in BENCH_r*.json) are not comparable with it.
+TIMING_BASIS = "build_noop_released"
+DETAIL_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
+)
 
 
-def calibrate_spark(spark) -> float:
-    """Spark-shaped fixed-work reference (round-11 verdict #2): the
-    numpy/pure-Python `calibrate()` number tracks CPU throughput, but a
-    Spark query's time is CPU work PLUS per-query fixed overhead
-    (scheduling, codegen, task launch) that does NOT scale with CPU
-    speed — r11 proved the failure mode when calibration_sec halved
-    (0.109 -> 0.072) while query times held, manufacturing a phantom
-    1.37x 'calibrated regression' against a raw 0.902x.
-
-    This reference is a canonical small Spark job at a pinned row count
-    — range -> hash -> groupBy -> two aggregates -> final agg — timed
-    min-of-3 on the SAME session as the bench queries, so it embeds the
-    same scheduler/codegen/shuffle fixed costs in the same proportion a
-    short query does.  Round-over-round calibrated ratios divide by THIS
-    number; the CPU number stays recorded for continuity."""
-    from pyspark.sql import functions as F
-
-    best = None
-    for _ in range(3):
-        t0 = time.perf_counter()
-        (
-            spark.range(0, 2_000_000)
-            .select(F.pmod(F.xxhash64("id"), F.lit(1000)).alias("k"))
-            .groupBy("k")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("k").alias("s"))
-            .agg(F.sum("n").alias("tn"), F.sum("s").alias("ts"))
-            .collect()
-        )
-        dt = time.perf_counter() - t0
-        best = dt if best is None or dt < best else best
-    return round(best, 4)
-
-
-def calibrate_spark_v2(spark) -> dict:
-    """Round-14 fix for the round-13 verdict's #1: the ~0.5 s v1 fixed
-    job is too small to be a stable denominator — its own min-of-3
-    run-to-run variance (measured 0.414-0.498 s across idle r13 runs,
-    a 63% swing r12->r13) divides ~1:1 into the calibrated ratio and
-    produced the first dual-sided reading's 38.6% raw-vs-calibrated gap.
-
-    Sizing was measured, not assumed: the first r14 cut (v1's shape at
-    10x rows) still ran in ~0.49 s — identical to v1, because that job
-    is fixed-overhead-dominated (codegen'd range+hash is ~free and 10x
-    rows never showed up in the wall time).  v2 therefore does real
-    work: 100M rows through an 8-deep xxhash64 chain into a 1M-group
-    aggregation (a genuine shuffle), ~3.3 s at local[32].  One untimed
-    warm-up run (codegen compile), then min-of-5 timed with the SPREAD
-    recorded — measured min-of-5 stability across fresh processes: 1.9%
-    (3.343 vs 3.282 s), vs the 63% v1 swing.  If a future round's
-    calibrated ratio diverges from raw, the recorded spread either
-    explains it mathematically or rules calibration noise out.  v1
-    stays reported for continuity; the calibrated ratio uses v2 on both
-    sides as soon as the previous round's artifact carries it (r14 is
-    the first to emit it, so the first v2-basis ratio lands in r15 —
-    the definition is frozen from this round on)."""
-    from pyspark.sql import functions as F
-
-    def job():
-        h = F.xxhash64("id")
-        for _ in range(8):
-            h = F.xxhash64(h)
-        (
-            spark.range(0, 100_000_000)
-            .select(F.pmod(h, F.lit(1_000_000)).alias("k"))
-            .groupBy("k")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("k").alias("s"))
-            .agg(F.sum("n").alias("tn"), F.sum("s").alias("ts"))
-            .collect()
-        )
-
-    job()  # untimed warm-up: codegen compile happens once, off the clock
-    times = []
-    for _ in range(5):
-        t0 = time.perf_counter()
-        job()
-        times.append(time.perf_counter() - t0)
-    best = min(times)
-    return {
-        "sec": round(best, 4),
-        "n_reps": 5,
-        "times": [round(t, 4) for t in times],
-        "spread_pct": round(100.0 * (max(times) - best) / best, 1),
-    }
+def stdout_line(timings: dict[str, float], sf: float, cpus: int) -> str:
+    """The one stdout line: per-query min total seconds and their sum.
+    Only scalars and the `queries` map, so it stays well inside a
+    2000-byte tail of stdout."""
+    return json.dumps(
+        {
+            "metric": "headline_queries_total",
+            "value": round(sum(timings.values()), 3),
+            "unit": "sec",
+            "queries": timings,
+            "sf": sf,
+            "cpus": cpus,
+            "n_reps": N_REPS,
+            "estimator": "min",
+            "timing_basis": TIMING_BASIS,
+            "detail_file": os.path.basename(DETAIL_PATH),
+        }
+    )
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else -1.0
-
+    from hiero_spark.catalog import DEFAULT_SF_DIR
+    from hiero_spark.functions._cachetrack import release_caches
     from hiero_spark.registry import all_queries
     from hiero_spark.session import get_spark
 
-    # Console progress bars are stderr noise that lands in the driver's
-    # byte-tail capture right next to the stdout JSON line (the r14 tail
-    # is ~550 bytes of "[Stage ...]" redraws); with the UI disabled they
-    # serve nobody here, and suppressing them keeps the (slightly longer
-    # round-15) line safely inside the tail window.
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1).rstrip(".")) if m else -1.0
+    # Console progress bars are stderr redraw noise beside the stdout line.
     spark = get_spark(
         "hiero_spark_bench", **{"spark.ui.showConsoleProgress": "false"}
     )
+    sc = spark.sparkContext
     specs = all_queries()
 
-    # Quiet WindowExec's 'No Partition Defined' WARN for this bench run
-    # ONLY: every unpartitioned-window site in the registry is pinned to
-    # a bounded aggregate/limit input by
-    # tests/test_plans.py::test_unpartitioned_windows_pinned_and_bounded
-    # (10 named sites), so in this artifact the warning is attributed
-    # noise that was drowning the stdout tail the driver records
-    # (round-11 verdict #5).  A NEW unbounded window fails that test —
-    # it cannot hide behind this logger setting.
+    # Quiet WindowExec's 'No Partition Defined' WARN for this run only:
+    # every unpartitioned-window site in the registry is pinned to a
+    # bounded input by
+    # tests/test_plans.py::test_unpartitioned_windows_pinned_and_bounded,
+    # so a new unbounded window fails that test instead of hiding here.
     try:
-        jvm = spark.sparkContext._jvm
+        jvm = sc._jvm
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
             "org.apache.spark.sql.execution.window.WindowExec",
             jvm.org.apache.logging.log4j.Level.ERROR,
@@ -211,1913 +122,48 @@ def main() -> None:
     except Exception:
         pass  # logging backend drift: warnings reappear, bench still runs
 
-    # SPARK_GRAFT_MULTIFILE=1: run ONLY on an 8-files-per-table rewrite of
-    # the testdata (the shipped fixtures are single-row-group, 1 task/scan).
-    only_multifile = bool(os.environ.get("SPARK_GRAFT_MULTIFILE"))
-
-    # Min-of-n (round-4 verdict item 2): each query is timed n_reps times and
-    # the per-query MIN is reported — the right estimator for steady-state
-    # marginal cost, and the only one robust to box contention (round 4's
-    # 2.7× "regression" was noise a single-shot timing couldn't refute).
-    n_reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-
-    def run_set(data_dir: str) -> dict[str, float]:
-        """Warm every headline plan shape once (JVM, parquet footers,
-        whole-stage-codegen compilation), then time steady-state execution —
-        the per-query marginal cost a long-lived session pays. BASELINE.md
-        documents the convention; SPARK_GRAFT_BENCH_COLD=1 skips warm-up.
-
-        Round-14 measurement fix (documented in OPTIMIZATION_r14.md): the
-        reps used to interleave (rep loop outer) with NO cache release, so
-        operator-internal tracked persists (set-similarity shingle frames,
-        MinHash signature frames) accumulated across the whole timed phase.
-        Measured consequences at sf0.1: (a) untouched queries timed after
-        persist-bearing ones read 20-50% slow from storage-memory pollution
-        (n6_decontamination 1.03 s isolated vs 1.64 s polluted, q22 0.42 vs
-        0.67, s19_time_travel 1.06 vs 1.49); (b) a persist-bearing query's
-        reps 2-3 silently reused rep-1's materialized intermediate via
-        CacheManager plan-matching, so its min was a warm-cache number.
-        Now reps are GROUPED PER QUERY and every query's tracked caches are
-        released before the next query starts: each query still reports the
-        same steady-state min-of-n (its own caches warm from rep 1 — the
-        long-lived-session marginal cost BASELINE.md documents, comparable
-        with prior rounds), but no query's timing ever includes another
-        query's cache backlog.  The old interleaved-basis numbers for this
-        round are kept in plans/r14/bench_r14_interleaved_basis.json; a
-        fully cache-released arm for the persist-bearing queries is
-        recorded in BENCH_DETAIL.nocache_steady_state."""
-        from hiero_spark.functions._cachetrack import (
-            live_count, release_caches,
-        )
-
-        specs["a1_summary_count"].fn(spark, data_dir).count()
-        if not os.environ.get("SPARK_GRAFT_BENCH_COLD"):
-            for name in HEADLINE:
-                specs[name].fn(spark, data_dir).count()
+    def run_once(name: str, group: str) -> tuple[float, float]:
+        """(build_s, total_s) of one fresh execution of `name`."""
         release_caches()
         spark.catalog.clearCache()
-
-        def _task_count(group: str) -> int:
-            """Tasks launched by the jobs of one rep's job group — the
-            round-14 verdict's scaling-arm telemetry: flat 8-vs-32-core
-            times on sub-second queries read as 'CPUS ignored' unless
-            the artifact shows how few tasks those queries actually run."""
-            try:
-                st = spark.sparkContext.statusTracker()
-                total = 0
-                for jid in st.getJobIdsForGroup(group):
-                    ji = st.getJobInfo(jid)
-                    for sid in (ji.stageIds if ji else ()):
-                        si = st.getStageInfo(sid)
-                        if si:
-                            total += si.numTasks
-                return total
-            except Exception:
-                return -1
-
-        timings: dict[str, float] = {}
-        tasks: dict[str, int] = {}
-        persist_bearing: list[str] = []
-        for name in HEADLINE:
-            gid = ""
-            for rep in range(n_reps):
-                gid = f"bench:{name}:{rep}"
-                spark.sparkContext.setJobGroup(gid, name)
-                t0 = time.perf_counter()
-                specs[name].fn(spark, data_dir).count()
-                dt = round(time.perf_counter() - t0, 3)
-                if name not in timings or dt < timings[name]:
-                    timings[name] = dt
-            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
-            tasks[name] = _task_count(gid)  # the last (steady-state) rep
-            # a non-empty tracked-cache registry after the reps means this
-            # query's steady-state min reused rep-1 persists — exactly the
-            # set the fully-released nocache arm must cover (r14 verdict #4)
-            if live_count() > 0:
-                persist_bearing.append(name)
-            release_caches()
-            spark.catalog.clearCache()
-        return timings, tasks, persist_bearing
-
-    def nocache_arm(data_dir: str, names) -> dict[str, float]:
-        """Honesty arm for the persist-bearing headline queries: min-of-n
-        with tracked caches released between EVERY rep, so each timed
-        execution recomputes all operator-internal intermediates from the
-        parquet inputs (warm JVM/codegen only).  This is the number a
-        single fresh execution pays; the headline `queries` number is the
-        steady-state one (operator caches warm), per the long-standing
-        BASELINE.md convention.
-
-        Round-15 (r14 verdict #4): `names` is DETECTED by run_set — every
-        headline query whose execution left tracked persists registered —
-        instead of the hand-kept 2-query list, so a future operator that
-        gains a persist is covered automatically, and the stdout line
-        carries `nocache_total` (persist-bearing queries at their fully-
-        released min, all others at their steady-state min) beside the
-        steady-state `value`."""
-        from hiero_spark.functions._cachetrack import release_caches
-
-        out: dict[str, float] = {}
-        for name in names:
-            for _ in range(n_reps):
-                release_caches()
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                specs[name].fn(spark, data_dir).count()
-                dt = round(time.perf_counter() - t0, 3)
-                if name not in out or dt < out[name]:
-                    out[name] = dt
-            release_caches()
-            spark.catalog.clearCache()
-        return out
-
-    def ann_payoff(data_dir: str) -> dict[str, float]:
-        """Round-3 item 8: quantify the IVF payoff. Build the index once
-        (k-means quantizer + cell-partitioned parquet), then time the
-        partition-pruned probe vs the full-scan exact top-k, min-of-n each.
-        The ratio is the 100 TB argument in a number: the probe reads
-        n_probe/n_cells of the corpus."""
-        from hiero_spark.functions.similarity import (
-            brute_force_topk, ivf_topk_bucketed, kmeans_fit, save_ivf,
-        )
-
-        emb = spark.read.parquet(f"{data_dir}/embeddings.parquet")
-        # Deterministic probe (round-5 ADVICE): limit(1) has no defined row
-        # order, so pin the query to the lowest vec_id for reproducible
-        # rows_scanned and timings across runs and Spark versions.
-        qv = [
-            float(x)
-            for x in emb.orderBy("vec_id").limit(1).collect()[0]["embedding"]
-        ]
-        n_cells, n_probe, k = 16, 2, 10
-        centroids = kmeans_fit(emb, n_cells, max_iter=5)
-        idx_path = f"/tmp/hiero_spark_bench_ivf/sf{sf}"
-        save_ivf(emb, centroids, idx_path)
-
-        def time_min(mk) -> float:
-            mk().count()  # warm
-            best = None
-            for _ in range(n_reps):
-                t0 = time.perf_counter()
-                mk().count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None or dt < best else best
-            return round(best, 3)
-
-        # Rows the pruned probe actually reads vs the full corpus: the
-        # wall-clock delta at sf scale is overhead-dominated (two parquet
-        # directories vs one small file), so the scan fraction is the
-        # number that extrapolates to 100 TB.
-        from pyspark.sql import functions as F
-
-        rows_total = emb.count()
-        probe_cells = sorted(
-            range(n_cells),
-            key=lambda i: sum((a - b) ** 2 for a, b in zip(qv, centroids[i])),
-        )[:n_probe]
-        rows_scanned = (
-            spark.read.parquet(idx_path)
-            .filter(F.col("_cell").isin(probe_cells))
-            .count()
-        )
-        return {
-            "brute_force_sec": time_min(lambda: brute_force_topk(emb, qv, k)),
-            "ivf_bucketed_sec": time_min(
-                lambda: ivf_topk_bucketed(spark, idx_path, qv, centroids, k, n_probe)
-            ),
-            "n_cells": n_cells,
-            "n_probe": n_probe,
-            "k": k,
-            "rows_total": rows_total,
-            "rows_scanned": rows_scanned,
-            "crossover": ann_crossover(),
-        }
-
-    def ann_crossover() -> dict[str, float]:
-        """Round-5 verdict item 3: at 2,000 vectors IVF loses to brute force
-        (fixed probe overhead > scan saved). Measure both on a corpus big
-        enough for the scan term to dominate — 1M x 64 synthetic clustered
-        vectors (256 MB) — so the crossover is evidence, not extrapolation.
-        Two findings got IVF past brute force here, both scale lessons:
-        (a) save_ivf must shuffle by (cell, salt) or every input task
-        writes a sliver into every cell dir (file-count overhead ate the
-        scan savings at 200k); (b) one file per cell caps probe-read
-        parallelism at n_probe tasks — a dead heat at 1M with 32 idle
-        cores — so cells are split into files_per_cell=8 files. The index
-        build (k-means + partitioned write) is untimed: paid once at
-        ingest, probes are the recurring cost. recall_at_k vs the exact
-        scan keeps the speed claim honest."""
-        from hiero_spark.functions.similarity import (
-            brute_force_topk, ivf_topk_bucketed, kmeans_fit, save_ivf,
-        )
-        from hiero_spark.sources.readers import synthetic_embeddings
-        from pyspark.sql import functions as F
-
-        n, dim, n_cells, n_probe, k = 1_000_000, 64, 32, 2, 10
-        corpus_path = "/tmp/hiero_spark_bench_ivf/crossover_corpus"
-        idx_path = "/tmp/hiero_spark_bench_ivf/crossover_idx"
-        synthetic_embeddings(spark, n, dim, n_clusters=n_cells).write.mode(
-            "overwrite"
-        ).parquet(corpus_path)
-        emb = spark.read.parquet(corpus_path)
-        qv = [
-            float(x)
-            for x in emb.orderBy("vec_id").limit(1).collect()[0]["embedding"]
-        ]
-        # Train the quantizer on a 1% sample: Lloyd's finds the same
-        # cluster structure from 10k vectors at 1% of the scan cost.
-        centroids = kmeans_fit(emb.sample(0.01, seed=7), n_cells, max_iter=2)
-        save_ivf(emb, centroids, idx_path, files_per_cell=8)
-
-        def time_min(mk) -> float:
-            mk().count()
-            best = None
-            for _ in range(n_reps):
-                t0 = time.perf_counter()
-                mk().count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None or dt < best else best
-            return round(best, 3)
-
-        probe_cells = sorted(
-            range(n_cells),
-            key=lambda i: sum((a - b) ** 2 for a, b in zip(qv, centroids[i])),
-        )[:n_probe]
-        rows_scanned = (
-            spark.read.parquet(idx_path)
-            .filter(F.col("_cell").isin(probe_cells))
-            .count()
-        )
-        exact = {r["neighbor_id"] for r in brute_force_topk(emb, qv, k).collect()}
-        approx = {
-            r["neighbor_id"]
-            for r in ivf_topk_bucketed(
-                spark, idx_path, qv, centroids, k, n_probe
-            ).collect()
-        }
-        return {
-            "n_vectors": n,
-            "dim": dim,
-            "n_cells": n_cells,
-            "n_probe": n_probe,
-            "k": k,
-            "files_per_cell": 8,
-            "brute_force_sec": time_min(lambda: brute_force_topk(emb, qv, k)),
-            "ivf_bucketed_sec": time_min(
-                lambda: ivf_topk_bucketed(spark, idx_path, qv, centroids, k, n_probe)
-            ),
-            "rows_scanned": rows_scanned,
-            "recall_at_k": round(len(exact & approx) / k, 3),
-        }
-
-    def decontam_payoff(data_dir: str) -> dict[str, float]:
-        """Round-6 addition: quantify the Bloom decontamination payoff.
-        Same split, same grams; the exact path distincts + semi-joins the
-        train shingle hashes, the Bloom path folds them into a broadcast
-        bitmap (shuffle bounded by the bitmap, probe join-free).  Flag
-        counts are reported so the speed number can't hide a recall hole
-        (bloom >= exact by construction)."""
-        from pyspark.sql import functions as F
-
-        from hiero_spark.functions.bloom import contaminated_docs_bloom
-        from hiero_spark.functions.pipeline import (
-            assign_split, contaminated_docs_hashed,
-        )
-
-        docs = spark.read.parquet(f"{data_dir}/documents.parquet")
-        docs = assign_split(docs, "doc_id")
-        ev = docs.filter(F.col("split") == "test")
-        tr = docs.filter(F.col("split") == "train")
-
-        def time_min(mk) -> float:
-            mk().count()
-            best = None
-            for _ in range(n_reps):
-                t0 = time.perf_counter()
-                mk().count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None or dt < best else best
-            return round(best, 3)
-
-        from hiero_spark.plans import shuffle_bytes_written
-
-        exact_fn = lambda: contaminated_docs_hashed(ev, tr, "text", "doc_id", k=3)
-        bloom_fn = lambda: contaminated_docs_bloom(ev, tr, "text", "doc_id", k=3)
-        # Wall-clock at local[32] understates the Bloom win (shuffles are
-        # memory-speed here; on a cluster they are the network).  The
-        # scale-predictive number is shuffle bytes: the exact path
-        # shuffles every distinct train gram, the Bloom probe's shuffle
-        # is bounded by the bitmap words + the final doc-id distinct.
-        ex_df = exact_fn(); ex_df.count()
-        bl_df = bloom_fn(); bl_df.count()
-        return {
-            "exact_semijoin_sec": time_min(exact_fn),
-            "bloom_sec": time_min(bloom_fn),
-            "n_exact": ex_df.count(),
-            "n_bloom": bl_df.count(),
-            "exact_shuffle_bytes": shuffle_bytes_written(ex_df),
-            "bloom_probe_shuffle_bytes": shuffle_bytes_written(bl_df),
-        }
-
-    def pyds_payoff(data_dir: str) -> dict[str, float]:
-        """Round-7 (r6 verdict item 6): price the one deliberately-Python
-        scan path in the repo. The S13 custom DataSource parses rows in a
-        Python loop (sources/pyds.py:read) — it buys filter pushdown into
-        the parse and a streaming contract for a custom format, but every
-        row crosses the regex in the interpreter. The JVM grok reader
-        (sources/readers.py:read_logs) does the same parse as codegen'd
-        regexp_extract. Same files, same pattern, full-scan count, min-of-n
-        each; rows/sec makes the gap transferable across machines."""
-        from pyspark.sql import functions as F
-
-        from hiero_spark.sources import pyds
-        from hiero_spark.sources.readers import read_logs
-
-        li = spark.read.parquet(f"{data_dir}/lineitem.parquet")
-        path = "/tmp/hiero_spark_bench_pyds/logs"
-        lines = li.select(
-            F.concat_ws(
-                " ",
-                F.col("l_orderkey").cast("string"),
-                F.when(F.col("l_linenumber") % 2 == 0, "INFO").otherwise("WARN"),
-                F.concat(F.lit("["), F.col("l_returnflag"), F.lit("]")),
-                F.concat(
-                    F.lit("shipped qty "), F.col("l_quantity").cast("string")
-                ),
-            ).alias("value")
-        )
-        lines.repartition(8).write.mode("overwrite").text(path)
-        n_rows = li.count()
-        pyds.register(spark)
-
-        def time_min(mk) -> float:
-            mk().count()
-            best = None
-            for _ in range(n_reps):
-                t0 = time.perf_counter()
-                mk().count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None or dt < best else best
-            return round(best, 3)
-
-        jvm_sec = time_min(lambda: read_logs(spark, path))
-        py_sec = time_min(
-            lambda: spark.read.format("hiero_logs")
-            .option("path", f"{path}/part-*.txt")
-            .load()
-        )
-        return {
-            "n_rows": n_rows,
-            "jvm_grok_sec": jvm_sec,
-            "python_ds_sec": py_sec,
-            "jvm_rows_per_sec": round(n_rows / jvm_sec) if jvm_sec else None,
-            "python_rows_per_sec": round(n_rows / py_sec) if py_sec else None,
-        }
-
-    def text_index_payoff(data_dir: str) -> dict[str, float]:
-        """Round-7: price the inverted-index BM25 probe against the full
-        scan. Local wall-clock at sf0.1 is overhead-dominated (stats
-        read + bucket-hash job ~ the whole corpus scan it avoids — the
-        Bloom-decontam pattern), so the scale-predictive number is the
-        scanned POSTINGS fraction: the probe reads |q| of n_buckets
-        directories; the full scan tokenizes every document every
-        query."""
-        import os
-
-        from pyspark.sql import functions as F
-
-        from hiero_spark.functions.bm25 import (
-            bm25_topk, bm25_topk_indexed, save_text_index,
-        )
-
-        docs = spark.read.parquet(f"{data_dir}/documents.parquet")
-        path = f"/tmp/hiero_spark_bench_tix/sf{sf}"
-        if not os.path.exists(f"{path}/stats/_SUCCESS"):
-            save_text_index(docs, path)
-        terms = ["spark", "join", "window", "stream"]
-
-        def time_min(mk) -> float:
-            mk().count()
-            best = None
-            for _ in range(n_reps):
-                t0 = time.perf_counter()
-                mk().count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None or dt < best else best
-            return round(best, 3)
-
-        post = spark.read.parquet(f"{path}/postings")
-        total_rows = post.count()
-        buckets = {
-            r["b"]
-            for r in spark.createDataFrame([(t,) for t in terms], "tok string")
-            .select(F.pmod(F.xxhash64("tok"), F.lit(64)).alias("b"))
-            .collect()
-        }
-        scanned = post.filter(F.col("_bucket").isin(sorted(buckets))).count()
-        return {
-            "full_scan_sec": time_min(lambda: bm25_topk(docs, terms, k=10)),
-            "index_probe_sec": time_min(
-                lambda: bm25_topk_indexed(spark, path, terms, k=10)
-            ),
-            "postings_rows_total": total_rows,
-            "postings_rows_scanned": scanned,
-            "buckets_read": len(buckets),
-            "n_buckets": 64,
-            "crossover": text_index_crossover(),
-        }
-
-    def text_index_crossover() -> dict[str, float]:
-        """Round-7 verdict item 3 (the ann_crossover precedent): at sf0.1's
-        116k postings the BM25 probe LOSES to the full scan — fixed
-        overhead (stats read + bucket-hash job + pruned read) exceeds the
-        scan it saves. Measure both on a corpus where the scan term
-        dominates: 1M synthetic docs x 30 words (30M tokens to tokenize
-        and explode per full-scan query vs ~6% of postings rows for a
-        4-term probe). The index build is untimed — paid once at ingest,
-        probes are the recurring cost (save_ivf contract). Ranking
-        equality probe==scan is pinned exactly, keeping the speed claim
-        honest (recall analog of ann_crossover's recall_at_k)."""
-        import os
-
-        from pyspark.sql import functions as F
-
-        from hiero_spark.functions.bm25 import (
-            bm25_topk, bm25_topk_indexed, save_text_index,
-        )
-        from hiero_spark.sources.readers import synthetic_documents
-
-        n, doc_len, vocab, n_buckets = 1_000_000, 30, 30_000, 64
-        corpus_path = "/tmp/hiero_spark_bench_tix/crossover_corpus"
-        idx_path = "/tmp/hiero_spark_bench_tix/crossover_idx"
-        if not os.path.exists(f"{corpus_path}/_SUCCESS"):
-            synthetic_documents(spark, n, doc_len, vocab).write.mode(
-                "overwrite"
-            ).parquet(corpus_path)
-        docs = spark.read.parquet(corpus_path)
-        if not os.path.exists(f"{idx_path}/stats/_SUCCESS"):
-            save_text_index(docs, idx_path, n_buckets=n_buckets)
-        terms = ["w17", "w93", "w1234", "w2999"]
-
-        def time_min(mk) -> float:
-            mk().count()
-            best = None
-            for _ in range(n_reps):
-                t0 = time.perf_counter()
-                mk().count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None or dt < best else best
-            return round(best, 3)
-
-        post = spark.read.parquet(f"{idx_path}/postings")
-        total_rows = post.count()
-        buckets = {
-            r["b"]
-            for r in spark.createDataFrame([(t,) for t in terms], "tok string")
-            .select(F.pmod(F.xxhash64("tok"), F.lit(n_buckets)).alias("b"))
-            .collect()
-        }
-        scanned = post.filter(F.col("_bucket").isin(sorted(buckets))).count()
-        scan_rows = sorted(
-            tuple(r) for r in bm25_topk(docs, terms, k=10).collect()
-        )
-        probe_rows = sorted(
-            tuple(r)
-            for r in bm25_topk_indexed(
-                spark, idx_path, terms, k=10, n_buckets=n_buckets
-            ).collect()
-        )
-        return {
-            "n_docs": n,
-            "doc_len": doc_len,
-            "vocab": vocab,
-            "n_buckets": n_buckets,
-            "full_scan_sec": time_min(lambda: bm25_topk(docs, terms, k=10)),
-            "index_probe_sec": time_min(
-                lambda: bm25_topk_indexed(
-                    spark, idx_path, terms, k=10, n_buckets=n_buckets
-                )
-            ),
-            "postings_rows_total": total_rows,
-            "postings_rows_scanned": scanned,
-            "ranking_identical": scan_rows == probe_rows,
-        }
-
-    def skew_stress() -> dict:
-        """Round-7 verdict item 4: the dedup caps under adversarial skew —
-        a hot boilerplate cluster (the real-crawl failure mode), measured
-        instead of assumed.  Three ops, three scale claims:
-
-        * minhash_near_dups (hot_mode='star') on 1M docs with a 50k-doc
-          boilerplate cluster: every LSH band bucket for the cluster goes
-          over max_bucket; star mode emits (bucket_min, doc) pairs so
-          candidates stay LINEAR in cluster size and the cluster remains
-          linked through its first doc (drop mode — the pinned default —
-          would lose it).  overcap_fraction is the cap hit-rate.
-        * jaccard_join (hashed arm) on 200k docs with a 1k hot cluster:
-          PPJoin prefix+length filters keep candidates bounded; output IS
-          the hot clique (499,500 pairs) — quadratic in OUTPUT by
-          contract (setsim.py docstring), not in shuffle.
-        * dedup_lines_keep_first on the 1M corpus at word granularity:
-          30M units where each boilerplate word has ~1.45M copies — the
-          hot-key groupBy-min survives because partial aggregation
-          combines map-side; shuffle_bytes records the proof (1 row per
-          key per input partition, not per copy).
-        Corpora are hash-deterministic and cached on disk; builds are
-        untimed (ingest-time cost)."""
-        import os
-
-        from pyspark.sql import functions as F
-
-        from hiero_spark import plans as P
-        from hiero_spark.functions import dedup as dd
-        from hiero_spark.functions.paragraphs import dedup_lines_keep_first
-        from hiero_spark.functions.setsim import jaccard_join
-        from hiero_spark.sources.readers import synthetic_boilerplate_corpus
-
-        n_big, hot_big = 1_000_000, 50_000
-        n_jac, hot_jac = 200_000, 1_000
-        big_path = "/tmp/hiero_spark_bench_skew/corpus_1m"
-        jac_path = "/tmp/hiero_spark_bench_skew/corpus_200k"
-        if not os.path.exists(f"{big_path}/_SUCCESS"):
-            synthetic_boilerplate_corpus(spark, n_big, hot_big).write.mode(
-                "overwrite"
-            ).parquet(big_path)
-        if not os.path.exists(f"{jac_path}/_SUCCESS"):
-            synthetic_boilerplate_corpus(spark, n_jac, hot_jac).write.mode(
-                "overwrite"
-            ).parquet(jac_path)
-        big = spark.read.parquet(big_path)
-        jac = spark.read.parquet(jac_path)
-
-        # cap hit-rate: fraction of (doc, band) bucket rows in over-cap
-        # buckets — one aggregation over the bucket relation, no pairs
-        sh = big.select(
-            F.col("doc_id").alias("doc"),
-            dd.shingle_hash_array(F.col("text"), 3).alias("sh"),
-        )
-        bb = dd.band_buckets(dd.minhash_signatures(sh))
-        sizes = bb.groupBy("band", "bkt").agg(F.count(F.lit(1)).alias("n"))
-        agg = sizes.agg(
-            F.sum("n").alias("rows"),
-            F.sum(F.when(F.col("n") > 50, F.col("n"))).alias("over"),
-        ).collect()[0]
-
-        t0 = time.perf_counter()
-        star_pairs = dd.minhash_near_dups(
-            big, "text", "doc_id", hot_mode="star"
-        ).count()
-        star_sec = round(time.perf_counter() - t0, 1)
-
-        t0 = time.perf_counter()
-        jac_pairs = jaccard_join(jac, threshold=0.8, k=3, hashed=True).count()
-        jac_sec = round(time.perf_counter() - t0, 1)
-
-        t0 = time.perf_counter()
-        kept = dedup_lines_keep_first(big, "text", "doc_id", sep=" ")
-        keep_shuffle = P.shuffle_bytes_written(kept.groupBy().count())
-        keep_sec = round(time.perf_counter() - t0, 1)
-        units = n_big * 30
-        # minhash_near_dups persists its shingle/pair frames (correct for
-        # the op: three consumers); at this corpus size the leaked cache
-        # is GBs of storage memory that would squeeze every later bench
-        # block into spills (measured: n4_lm_perplexity 0.9 s -> 7.4 s
-        # when timed after an uncleared skew run)
-        spark.catalog.clearCache()
-
-        return {
-            "corpus": {"n_docs": n_big, "hot_cluster": hot_big, "doc_len": 30},
-            "minhash_star": {
-                "wall_sec": star_sec,
-                "verified_pairs": star_pairs,
-                "bucket_rows_total": int(agg["rows"]),
-                "bucket_rows_overcap": int(agg["over"] or 0),
-                "overcap_fraction": round(
-                    float(agg["over"] or 0) / float(agg["rows"]), 4
-                ),
-            },
-            "jaccard_join_hashed": {
-                "n_docs": n_jac,
-                "hot_cluster": hot_jac,
-                "wall_sec": jac_sec,
-                "pairs": jac_pairs,
-                "hot_clique_pairs_expected": hot_jac * (hot_jac - 1) // 2,
-            },
-            "line_dedup_keep_first": {
-                "wall_sec": keep_sec,
-                "units": units,
-                "hot_key_copies": hot_big * 29,
-                "shuffle_bytes": keep_shuffle,
-            },
-        }
-
-    def containment_skew() -> dict:
-        """Round-8 verdict #3: skew-stress the containment join in the
-        real quote-detection regime — 1M docs where one 10-word snippet
-        has 5k VERBATIM standalone copies and is quoted in 100k pages.
-
-        The exposed bound (now fixed in setsim._containment_prepared): a
-        pure-boilerplate doc's prefix token is unavoidably hot, so before
-        the identical-set collapse the 5k copies generated copies x df =
-        ~525M candidate pairs.  Collapsed, candidates are per DISTINCT
-        set: ~100k (one per quoted page) + 1 duplicate-group row; the
-        expanded member-level output (524,995,000 ordered pairs) is
-        reported as arithmetic, not materialized — expand_identical=False
-        is the scale arm.  Both shingle arms measured; candidate counts
-        pin the bound, shuffle bytes pin the cost."""
-        import os
-
-        from pyspark.sql import functions as F
-
-        from hiero_spark import plans as P
-        from hiero_spark.functions.setsim import (
-            containment_candidates,
-            containment_join,
-        )
-        from hiero_spark.sources.readers import synthetic_containment_corpus
-
-        n, pages, quotes = 1_000_000, 100_000, 5_000
-        path = "/tmp/hiero_spark_bench_skew/containment_1m"
-        if not os.path.exists(f"{path}/_SUCCESS"):
-            synthetic_containment_corpus(spark, n, pages, quotes).write.mode(
-                "overwrite"
-            ).parquet(path)
-        docs = spark.read.parquet(path)
-
-        out: dict = {
-            "corpus": {
-                "n_docs": n,
-                "quoted_pages": pages,
-                "snippet_copies": quotes,
-                "doc_len": 30,
-                "snip_len": 10,
-            }
-        }
-        for arm, hashed in (("string", False), ("hashed", True)):
-            res = containment_join(
-                docs, threshold=0.9, k=3, hashed=hashed, expand_identical=False
-            )
-            t0 = time.perf_counter()
-            shuffle = P.shuffle_bytes_written(res.groupBy().count())
-            wall = round(time.perf_counter() - t0, 1)
-            groups = res.agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(
-                    F.when(
-                        F.col("id_a") == F.col("id_b"),
-                        F.col("count_a") * (F.col("count_a") - 1),
-                    ).otherwise(F.col("count_a") * F.col("count_b"))
-                ).alias("expanded"),
-            ).collect()[0]
-            cands = containment_candidates(
-                docs, threshold=0.9, k=3, hashed=hashed
-            ).count()
-            out[f"containment_{arm}"] = {
-                "wall_sec": wall,
-                "shuffle_bytes": shuffle,
-                "candidate_group_pairs": cands,
-                "result_group_rows": int(groups["rows"]),
-                "expanded_member_pairs": int(groups["expanded"]),
-                # each copy's hot prefix token joins every posting of the
-                # snippet's carriers: the other copies + all quoting pages
-                "uncollapsed_candidates_would_be": quotes * (pages + quotes - 1),
-            }
-        spark.catalog.clearCache()
-        return out
-
-    def jaccard_skew() -> dict:
-        """Round-9 verdict #2: skew-stress the Jaccard join in the
-        extreme-duplication regime — 1M docs where ONE document has 5k
-        VERBATIM copies.  PPJoin's length filter passes same-size pairs
-        verbatim, so before the identical-set collapse the hot group
-        generated g^2/2 = 12.5M candidate AND verify pairs for what is
-        one set-level relationship.  Collapsed, the group is a single
-        distinct set: candidate pairs track distinct-set structure only
-        (zero for this corpus — no cross-set near-dups), the intra-group
-        clique is emitted arithmetically, and expand_identical=False is
-        the scale arm that never materializes the 12.5M member rows.
-        Both shingle arms measured; candidate counts pin the bound."""
-        import os
-
-        from pyspark.sql import functions as F
-
-        from hiero_spark import plans as P
-        from hiero_spark.functions.setsim import (
-            jaccard_candidates,
-            jaccard_join,
-            release_caches,
-        )
-        from hiero_spark.sources.readers import synthetic_verbatim_corpus
-
-        n, copies = 1_000_000, 5_000
-        path = "/tmp/hiero_spark_bench_skew/verbatim_1m"
-        if not os.path.exists(f"{path}/_SUCCESS"):
-            synthetic_verbatim_corpus(spark, n, copies).write.mode(
-                "overwrite"
-            ).parquet(path)
-        docs = spark.read.parquet(path)
-
-        out: dict = {
-            "corpus": {"n_docs": n, "verbatim_copies": copies, "doc_len": 30}
-        }
-        for arm, hashed in (("string", False), ("hashed", True)):
-            res = jaccard_join(
-                docs, threshold=0.8, k=3, hashed=hashed,
-                expand_identical=False,
-            )
-            t0 = time.perf_counter()
-            shuffle = P.shuffle_bytes_written(res.groupBy().count())
-            wall = round(time.perf_counter() - t0, 1)
-            groups = res.agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(
-                    F.when(
-                        F.col("id_a") == F.col("id_b"),
-                        F.col("count_a") * (F.col("count_a") - 1) / 2,
-                    ).otherwise(F.col("count_a") * F.col("count_b"))
-                ).alias("expanded"),
-            ).collect()[0]
-            cands = jaccard_candidates(
-                docs, threshold=0.8, k=3, hashed=hashed
-            ).count()
-            out[f"jaccard_{arm}"] = {
-                "wall_sec": wall,
-                "shuffle_bytes": shuffle,
-                "candidate_group_pairs": cands,
-                "result_group_rows": int(groups["rows"]),
-                "expanded_member_pairs": int(groups["expanded"] or 0),
-                "uncollapsed_candidates_would_be": copies * (copies - 1) // 2,
-            }
-        release_caches()
-        spark.catalog.clearCache()
-        return out
-
-    def er_skew() -> dict:
-        """Round-9: skew-stress the entity-resolution shape under heavy
-        duplication — the regime record linkage actually faces (one
-        customer record replicated across g source systems).  200k
-        records where ONE record has 5k verbatim copies: before the
-        identical-record collapse the in-block pairwise stage generated
-        g^2/2 = 12.5M levenshtein edges for that single entity; collapsed,
-        the hot entity contributes ZERO pairwise edges (its copies are one
-        representative) and the edge count tracks distinct-record block
-        structure only.  Wall + edge count measured; the resolved entity
-        must still report all 5k members."""
-        from pyspark.sql import functions as F
-
-        from hiero_spark.functions.graph import connected_components
-
-        n, hot = 200_000, 5_000
-        base = spark.range(n).select(
-            F.col("id").alias("rec_id"),
-            F.when(F.col("id") < hot, F.lit("Customer#HOTDUP"))
-            .otherwise(F.concat(F.lit("Customer#"), F.col("id")))
-            .alias("name"),
-            F.when(F.col("id") < hot, F.lit(7))
-            .otherwise(F.pmod(F.col("id"), F.lit(25)))
-            .alias("nat"),
-            F.when(F.col("id") < hot, F.lit(123456))
-            .otherwise(F.col("id") * 100)
-            .alias("cents"),
-        )
-        t0 = time.perf_counter()
-        groups = (
-            base.groupBy("name", "nat", "cents")
-            .agg(F.min("rec_id").alias("rec_id"),
-                 F.count(F.lit(1)).alias("n_ids"))
-            .localCheckpoint()
-        )
-        a, b = groups.alias("a"), groups.alias("b")
-        edges = (
-            a.join(
-                b,
-                (F.col("a.nat") == F.col("b.nat"))
-                & (F.col("a.cents") == F.col("b.cents"))
-                & (F.col("a.rec_id") < F.col("b.rec_id")),
-            )
-            .filter(F.levenshtein(F.col("a.name"), F.col("b.name")) <= 1)
-            .select(F.col("a.rec_id").alias("src"), F.col("b.rec_id").alias("dst"))
-        )
-        n_edges = edges.count()
-        comp = connected_components(edges)
-        ent = (
-            groups.join(comp, groups["rec_id"] == comp["node"], "left")
-            .select(
-                F.coalesce(F.col("component"), F.col("rec_id")).alias("c"),
-                "n_ids",
-            )
-            .filter(F.col("n_ids") >= 2)  # report the duplicate entity
-            .groupBy("c")
-            .agg(F.sum("n_ids").alias("members"))
-            .collect()
-        )
-        wall = round(time.perf_counter() - t0, 1)
-        hot_members = max((int(r["members"]) for r in ent), default=0)
-        return {
-            "n_records": n,
-            "hot_copies": hot,
-            "wall_sec": wall,
-            "pairwise_edges": n_edges,
-            "uncollapsed_edges_would_be": hot * (hot - 1) // 2,
-            "hot_entity_members": hot_members,
-        }
-
-    def grouped_topk_skew() -> dict:
-        """Round-10 verdict item 5, re-measured honestly in round 11:
-        the salted two-phase group ranking (operators/grouptopk.py) vs
-        the single whole-group window, at three shapes.
-
-        What the r11 measurements actually show on this 128 GiB
-        local[32] box: at the small shape the single window wins by the
-        recorded premium; at the wide shape (32M x 2, payload carried
-        through the sort) the two arms are within noise of each other —
-        the sign flipped across r11 runs (3.91 vs 5.39 one run, 3.16 vs
-        2.89 the committed one) because the full-data shuffle both arms
-        pay dominates the serialized sort at RAM scale.  Under an
-        artificially constrained 1 GiB session (16M x 5 + payload) the
-        single window SPILLS GRACEFULLY and finishes ~2x ahead of the
-        two-phase arm — refuting an earlier-round OOM observation this
-        block used to cite; row_number's streaming frame makes the
-        serialized sort spill-friendly.  The measured local cost of the
-        two-phase reroute is therefore bounded by the premium_shape
-        number and vanishes into noise by the wide shape.
-
-        Why the two-phase form is still the right default for the
-        engine's low-cardinality rankings: the argument is the
-        DETERMINISTIC per-task bound, not local wall time —
-        single-window concentrates n/n_groups rows in one task
-        (single_max_task_rows; at 100 TB / 5 strata that is ~10^11 rows
-        and hours of serialized sort-spill on 1 of 1000 executors,
-        a shape no local box can exhibit), the two-phase form caps any
-        task at ~n/(n_groups*n_salt) phase-1 and k*n_salt phase-2
-        regardless of corpus size.  The premium buys that bound; this
-        block prices it so the trade is a number, not a slogan.
-
-        Both arms must agree on the kept row set (asserted in
-        tests/test_plans.py; count parity recorded here); wall seconds
-        are min-of-2 per arm (single-shot flipped sign on noise in
-        r10).  The wide shape carries a 32-char payload through the
-        ranking (select-* consumer) so Catalyst's column pruning can't
-        slim the sorted rows — at the bare shape the window sorts
-        (g, v, id) only, which understates single-window's buffering."""
-        from pyspark.sql import Window as W, functions as F
-
-        from hiero_spark.operators.grouptopk import grouped_topk
-
-        n_salt = 32  # grouped_topk default
-
-        def shape(n, n_groups, k, payload: bool) -> dict:
-            cols = [
-                F.col("id"),
-                F.pmod(F.col("id"), F.lit(n_groups)).alias("g"),
-                F.pmod(F.xxhash64(F.col("id")), F.lit(10_000_000)).alias(
-                    "v"
-                ),
-            ]
-            if payload:
-                cols.append(F.md5(F.col("id").cast("string")).alias("pl"))
-            # materialize once: time the ranking, not range()
-            base = spark.range(n).select(*cols).localCheckpoint()
-            order = [F.col("v").desc(), F.col("id").asc()]
-            w = W.partitionBy("g").orderBy(*order)
-
-            def consume(df):
-                # force the payload through the sort when present
-                if payload:
-                    return df.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(F.length("pl")).alias("b"),
-                    ).collect()[0]["n"]
-                return df.count()
-
-            def run_single():
-                return consume(
-                    base.withColumn("rank", F.row_number().over(w)).filter(
-                        F.col("rank") <= k
-                    )
-                )
-
-            def run_two():
-                return consume(grouped_topk(base, "g", order, "id", k))
-
-            def timed(fn):
-                best, rows = None, None
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    rows = fn()
-                    dt = time.perf_counter() - t0
-                    best = dt if best is None else min(best, dt)
-                return round(best, 2), rows
-
-            single_sec, n_single = timed(run_single)
-            two_sec, n_two = timed(run_two)
-            base.unpersist()
-            return {
-                "n_rows": n,
-                "n_groups": n_groups,
-                "k": k,
-                "payload_col": payload,
-                "single_window_sec": single_sec,
-                "two_phase_sec": two_sec,
-                "two_phase_premium_sec": round(two_sec - single_sec, 2),
-                # per-task buffering bounds — the scale argument
-                "single_max_task_rows": n // n_groups,
-                "two_phase_max_task_rows": max(
-                    -(-n // (n_groups * n_salt)), k * n_salt
-                ),
-                "rows_single": n_single,
-                "rows_two_phase": n_two,
-            }
-
-        out = {
-            "premium_shape": shape(4_000_000, 5, 100, payload=False),
-            "wide_shape": shape(32_000_000, 2, 100, payload=True),
-        }
-
-        # constrained-memory experiment: both arms at 16M x 5 + payload
-        # under a fresh 1 GiB local[8] JVM (subprocess — driver memory
-        # is fixed at JVM launch).  Records whatever happens: in r11
-        # both complete (the single window spills and still wins),
-        # falsifying the earlier OOM citation — kept as a standing
-        # measurement so the claim tracks reality round over round.
-        import json as _json
-        import subprocess as _sp
-        import sys as _sys
-
-        worker = r"""
-import json, sys, time
-sys.path.insert(0, __REPO_ROOT__)
-from pyspark.sql import SparkSession, Window as W, functions as F
-spark = (SparkSession.builder.master("local[8]")
-         .config("spark.driver.memory", "1g")
-         .config("spark.sql.shuffle.partitions", "32")
-         .config("spark.ui.enabled", "false").getOrCreate())
-from hiero_spark.operators.grouptopk import grouped_topk
-n, n_groups, k = 16_000_000, 5, 100
-base = spark.range(n).select(
-    F.col("id"), F.pmod(F.col("id"), F.lit(n_groups)).alias("g"),
-    F.pmod(F.xxhash64(F.col("id")), F.lit(10_000_000)).alias("v"),
-    F.md5(F.col("id").cast("string")).alias("pl"))
-order = [F.col("v").desc(), F.col("id").asc()]
-out = {}
-for name, fn in [
-    ("two_phase", lambda: grouped_topk(base, "g", order, "id", k)
-        .agg(F.sum(F.length("pl"))).collect()[0][0]),
-    ("single_window", lambda: base.withColumn(
-        "rank", F.row_number().over(W.partitionBy("g").orderBy(*order)))
-        .filter(F.col("rank") <= k)
-        .agg(F.sum(F.length("pl"))).collect()[0][0]),
-]:
-    t0 = time.perf_counter()
-    try:
-        fn()
-        out[name] = {"ok": True, "sec": round(time.perf_counter() - t0, 2)}
-    except Exception as exc:
-        out[name] = {"ok": False,
-                     "sec": round(time.perf_counter() - t0, 2),
-                     "error": type(exc).__name__ + ": " + str(exc)[:160]}
-print("GTK1G " + json.dumps(out))
-"""
-        # repo root interpolated (round-11 ADVICE: a hardcoded /root/repo
-        # would silently import the wrong tree — or nothing — if the repo
-        # is checked out elsewhere)
-        worker = worker.replace(
-            "__REPO_ROOT__", repr(os.path.dirname(os.path.abspath(__file__)))
-        )
+        sc.setJobGroup(group, name)
         try:
-            proc = _sp.run(
-                [_sys.executable, "-c", worker],
-                capture_output=True, text=True, timeout=420,
-            )
-            line = next(
-                (ln for ln in proc.stdout.splitlines()
-                 if ln.startswith("GTK1G ")), None,
-            )
-            out["constrained_1g_16m_x5"] = (
-                _json.loads(line[len("GTK1G "):]) if line
-                else {"error": "no result line",
-                      "stderr_tail": proc.stderr[-300:]}
-            )
-        except Exception as exc:  # never sink the whole bench on this
-            out["constrained_1g_16m_x5"] = {
-                "error": type(exc).__name__ + ": " + str(exc)[:160]
-            }
-        return out
-
-    def codec_throughput() -> dict:
-        """Round-9 verdict #3: quantify the vendored pure-Python codec
-        path vs PIL, so the 'a real cluster installs PIL and the C codec
-        slots in behind the same mapInPandas signature' claim
-        (functions/jpeg.py scope note) carries a measured number.
-
-        1536 payloads (16 distinct baseline-JPEG + 16 distinct RGB-PNG
-        96x96 images, hash-deterministic pixels, replicated x48 — x16
-        through round 10; raised so the ~0.3 s fixed Spark job overhead
-        stops dominating the fast arm, which compressed the r11
-        vectorized speedup to 2.6x at 512 payloads; rates stay
-        round-comparable) decoded to the 8-dim feature vector through
-        the same mapInPandas shape extract_features uses.  The vendored
-        arm forces the pure-Python ladder (_decode_png / decode_jpeg);
-        the vectorized arm is codec_np's numpy block path (round-10
-        verdict #4 — bit-identical output, tests/test_codec_np.py); the
-        pil arm runs decode_image's PIL-first branch and is reported
-        only when PIL imports (this container ships without it — the
-        block then records pil_available=false and the vendored numbers
-        stand alone).  Payload generation is untimed (encoder cost is
-        ingest-side)."""
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        from hiero_spark.functions import multimodal as mm
-        from hiero_spark.functions.jpeg import encode_jpeg
-
-        side = 96
-        n_distinct, reps = 16, 48
-
-        def pixels(seed: int):
-            # hash-deterministic RGB rows: smooth gradients + per-image
-            # phase so JPEG has realistic low-frequency energy
-            return [
-                [
-                    (
-                        (x * 2 + seed * 7) % 256,
-                        (y * 2 + seed * 13) % 256,
-                        (x + y + seed * 29) % 256,
-                    )
-                    for x in range(side)
-                ]
-                for y in range(side)
-            ]
-
-        payloads = []
-        for i in range(n_distinct):
-            payloads.append(("jpeg", encode_jpeg(pixels(i), quality=75)))
-            payloads.append(("png", mm._encode_png(pixels(i + 100))))
-        rows = [
-            (i * len(payloads) + j, kind, payload)
-            for i in range(reps)
-            for j, (kind, payload) in enumerate(payloads)
-        ]
-        media = spark.createDataFrame(
-            rows, "id long, kind string, payload binary"
-        ).repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32"))).persist()
-        n_payloads = media.count()
-        total_mb = (
-            media.agg(F.sum(F.octet_length("payload")).alias("b"))
-            .collect()[0]["b"] / 1e6
-        )
-
-        def run_arm(decode_fn) -> float:
-            out_schema = "id long, f0 double"
-
-            def batches(it):
-                for pdf in it:
-                    feats = [decode_fn(p)[0] for p in pdf["payload"]]
-                    yield pd.DataFrame({"id": pdf["id"], "f0": feats})
-
-            def once() -> float:
-                t0 = time.perf_counter()
-                media.mapInPandas(batches, out_schema).groupBy().count().collect()
-                return time.perf_counter() - t0
-
-            once()  # warm (python worker fork, codegen)
-            return min(once(), once())
-
-        def vendored(payload):
-            from hiero_spark.functions.jpeg import decode_jpeg
-
-            decoded = (
-                mm._decode_bmp(payload)
-                or mm._decode_png(payload)
-                or decode_jpeg(payload)
-            )
-            return mm._bmp_features(decoded)
-
-        def vectorized(payload):
-            # round-10 verdict #4: the numpy block arm (codec_np.py) —
-            # same entropy decode, batched IDCT + whole-plane assembly;
-            # bit-identical output (tests/test_codec_np.py), and the arm
-            # decode_image actually serves in production
-            from hiero_spark.functions import codec_np
-
-            return codec_np.features_np(codec_np.decode_pixels_np(payload))
-
-        out: dict = {
-            "n_payloads": n_payloads,
-            "image_side_px": side,
-            "total_mb": round(total_mb, 2),
-        }
-        vend_sec = run_arm(vendored)
-        out["vendored"] = {
-            "wall_sec": round(vend_sec, 2),
-            "payloads_per_sec": round(n_payloads / vend_sec, 1),
-            "mb_per_sec": round(total_mb / vend_sec, 2),
-        }
-        vec_sec = run_arm(vectorized)
-        out["vendored_vectorized"] = {
-            "wall_sec": round(vec_sec, 2),
-            "payloads_per_sec": round(n_payloads / vec_sec, 1),
-            "mb_per_sec": round(total_mb / vec_sec, 2),
-        }
-        out["vectorized_over_scalar_speedup"] = round(vend_sec / vec_sec, 1)
-        try:
-            import PIL  # noqa: F401
-
-            pil_ok = True
-        except ImportError:
-            pil_ok = False
-        out["pil_available"] = pil_ok
-        if pil_ok:
-            pil_sec = run_arm(mm.decode_image)  # PIL-first branch
-            out["pil"] = {
-                "wall_sec": round(pil_sec, 2),
-                "payloads_per_sec": round(n_payloads / pil_sec, 1),
-                "mb_per_sec": round(total_mb / pil_sec, 2),
-            }
-            out["vendored_over_pil_slowdown"] = round(vend_sec / pil_sec, 1)
-        media.unpersist()
-
-        # --- audio arm (round 11): PCM16 WAV scalar vs numpy mixdown ---
-        # 16 distinct 1 s stereo 16 kHz clips x192 = 3072 payloads
-        # (~196 MB PCM).  The Spark-shape numbers carry the ~0.3 s fixed
-        # job overhead both arms pay (it floors the fast arm exactly as
-        # the image block documents at 512 payloads); the single-thread
-        # block is the overhead-free decode ratio measured driver-side
-        # on one clip.
-        import struct as _struct
-
-        def wav(seed: int) -> bytes:
-            n, ch = 16000, 2
-            frames = b"".join(
-                _struct.pack(
-                    "<hh",
-                    (i * (31 + seed) + seed * 911) % 32768 - 16384,
-                    (-i * (17 + seed) + seed * 577) % 32768 - 16384,
-                )
-                for i in range(n)
-            )
-            fmt = _struct.pack("<HHIIHH", 1, ch, 16000, 16000 * ch * 2,
-                               ch * 2, 16)
-            body = (b"WAVE" + b"fmt " + _struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + _struct.pack("<I", len(frames)) + frames)
-            return b"RIFF" + _struct.pack("<I", len(body)) + body
-
-        clips = [wav(i) for i in range(16)]
-        arows = [
-            (i * 16 + j, clip)
-            for i in range(192)
-            for j, clip in enumerate(clips)
-        ]
-        audio = spark.createDataFrame(
-            arows, "id long, payload binary"
-        ).repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32"))).persist()
-        n_audio = audio.count()
-        audio_mb = (
-            audio.agg(F.sum(F.octet_length("payload")).alias("b"))
-            .collect()[0]["b"] / 1e6
-        )
-
-        def run_audio_arm(decode_fn) -> float:
-            import pandas as pd
-
-            def batches(it):
-                for pdf in it:
-                    feats = [decode_fn(p)[3] for p in pdf["payload"]]  # RMS
-                    yield pd.DataFrame({"id": pdf["id"], "f0": feats})
-
-            def once() -> float:
-                t0 = time.perf_counter()
-                audio.mapInPandas(batches, "id long, f0 double").groupBy(
-                ).count().collect()
-                return time.perf_counter() - t0
-
-            once()
-            return min(once(), once())
-
-        def audio_scalar(p):
-            return mm._wav_features(*mm._decode_wav(p))
-
-        def audio_np(p):
-            from hiero_spark.functions import codec_np
-
-            return codec_np.wav_features_np(*codec_np.decode_wav_np(p))
-
-        a_scal = run_audio_arm(audio_scalar)
-        a_vec = run_audio_arm(audio_np)
-        # overhead-free single-thread ratio, driver-side on one clip
-        one = clips[0]
-
-        def st_rate(fn) -> float:
-            t0, n = time.perf_counter(), 0
-            while time.perf_counter() - t0 < 1.0:
-                fn(one)
-                n += 1
-            return n / (time.perf_counter() - t0)
-
-        st_s, st_v = st_rate(audio_scalar), st_rate(audio_np)
-        out["audio"] = {
-            "n_payloads": n_audio,
-            "clip": "1s stereo 16kHz PCM16",
-            "total_mb": round(audio_mb, 2),
-            "scalar": {
-                "wall_sec": round(a_scal, 2),
-                "payloads_per_sec": round(n_audio / a_scal, 1),
-                "mb_per_sec": round(audio_mb / a_scal, 2),
-            },
-            "vectorized": {
-                "wall_sec": round(a_vec, 2),
-                "payloads_per_sec": round(n_audio / a_vec, 1),
-                "mb_per_sec": round(audio_mb / a_vec, 2),
-            },
-            "spark_shape_speedup": round(a_scal / a_vec, 1),
-            "single_thread_speedup": round(st_v / st_s, 1),
-        }
-        audio.unpersist()
-        return out
-
-    def e2e_throughput() -> dict:
-        """End-to-end curation-core throughput at 1M docs — the headline
-        number a pipeline owner actually budgets with (docs/sec through
-        the REAL gate+dedup path, not per-op micro-times). Reuses the
-        cached skew corpus (hot boilerplate cluster included, so the
-        exact-dedup groupBy sees the adversarial key distribution).
-
-        The measured pipeline is the curation core in one lineage:
-        language-id -> quality gate -> Gopher gates (dup-line share,
-        top-2gram share, symbol ratio) -> exact-fingerprint dedup
-        keep-first -> corpus stats. ONE scan computes every gate flag
-        (all Catalyst expressions), ONE shuffle deduplicates (partial
-        aggregation combines the 50k-copy hot key map-side), and the
-        final stats aggregate is a second tiny shuffle. Warm min-of-2;
-        uncompressed_mb is summed text bytes so the MB/s figure is
-        layout-independent."""
-        import os
-
-        from pyspark.sql import functions as F
-
-        from hiero_spark.functions import text as tx
-
-        big_path = "/tmp/hiero_spark_bench_skew/corpus_1m"
-        if not os.path.exists(f"{big_path}/_SUCCESS"):
-            from hiero_spark.sources.readers import synthetic_boilerplate_corpus
-
-            synthetic_boilerplate_corpus(spark, 1_000_000, 50_000).write.mode(
-                "overwrite"
-            ).parquet(big_path)
-        big = spark.read.parquet(big_path)
-        n_docs = 1_000_000
-        text_bytes = big.agg(
-            F.sum(F.octet_length("text")).alias("b")
-        ).collect()[0]["b"]
-
-        def pipeline():
-            gated = (
-                tx.with_language_id(big, "text")
-                .withColumn("n_tok", tx.token_count(F.col("text")))
-                .withColumn("fp", tx.fingerprint(F.col("text")))
-                .filter(
-                    # the synthetic corpus has hash-token words, so its
-                    # honest lang-id is 'und'; the gate keeps en+und to
-                    # exercise the expression without zeroing the corpus
-                    F.col("pred_lang").isin("en", "und")
-                    & (tx.quality_score(F.col("text")) >= 0.5)
-                    & (tx.duplicate_line_fraction(F.col("text")) <= 0.99)
-                    & (tx.top_2gram_share(F.col("text")) <= 0.5)
-                    & (tx.symbol_word_ratio(F.col("text")) <= 0.10)
-                )
-            )
-            kept = gated.groupBy("fp").agg(
-                F.min("doc_id").alias("keep_id"),
-                F.first("n_tok").alias("n_tok"),
-            )
-            return kept.agg(
-                F.count(F.lit(1)).alias("kept_docs"),
-                F.sum("n_tok").alias("kept_tokens"),
-            )
-
-        kept_row = pipeline().collect()[0]  # warm (plan/codegen/cache)
-        best = None
-        for _ in range(2):
             t0 = time.perf_counter()
-            pipeline().collect()
-            dt = time.perf_counter() - t0
-            best = dt if best is None or dt < best else best
-        return {
-            "n_docs": n_docs,
-            "uncompressed_mb": round(text_bytes / 1e6, 1),
-            "kept_docs": int(kept_row["kept_docs"]),
-            "kept_tokens": int(kept_row["kept_tokens"]),
-            "wall_sec": round(best, 2),
-            "docs_per_sec": int(n_docs / best),
-            "mb_per_sec": round(text_bytes / 1e6 / best, 1),
-        }
+            df = specs[name].fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.perf_counter()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return t1 - t0, t2 - t0
 
-    # Round-6 operators, timed once each at sf (NOT part of the headline —
-    # the headline set stays fixed for round-over-round comparability; this
-    # block gives the new surface a measured number).  Training-loop
-    # queries (classifier, SemDeDup, IVF k-means) are excluded: their cost
-    # is iteration-count-driven and already characterized by their own
-    # payoff blocks/tests.
-    R6_OPS = [
-        "n4_lm_perplexity",
-        "n4_bpe_training",
-        "s11_zorder_pruned_read",
-        "a16_profile_table",
-        "a17_mad_outliers",
-        "a18_constraint_checks",
-        "a4_histogram_equidepth",
-        "ext_gap_fill",
-        "ext_gap_fill_linear",
-        "s14_compaction",
-        "n6_contamination_overlap",
-        "n4_char_entropy",
-        "n5_topk_per_group",
-        "n1_line_dedup_keep_first",
-        "n6_mixture_weights",
-        "n1_dedup_incremental",
-        "n1_cluster_best",
-        "n1_fuzzy_dedup_pairs",
-        "n1_incremental_near_dups",
-        "n2_quantized_ann",
-        "n4_normalize_text",
-        "s15_training_shards",
-        "n5_curation_pipeline2",
-        "ext_rolling_anomaly",
-        "n7_pagerank",
-        "n6_mixture_apply",
-        "n1_remove_repeated_spans",
-        "s16_upsert_merge",
-        "s17_incremental_agg",
-        "ext_scd2_build",
-        "n2_pca_rerank",
-        "n6_dataset_diff",
-        "n5_curation_funnel",
-        "ext_ewma_levels",
-        # round 7 additions
-        "n4_bm25_topk",
-        "n4_bm25_indexed",
-        "n7_triangle_count",
-        "n6_weighted_sample",
-        "n2_pca_rerank_verdict",
-        "n1_jaccard_join",
-        "ext_interval_concurrency",
-        "n4_phrase_search",
-        "ext_rolling_distinct",
-        "ext_event_transitions",
-        "n2_centroid_outliers",
-        "ext_time_weighted_avg",
-        "n4_readability",
-        "s11_prefix_pruned_read",
-        "ext_sql_facade",
-        "n1_jaccard_join_hashed",
-        "s17_incremental_quantiles",
-        "n6_weighted_sample_grouped",
-        # round 8 additions
-        "n3_spectral_features",
-        "n3_scene_cuts",
-        "a8_count_min_verdict",
-        "n7_connected_components",
-        "ext_ohlc_downsample",
-        "a10_hll_intersection_verdict",
-        "n2_hybrid_rrf",
-        "n1_minhash_star_verdict",
-        "s20_bloom_pruned_read",
-        "n2_mmr_diversify",
-        "n4_pmi_collocations",
-        "ext_seasonal_decompose",
-        "ext_top_journeys",
-        "s21_incremental_join_view",
-        "s22_deletion_propagation",
-        "ext_market_basket",
-        "a17_join_cardinality",
-        "s23_compaction",
-        "ext_grouping_sets",
-        "ext_window_distribution",
-        "s24_wap_commit",
-        "ext_k_anonymity",
-        "n1_entity_resolution",
-        "ext_holt_forecast",
-        "n1_containment_join",
-        "ext_l_diversity",
-        "n6_curriculum_order",
-        "n6_oov_curve",
-        "n6_dataset_drift",
-        "ext_join_full",
-        "n7_bfs_levels",
-        "ext_dp_release",
-        "x19_quality_monitor",
-        "ext_ols_trend",
-        "n7_shortest_paths",
-        "n7_label_propagation",
-        "n2_hard_negatives",
-        "n5_rejection_reasons",
-        "ext_dp_histogram",
-        "ext_winsorize",
-        "a18_skew_audit",
-        "n6_dataset_card",
-        "ext_lateness_audit",
-        "n6_triplets",
-        "ext_rollup_answer",
-        "s25_malformed_ingest",
-        "n1_cluster_sizes",
-        "n6_padding_waste",
-        "n4_pr_curve",
-        "n3_image_near_dups",
-        "n3_video_near_dups",
-        "n3_audio_near_dups",
-        # round 9 additions
-        "n6_leakage_safe_split",
-        "n2_recall_at_k",
-        "ext_dp_mean",
-        "ext_cusum_changepoint",
-        "n4_kappa_agreement",
-        "n7_clustering_coefficient",
-        "n7_kcore",
-        "ext_target_encoding",
-    ]
+    for name in HEADLINE:
+        run_once(name, f"bench:{name}:warmup")
 
-    def run_r6_ops(data_dir: str) -> dict[str, float]:
-        """Warm once, then min-of-2 — a single timed shot proved too
-        page-cache-sensitive for round-over-round comparison (r8: three
-        ops read 2-2.8x slower one-shot right after the skew corpora
-        evicted /tmp from cache, none reproducible warm)."""
-        out: dict[str, float] = {}
-        for name in R6_OPS:
-            specs[name].fn(spark, data_dir).count()  # warm plan/codegen
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                specs[name].fn(spark, data_dir).count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None or dt < best else best
-            out[name] = round(best, 3)
-        return out
+    best: dict[str, tuple[float, float]] = {}
+    for name in HEADLINE:
+        for rep in range(N_REPS):
+            build_s, total_s = run_once(name, f"bench:{name}:{rep}")
+            if name not in best or total_s < best[name][1]:
+                best[name] = (build_s, total_s)
+    release_caches()
+    spark.catalog.clearCache()
 
-    from hiero_spark.sources.fixtures import materialize_multifile
-
-    multi_dir = materialize_multifile(
-        spark, sf_dir, f"/tmp/hiero_spark_multifile/sf{sf}", files_per_table=8
-    )
-
-    # Both layouts every run (round-2 verdict item 8): the single-file total
-    # is the round-over-round comparable headline; the 8-file total keeps
-    # scan-parallelism regressions visible (split planning, per-file costs).
-    if only_multifile:
-        timings, task_counts, persist_bearing = {}, {}, []
-    else:
-        timings, task_counts, persist_bearing = run_set(sf_dir)
-    timings_multi, _tasks_multi, _pb_multi = run_set(multi_dir)
-    nocache = {} if only_multifile else nocache_arm(sf_dir, persist_bearing)
-    if only_multifile:
-        timings = timings_multi
-        task_counts = _tasks_multi
-
-    def a13_drift_audit() -> dict:
-        """Round-11 verdict #5 tail: a13_next_k moved 0.68 -> 0.81 s
-        (1.20x) on the multifile layout with no round-11 commit touching
-        pagination.py.  Attribute with measurements, not a shrug: shuffle
-        bytes written and plan shape on BOTH layouts, every round.  The
-        expected shape: TakeOrderedAndProject present (top-20 never global-
-        sorts) and shuffle bytes EQUAL across layouts — the query's one
-        shuffle is the (l_shipdate, l_orderkey) partial-agg exchange,
-        proportional to distinct pairs, not files (r12 measurement:
-        6.04 vs 6.10 MB, within 1%).  Equal bytes + unchanged node =>
-        the multifile drift is task-scheduling noise on a sub-second
-        query with 8x more scan tasks; diverging bytes or a lost
-        TakeOrdered => plan regression."""
-        from hiero_spark import plans as P
-
-        out = {}
-        for label, d in (("single_file", sf_dir), ("multifile", multi_dir)):
-            try:
-                df = specs["a13_next_k"].fn(spark, d)
-                out[label] = {
-                    "shuffle_bytes_written": P.shuffle_bytes_written(df),
-                    "take_ordered": bool(
-                        P.has_node(df, "TakeOrderedAndProject")
-                    ),
-                }
-            except Exception as exc:
-                out[label] = {"error": type(exc).__name__ + ": "
-                              + str(exc)[:120]}
-        return out
-
-    def scale_curves() -> dict:
-        """Round-13 verdict #5: measured SCALING CURVES for the three
-        heaviest headline families — containment join, entity
-        resolution, connected components — at two synthetic scale
-        points each, with rows/sec and shuffle bytes per row, so the
-        'survives 100x' claim for the flagships rests on a measured
-        slope, not only the 1M skew blocks (which stress the max-
-        duplication regime; these corpora are the LINEAR regime:
-        containment = n/20 quoting pages over short docs, ER = two
-        records per true entity blocked 10-entities-per-block, CC =
-        128-node chains, the O(log d) pointer-jumping stress).
-
-        Reading the curve: rows/sec should hold or improve with n
-        (fixed per-job overhead amortizes) and shuffle bytes/row should
-        be flat ONCE PAST the broadcast regime — the containment 1M
-        point rides AQE broadcast joins (near-zero shuffle), at 4M at
-        least one join side exceeds the broadcast threshold and the
-        bytes/row cost appears, so 4M's bytes/row is the number that
-        extrapolates to 100 TB; join_nodes counts broadcast vs shuffle
-        join operators at each point so the jump reads as the planner
-        working, not a regression."""
-        import os
-
-        from pyspark.sql import functions as F
-
-        from hiero_spark import plans as P
-        from hiero_spark.functions.graph import connected_components
-        from hiero_spark.functions.setsim import containment_join
-        from hiero_spark.sources.readers import synthetic_containment_corpus
-
-        out: dict = {}
-
-        def containment_point(n: int) -> dict:
-            # cache key carries the generation parameters (round-13
-            # ADVICE: a path keyed only by n would silently reuse a
-            # stale corpus after a parameter edit and report curves for
-            # the wrong workload)
-            pages, quotes, doc_len, snip_len = n // 20, 2_000, 10, 5
-            path = (
-                "/tmp/hiero_spark_bench_scale/"
-                f"containment_{n}_p{pages}_q{quotes}_d{doc_len}_s{snip_len}"
-            )
-            if not os.path.exists(f"{path}/_SUCCESS"):
-                synthetic_containment_corpus(
-                    spark, n, pages=pages, quotes=quotes,
-                    doc_len=doc_len, snip_len=snip_len,
-                ).write.mode("overwrite").parquet(path)
-            docs = spark.read.parquet(path)
-            res = containment_join(docs, threshold=0.9, k=3, hashed=True,
-                                   expand_identical=False)
-            agg = res.groupBy().count()
-            t0 = time.perf_counter()
-            shuffle = P.shuffle_bytes_written(agg)
-            wall = time.perf_counter() - t0
-            nodes = P.node_names(agg)
-            joins = {
-                "broadcast": sum("BroadcastHashJoin" in x for x in nodes),
-                "shuffle": sum(("SortMergeJoin" in x)
-                               or ("ShuffledHashJoin" in x) for x in nodes),
-            }
-            rows = res.count()
-            spark.catalog.clearCache()
-            return {"n": n, "wall_sec": round(wall, 1),
-                    "rows_per_sec": int(n / wall),
-                    "shuffle_bytes": shuffle,
-                    "shuffle_bytes_per_row": round(shuffle / n, 1),
-                    "join_nodes": joins,
-                    "result_group_rows": rows}
-
-        def er_point(n: int) -> dict:
-            base = spark.range(n).select(
-                F.col("id").alias("rec_id"),
-                F.concat(F.lit("Customer#"),
-                         (F.col("id") / 2).cast("long").cast("string"))
-                .alias("name"),
-                ((F.col("id") / 2).cast("long") % (n // 20)).alias("blk"),
-            ).localCheckpoint()
-            t0 = time.perf_counter()
-            a, b = base.alias("a"), base.alias("b")
-            edges = (
-                a.join(b, (F.col("a.blk") == F.col("b.blk"))
-                       & (F.col("a.rec_id") < F.col("b.rec_id")))
-                # lev == 0: numeric name strings one digit apart are lev
-                # 1, so <= 1 would falsely merge entities (measured:
-                # 51k components instead of n/2 at 1M) — the lev
-                # evaluation COST per candidate pair is identical, and
-                # the fuzzy regime is er_skew's job
-                .filter(F.levenshtein(F.col("a.name"), F.col("b.name")) == 0)
-                .select(F.col("a.rec_id").alias("src"),
-                        F.col("b.rec_id").alias("dst"))
-            )
-            # n_iter=3: pair-sized entities converge in one round (3 is
-            # the O(log d) margin for small dup clusters); the long-
-            # diameter convergence stress is cc_point's job
-            comp = connected_components(edges, n_iter=3)
-            n_ent = comp.agg(F.countDistinct("component")).collect()[0][0]
-            wall = time.perf_counter() - t0
-            shuffle = P.shuffle_bytes_written(edges.groupBy().count())
-            base.unpersist()
-            return {"n": n, "wall_sec": round(wall, 1),
-                    "rows_per_sec": int(n / wall),
-                    "shuffle_bytes": shuffle,
-                    "shuffle_bytes_per_row": round(shuffle / n, 1),
-                    "entities": n_ent,
-                    "expected_entities": n // 2}
-
-        def cc_point(n: int) -> dict:
-            chain = 128
-            edges = spark.range(n).select(
-                F.col("id").alias("src"),
-                F.when(F.col("id") % chain != chain - 1, F.col("id") + 1)
-                .otherwise(F.col("id")).alias("dst"),
-            )
-            t0 = time.perf_counter()
-            comp = connected_components(edges, n_iter=7)
-            n_comp = comp.agg(F.countDistinct("component")).collect()[0][0]
-            wall = time.perf_counter() - t0
-            return {"n_edges": n, "chain_len": chain,
-                    "wall_sec": round(wall, 1),
-                    "edges_per_sec": int(n / wall),
-                    "components": n_comp,
-                    "expected_components": -(-n // chain)}
-
-        for fam, fn, sizes in (
-            ("containment", containment_point, (1_000_000, 4_000_000)),
-            ("entity_resolution", er_point, (1_000_000, 4_000_000)),
-            ("connected_components", cc_point, (4_000_000, 16_000_000)),
-        ):
-            out[fam] = []
-            for n in sizes:
-                try:
-                    out[fam].append(fn(n))
-                except Exception as exc:
-                    out[fam].append({"n": n, "error":
-                                     type(exc).__name__ + ": "
-                                     + str(exc)[:120]})
-        return out
-
-    a13_audit = a13_drift_audit()
-    curves = scale_curves()
-    ann = ann_payoff(sf_dir)
-    decontam = decontam_payoff(sf_dir)
-    pyds_vs_grok = pyds_payoff(sf_dir)
-    tix = text_index_payoff(sf_dir)
-    skew = skew_stress()
-    cont_skew = containment_skew()
-    jac_skew = jaccard_skew()
-    er = er_skew()
-    gtk_skew = grouped_topk_skew()
-    codec = codec_throughput()
-    e2e = e2e_throughput()
-    r6_ops = run_r6_ops(sf_dir)
-
-    total = round(sum(timings.values()), 3)
-    cal = calibrate()
-    cal_spark = calibrate_spark(spark)
-    cal_spark_v2 = calibrate_spark_v2(spark)
-    # Round-9 verdict #7: make round-over-round comparisons machine-readable.
-    # queries_calibrated expresses each query in units of the fixed-work CPU
-    # reference, so a uniform machine/sandbox slowdown cancels; the
-    # common-subset ratio compares THIS run's raw sum against the newest
-    # recorded round over exactly the shared query names (coverage growth —
-    # new heavyweights joining HEADLINE — can no longer read as regression).
-    queries_calibrated = {
-        k: round(v / cal, 2) for k, v in timings.items()
-    } if cal > 0 else {}
-    import glob as _glob
-
-    # Only canonical per-round artifacts (BENCH_r<N>.json) are a valid
-    # comparison basis: the driver also drops variant artifacts like
-    # BENCH_r14_c8.json (8-core scaling arm), which sort AFTER the
-    # canonical name and silently became the ratio denominator in the
-    # round-15 round-start run — a 32-core total divided by an 8-core
-    # one read as a 3.4x calibrated "regression" (round 15 fix).
-    prev_files = sorted(
-        f
-        for f in _glob.glob(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH_r*.json")
-        )
-        if re.fullmatch(r"BENCH_r\d+\.json", os.path.basename(f))
-    )
-    common_subset_ratio = None
-    common_subset = {}
-    if prev_files:
-        try:
-            with open(prev_files[-1]) as fh:
-                prev = json.load(fh)
-            # the driver wraps the bench line: {"rc", "tail", "parsed": {...}}
-            recovered = False
-            if "parsed" in prev and isinstance(prev["parsed"], dict):
-                prev = prev["parsed"]
-            elif (
-                "parsed" in prev and prev["parsed"] is None
-                and isinstance(prev.get("tail"), str)
-            ):
-                # r10's stdout line overflowed the driver's 2000-byte tail
-                # window, so "parsed" is null — but the tail holds the
-                # END of the line: most per-query timings plus
-                # calibration_sec survive verbatim.  Recover them so the
-                # round-over-round ratio still computes.  A name cut in
-                # half at the tail boundary has no opening quote, so the
-                # pair regex skips it; recovered names are intersected
-                # with this run's anyway.
-                import re as _re
-
-                frag = prev["tail"]
-                m = _re.search(r'"queries": \{', frag)
-                qfrag = frag[m.end():] if m else frag
-                stop = qfrag.find("}")
-                qpart = qfrag[:stop] if stop != -1 else qfrag
-                calm = _re.search(r'"calibration_sec": ([0-9.]+)', frag)
-                prev = {
-                    "queries": {
-                        k: float(v)
-                        for k, v in _re.findall(
-                            r'"([a-z0-9_]+)": ([0-9.]+)', qpart
-                        )
-                    },
-                    "calibration_sec": float(calm.group(1)) if calm else None,
-                }
-                recovered = True
-            prev_q = prev.get("queries") or {}
-            names = sorted(set(timings) & set(prev_q))
-            prev_sum = sum(float(prev_q[k]) for k in names)
-            cur_sum = sum(timings[k] for k in names)
-            if names and prev_sum > 0:
-                common_subset = {
-                    "vs_file": os.path.basename(prev_files[-1]),
-                    "n_queries": len(names),
-                    "prev_sum_sec": round(prev_sum, 3),
-                    "cur_sum_sec": round(cur_sum, 3),
-                }
-                if recovered:
-                    common_subset["recovered_from_tail"] = True
-                common_subset_ratio = round(cur_sum / prev_sum, 3)
-                # Per-query RAW ratios are the primary round-over-round
-                # judgment basis (round-11 verdict #2: sums hide movers,
-                # calibration can lie): every shared query's cur/prev,
-                # plus the worst movers called out.
-                per_q = {
-                    k: round(timings[k] / float(prev_q[k]), 3)
-                    for k in names if float(prev_q[k]) > 0
-                }
-                common_subset["per_query_ratio"] = per_q
-                common_subset["worst_movers"] = sorted(
-                    per_q.items(), key=lambda kv: -kv[1]
-                )[:3]
-                # Calibrated ratio: ONLY from the Spark-shaped reference
-                # (calibrate_spark) on both sides.  The legacy CPU-number
-                # calibration is recorded for continuity but proved
-                # misleading in r11 (CPU ref halved while Spark per-query
-                # fixed overhead didn't -> phantom 1.37x vs raw 0.902x);
-                # when the previous round predates calibration_spark_sec,
-                # the calibrated ratio is simply absent and RAW governs.
-                # Basis preference (round-14, r13 verdict #1): use the v2
-                # (10x-sized, spread-recorded) fixed job when BOTH rounds
-                # carry it; fall back to the v1 ~0.5 s job otherwise.
-                # Mixing bases across rounds is never allowed — that was
-                # round 12's silent-basis-change bug.
-                prev_scal_v2 = prev.get("calibration_spark_v2_sec")
-                prev_scal = prev.get("calibration_spark_sec")
-                rc = None
-                if prev_scal_v2 and cal_spark_v2["sec"] > 0:
-                    rc = round(
-                        (cur_sum / cal_spark_v2["sec"])
-                        / (prev_sum / float(prev_scal_v2)), 3
-                    )
-                    common_subset["calibration_basis"] = "spark_fixed_job_v2"
-                elif prev_scal and cal_spark > 0:
-                    rc = round(
-                        (cur_sum / cal_spark)
-                        / (prev_sum / float(prev_scal)), 3
-                    )
-                    common_subset["calibration_basis"] = "spark_fixed_job"
-                if rc is not None:
-                    common_subset["ratio_calibrated"] = rc
-                    # round-13 verdict #3: record whether the calibrated
-                    # ratio agrees with the raw per-query picture (within
-                    # 15%), so a divergence is flagged at the artifact,
-                    # not discovered by the judge
-                    raw = cur_sum / prev_sum
-                    rel = abs(rc - raw) / raw if raw > 0 else None
-                    agreement = {
-                        "raw_ratio": round(raw, 3),
-                        "calibrated_ratio": rc,
-                        "relative_gap": round(rel, 3) if rel is not None
-                        else None,
-                        "within_15pct": bool(rel is not None and rel <= 0.15),
-                    }
-                    if rel is not None and rel > 0.15:
-                        # self-describing cause on the v1 basis: the
-                        # ~0.5 s fixed job's min-of-3 run-to-run noise
-                        # (measured 0.414-0.498 s across r13 idle runs)
-                        # divides ~1:1 into the calibrated ratio; on the
-                        # v2 basis the recorded min-of-5 spread bounds
-                        # how much of the gap calibration noise can
-                        # explain. Per-query RAW ratios are the primary
-                        # judgment basis either way (r11 doctrine).
-                        agreement["divergence_cause"] = (
-                            "calibration-job noise: the fixed job's "
-                            "run-to-run variance divides directly into the "
-                            "calibrated ratio (v2 spread_pct bounds it); "
-                            "per-query raw ratios (the primary basis) govern"
-                        )
-                    common_subset["calibration_agreement"] = agreement
-                prev_cal = prev.get("calibration_sec")
-                if prev_cal and cal > 0:
-                    common_subset["ratio_calibrated_cpu_legacy"] = round(
-                        (cur_sum / cal) / (prev_sum / float(prev_cal)), 3
-                    )
-        except (OSError, ValueError, TypeError, KeyError):
-            pass
-    common_subset_ratio_calibrated = common_subset.get("ratio_calibrated")
-    # Detail blocks go to a FILE, not stdout (round-6 verdict item 4: the
-    # driver keeps only a byte-tail of stdout, and the r6 payoff blocks
-    # pushed the headline `value` past the cut — BENCH_r06 recorded
-    # "parsed": null). stdout stays ONE compact line, printed LAST, so the
-    # tail always parses.
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_DETAIL.json")
-    with open(detail_path, "w") as fh:
+    cpus = sc.defaultParallelism
+    with open(DETAIL_PATH, "w") as fh:
         json.dump(
             {
                 "sf": sf,
-                # bulky per-query maps live HERE, not on the stdout line:
-                # the driver keeps only a 2000-byte tail of stdout, and
-                # round 10's line (queries + queries_calibrated ~1.8 KB of
-                # payload) overflowed it — BENCH_r10.json recorded
-                # "parsed": null.  The stdout line carries the scalar
-                # ratios; the maps are in this file.
-                "queries_calibrated": queries_calibrated,
-                "calibration_spark_v2": cal_spark_v2,
-                # fully cache-released min-of-n for the persist-bearing
-                # headline queries (round-14; see run_set docstring) —
-                # the set is auto-detected per run since round 15
-                "nocache_steady_state": nocache,
-                "persist_bearing_queries": persist_bearing,
-                # tasks launched by each query's final timed rep (and the
-                # multifile arm's) — the scaling-arm telemetry the stdout
-                # line carries positionally (r14 verdict #2)
-                "task_counts": task_counts,
-                "task_counts_multifile": _tasks_multi,
-                "timing_basis": "per_query_grouped_release_r14",
-                "common_subset": common_subset,
-                "queries_multifile": timings_multi,
-                "a13_drift_audit": a13_audit,
-                "scale_curves": curves,
-                "ann_payoff": ann,
-                "decontam_payoff": decontam,
-                "pyds_payoff": pyds_vs_grok,
-                "text_index_payoff": tix,
-                "skew_stress": skew,
-                "containment_skew": cont_skew,
-                "jaccard_skew": jac_skew,
-                "er_skew": er,
-                "grouped_topk_skew": gtk_skew,
-                "codec_throughput": codec,
-                "e2e_throughput": e2e,
-                "round_ops": r6_ops,
+                "cpus": cpus,
+                "queries": {
+                    name: {"build_s": round(b, 3), "total_s": round(t, 3)}
+                    for name, (b, t) in best.items()
+                },
             },
             fh,
             indent=1,
         )
-    # nocache_total: the 31-query total a single fresh execution pays —
-    # persist-bearing queries at their fully-released min, every other
-    # query at its steady-state min (identical by construction: a query
-    # with no tracked persists recomputes everything each rep anyway).
-    nocache_total = round(
-        sum(nocache.get(k, v) for k, v in timings.items()), 3
-    )
-    line_obj = {
-                "metric": "headline_queries_total",
-                "value": total,
-                "unit": "sec",
-                # actual session parallelism (r14 verdict #2: the scaling
-                # arm's artifact must SHOW the core count it honored)
-                "cpus": spark.sparkContext.defaultParallelism,
-                "nocache_total": nocache_total,
-                "queries": timings,
-                # tasks launched by each query's final timed rep, in the
-                # same order as `queries` (full map: BENCH_DETAIL.json) —
-                # sub-second queries running a handful of tasks is WHY
-                # their 8-vs-32-core times read flat at sf0.1
-                "task_counts": [task_counts.get(k, -1) for k in timings],
-                "sf": sf,
-                "n_reps": n_reps,
-                "estimator": "min",
-                "calibration_sec": cal,
-                "calibration_spark_sec": cal_spark,
-                # v2 = 10x-sized fixed job, min-of-5, spread recorded in
-                # BENCH_DETAIL.calibration_spark_v2 (r13 verdict #1)
-                "calibration_spark_v2_sec": cal_spark_v2["sec"],
-                "common_subset_ratio": common_subset_ratio,
-                "common_subset_ratio_calibrated": common_subset_ratio_calibrated,
-                # self-describing basis (round-12 ADVICE: the calibrated
-                # field silently changed basis CPU-ref -> Spark-fixed-job
-                # in r12; a stdout-only consumer diffing rounds could mix
-                # bases without noticing). Null when no calibrated ratio.
-                "calibration_basis": common_subset.get("calibration_basis"),
-                # round-14: reps are grouped per query with tracked-cache
-                # release between queries (see run_set docstring); the
-                # per-query steady-state min semantics are unchanged.
-                "timing_basis": "per_query_grouped_release_r14",
-                "multifile_total": round(sum(timings_multi.values()), 3),
-                "detail_file": "BENCH_DETAIL.json",
-    }
-    line = json.dumps(line_obj)
-    # the driver parses a bounded byte-tail of stdout (r10 lost a round's
-    # headline to an overflow); if headline growth ever pushes the line
-    # past a conservative budget, shed the positional task_counts — the
-    # full map always lives in BENCH_DETAIL.json
-    if len(line) > 1700:
-        line_obj.pop("task_counts", None)
-        line = json.dumps(line_obj)
-    print(line)
+    print(stdout_line({k: round(t, 3) for k, (_, t) in best.items()}, sf, cpus))
 
 
 if __name__ == "__main__":

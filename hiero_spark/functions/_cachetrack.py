@@ -11,7 +11,7 @@ accumulate MEMORY_AND_DISK caches forever.
 Every such persist registers here; `release_caches()` unpersists the
 backlog.  Safe to call at any time: an in-flight consumer of a released
 frame just recomputes.  server.py calls it per /api/query request;
-bench.py calls it between blocks; ad-hoc sessions may also use
+bench.py calls it before every timed rep; ad-hoc sessions may also use
 `spark.catalog.clearCache()`, which releases these frames too (at the
 cost of every OTHER cache in the session).
 """
@@ -29,10 +29,8 @@ def persist_tracked(df: DataFrame) -> DataFrame:
 
 
 def live_count() -> int:
-    """How many tracked frames are currently registered — bench.py uses
-    this to detect which queries are persist-bearing (their steady-state
-    headline min reuses rep-1 caches) so the fully-released honesty arm
-    covers exactly that set."""
+    """How many tracked frames are currently registered — a non-zero
+    count after a query marks it persist-bearing."""
     return len(_LIVE)
 
 

@@ -29,16 +29,16 @@ positives at rate ~(1 - e^(-kn/m))^k — callers size `m_bits` to their
 distinct-item estimate.  Probing is a narrow per-row filter: zero
 shuffle, zero join.
 
-Honest local measurement (bench decontam_payoff, sf0.1, local[32]):
-the Bloom path is ~1.5x SLOWER than the exact hashed semi-join (1.20 s
-vs 0.81 s min-of-3) — at this scale shuffles are memory-speed and the
-build aggregation + Python probe overhead dominate.  The claim this
-module makes is about shuffle VOLUME, not local wall-clock: the exact
-path's shuffle grows with distinct train grams (tens of billions at
-100 TB), the Bloom probe's with the bitmap + final doc-id distinct only
-(bench reports both byte counts).  Same honesty framing as the IVF
-crossover: local wall-clock is reported, the scale-predictive metric is
-the argument.
+Local measurement (sf0.1, local[32], min-of-3): the Bloom path is
+~1.5x SLOWER than the exact hashed semi-join (1.20 s vs 0.81 s) — at
+this scale shuffles are memory-speed and the build aggregation + Python
+probe overhead dominate.  The claim this module makes is about shuffle
+VOLUME, not local wall-clock: the exact path's shuffle grows with
+distinct train grams (tens of billions at 100 TB), the Bloom probe's
+with the bitmap + final doc-id distinct only.  That is why
+`functions/pipeline.py` opens the pre-filter only above broadcast
+scale; `tests/test_pipeline.py` forces the gate open and pins the same
+doc-id set.
 """
 
 from __future__ import annotations

@@ -361,7 +361,7 @@ def decode_image(payload: bytes) -> list[float]:
     try:
         # numpy block arm: same parsers/entropy decode, vectorized block
         # assembly + feature math — bit-identical output, ~an order of
-        # magnitude faster (codec_np.py; measured in bench codec_throughput)
+        # magnitude faster (codec_np.py)
         from hiero_spark.functions import codec_np
 
         decoded_np = codec_np.decode_pixels_np(payload)

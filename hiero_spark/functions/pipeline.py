@@ -213,6 +213,23 @@ def _bloom_prefilter(ev: DataFrame, tr_items: DataFrame, col: str,
     return bloom_filter_members(ev, col, bitmap, m_bits)
 
 
+def _contaminated_ids(ev: DataFrame, tr_grams: DataFrame, key: str,
+                      train_text: DataFrame, id_col: str) -> DataFrame:
+    """The tail both decontamination arms share: `ev` is (doc, key) eval
+    grams, `tr_grams` the train grams in the one column `key`.  Above
+    broadcast scale of `train_text` the eval grams are Bloom-pre-filtered;
+    then one semi-join against the distinct train grams, and the distinct
+    eval doc ids, named `id_col`."""
+    est = _past_broadcast_scale(train_text)
+    if est is not None:
+        ev = _bloom_prefilter(ev, tr_grams, key, est)
+    return (
+        ev.join(tr_grams.distinct(), key, "left_semi")
+        .select(F.col("doc").alias(id_col))
+        .distinct()
+    )
+
+
 def contaminated_docs(
     eval_df: DataFrame,
     train_df: DataFrame,
@@ -233,14 +250,9 @@ def contaminated_docs(
     broadcasts the train side."""
     ev = shingles(_fan_out(eval_df, id_col), text_col, id_col, k=k)
     tr_grams = shingles(_fan_out(train_df, id_col), text_col, id_col, k=k)
-    est = _past_broadcast_scale(train_df.select(text_col))
-    if est is not None:
-        ev = _bloom_prefilter(ev, tr_grams.select("shingle"), "shingle", est)
-    tr = tr_grams.select("shingle").distinct()
-    return (
-        ev.join(tr, "shingle", "left_semi")
-        .select(F.col("doc").alias(id_col))
-        .distinct()
+    return _contaminated_ids(
+        ev, tr_grams.select("shingle"), "shingle",
+        train_df.select(text_col), id_col,
     )
 
 
@@ -271,11 +283,7 @@ def contaminated_docs_hashed(
     tr_grams = _fan_out(train_df, id_col).select(
         F.explode(shingle_hash_array(F.col(text_col), k)).alias("h")
     )
-    est = _past_broadcast_scale(train_df.select(text_col))
-    if est is not None:
-        ev = _bloom_prefilter(ev, tr_grams, "h", est)
-    tr = tr_grams.distinct()
-    return ev.join(tr, "h", "left_semi").select(F.col("doc").alias(id_col)).distinct()
+    return _contaminated_ids(ev, tr_grams, "h", train_df.select(text_col), id_col)
 
 
 def pack_into_bins(

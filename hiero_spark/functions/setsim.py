@@ -66,9 +66,11 @@ def _collapsed_sized(
     g^2 verify rows for what is ONE set-level relationship.  Grouping by
     the ordered array costs one shuffle of the same (id, sd) volume the
     ordered agg already produced, and turns the hot-copy regime from
-    O(copies * df) into O(df): measured 525M -> 100k candidates on the
-    1M-doc containment skew corpus (BENCH_DETAIL containment_skew) and
-    g^2/2 -> 0 hot-clique candidates on the jaccard one (jaccard_skew).
+    O(copies * df) into O(df): measured 525M -> 100k candidates on a
+    1M-doc containment skew corpus and g^2/2 -> 0 hot-clique candidates
+    on the jaccard one (the last recorded skew runs:
+    ``git show 7c4706a:BENCH_DETAIL.json``, keys containment_skew and
+    jaccard_skew).
     (df is a function of tok, so grouping by sd == grouping by the set.)
 
     Persisted via _persist_tracked: the prefix side(s), posting side, and
@@ -183,10 +185,9 @@ def jaccard_candidates(
     id_col: str = "doc_id",
     hashed: bool = False,
 ) -> DataFrame:
-    """Deduped candidate GROUP pairs before verification — the diagnostic
-    the jaccard_skew bench block counts (candidate volume is the scale
-    bound the prefix+length filters and identical-set collapse argue
-    for)."""
+    """Deduped candidate GROUP pairs before verification — the
+    candidate volume that the prefix+length filters and the identical-set
+    collapse bound, exposed for tests and skew diagnostics."""
     _sized, pairs = _jaccard_prepared(
         docs, threshold, k, text_col, id_col, hashed, expand=False
     )
@@ -298,7 +299,6 @@ def jaccard_join(
     )
     if not expand_identical:
         return inter_groups.unionByName(dup_groups)
-    out_cols = ["id_a", "id_b", "n_common", "n_union", "jaccard"]
     # cross-group member pairs: group reps were ordered rep_a < rep_b, but
     # individual members need not be — restore the id_a < id_b contract
     # per member pair (jaccard is symmetric, so values carry over)
@@ -377,9 +377,9 @@ def containment_candidates(
     id_col: str = "doc_id",
     hashed: bool = False,
 ) -> DataFrame:
-    """Deduped candidate GROUP pairs before verification — the diagnostic
-    the skew-stress bench counts (candidate volume is the scale bound the
-    prefix filter + identical-set collapse argue for)."""
+    """Deduped candidate GROUP pairs before verification — the
+    candidate volume that the prefix filter and the identical-set collapse
+    bound, exposed for tests and skew diagnostics."""
     _sized, pairs = _containment_prepared(
         docs, threshold, k, text_col, id_col, hashed, expand=False
     )

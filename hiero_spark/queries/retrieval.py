@@ -405,7 +405,7 @@ def n1_jaccard_join(spark, sf_dir):
         "identical-set collapse, functions/setsim.py): identical "
         "shingle sets collapse to one representative BEFORE candidate "
         "generation, so g verbatim copies contribute one distinct set "
-        "instead of g^2/2 candidate+verify pairs (jaccard_skew: 0 vs "
+        "instead of g^2/2 candidate+verify pairs (measured: 0 vs "
         "12.5M at 1M docs / 5k copies).  expand_identical=False returns "
         "GROUP rows — representative ids with count multiplicities, "
         "plus one self-row per duplicate group standing for its "

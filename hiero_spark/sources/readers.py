@@ -190,32 +190,6 @@ def synthetic_embeddings(
     )
 
 
-def synthetic_documents(
-    spark: SparkSession, n: int, doc_len: int = 30, vocab: int = 30_000,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Deterministic synthetic text corpus (S9 family) for full-text
-    index benchmarks at sizes the fixtures don't ship.
-
-    Each document is `doc_len` words drawn by integer hash from a
-    `vocab`-word vocabulary ('w0'..'w{vocab-1}'), so any given term's
-    document frequency is ~ n*doc_len/vocab — selective, realistic
-    posting lists for probe-vs-scan pricing. Pure hash of (id, j):
-    bit-identical at any parallelism (synthetic_table contract)."""
-    rng = spark.range(0, n, 1, partitions) if partitions else spark.range(n)
-    idx = F.sequence(F.lit(0), F.lit(doc_len - 1))
-    words = F.transform(
-        idx,
-        lambda j: F.concat(
-            F.lit("w"), F.pmod(F.xxhash64(F.col("id"), j), F.lit(vocab))
-        ),
-    )
-    return rng.select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(" ", words).alias("text"),
-    )
-
-
 def synthetic_boilerplate_corpus(
     spark: SparkSession, n: int, hot: int, doc_len: int = 30,
     vocab: int = 30_000, partitions: int | None = None,
@@ -225,9 +199,10 @@ def synthetic_boilerplate_corpus(
     over 1000 values), so they are mutual near-dups (3-gram Jaccard
     ~0.8 across variants, 1.0 within a variant)
     and EVERY LSH band bucket for them goes hot — the real-crawl failure
-    mode the dedup caps exist for.  The remaining n-hot docs are the
-    synthetic_documents hash corpus (no structural near-dups).  Pure
-    hash of (id, j): bit-identical at any parallelism."""
+    mode the dedup caps exist for.  The remaining n-hot docs are
+    `doc_len` words drawn by integer hash from a `vocab`-word vocabulary
+    (no structural near-dups).  Pure hash of (id, j): bit-identical at
+    any parallelism."""
     rng = spark.range(0, n, 1, partitions) if partitions else spark.range(n)
     idx = F.sequence(F.lit(0), F.lit(doc_len - 1))
     normal_words = F.transform(

@@ -1,8 +1,7 @@
 """Bit-exactness of the numpy codec arm (functions/codec_np.py) against
 the scalar spec-reference decoders — every payload family the vendored
 ladder accepts must decode to IDENTICAL pixels and features on both arms.
-The np arm exists purely for throughput (bench codec_throughput measures
-it); any divergence is a bug in the vectorization, never a tolerance.
+The np arm exists purely for throughput; any divergence is a bug in the vectorization, never a tolerance.
 """
 
 import numpy as np

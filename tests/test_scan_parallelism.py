@@ -2,8 +2,7 @@
 
 The shipped testdata is one row group per table (scans = 1 task); these
 tests rewrite sf0.01 as 8 files per table and prove (a) scans actually
-split, (b) results are identical to the single-file read — so the bench's
-multi-file variant (SPARK_GRAFT_MULTIFILE=1) measures real parallel scans.
+split, (b) results are identical to the single-file read.
 """
 
 import pytest

@@ -357,23 +357,38 @@ def test_stream_observability_fraction_done(api):
     assert e.value.code == 404
 
 
-def test_progressive_disconnect_cancels_job_group(api, spark):
-    """Round-9 verdict #4 — the unsubscribe half of the PartialResult
-    contract: dropping the socket mid-stream must stop the tier worker
-    and cancel its Spark job group (no orphaned tiers computing for a
-    reader that is gone)."""
+@pytest.mark.parametrize("mode", ["prefix", "merge"])
+def test_progressive_disconnect_cancels_job_group(api, spark, mode,
+                                                  monkeypatch):
+    """The unsubscribe half of the PartialResult contract: dropping the
+    socket mid-stream must stop the tier worker and cancel its Spark job
+    group (no orphaned tiers computing for a reader that is gone), and a
+    cancelled merge-mode stream must still release the partials it
+    persisted."""
     import socket
     import time as _time
     from urllib.parse import urlparse
 
+    from hiero_spark import progressive
     from hiero_spark import server as srv_mod
 
+    # Hold every merge generator, so only the server closing it releases
+    # its partials -- not CPython collecting it when the handler returns.
+    held = []
+    real_merge = progressive.progressive_merge
+
+    def holding_merge(*args, **kwargs):
+        held.append(real_merge(*args, **kwargs))
+        return held[-1]
+
+    monkeypatch.setattr(progressive, "progressive_merge", holding_merge)
     before = set(srv_mod._STREAMS)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     u = urlparse(api)
     tiers = 16
     path = (
         "/api/progressive/histogram?table=lineitem&col=l_quantity"
-        f"&buckets=8&tiers={tiers}&key=l_orderkey"
+        f"&buckets=8&tiers={tiers}&key=l_orderkey&mode={mode}"
     )
     s = socket.create_connection((u.hostname, u.port), timeout=120)
     try:
@@ -401,6 +416,8 @@ def test_progressive_disconnect_cancels_job_group(api, spark):
         _time.sleep(0.1)
     assert state["cancelled"], state
     assert state["done"], state
+    assert len(held) == (mode == "merge")
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
     # early stop: nowhere near all 16 tiers were computed for a dead reader
     assert state["tiers_done"] < tiers, state
     # the fraction-done meter froze below 1.0 where the cancel landed
