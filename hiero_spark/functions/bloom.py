@@ -1,10 +1,10 @@
 """Broadcast Bloom-filter membership — the shuffle-free decontamination
 path (SURVEY.md §2.11 N6 extension).
 
-`contaminated_docs_hashed` (functions/pipeline.py) is the exact form: it
-shuffles the distinct train-shingle hashes into a semi-join.  At 100 TB
-the train side of that join is the cost — tens of billions of distinct
-grams move through one shuffle even with 8-byte keys.  Spark's own
+`contaminated_docs(hashed=True)` (functions/pipeline.py) is the exact
+form: it shuffles the distinct train-shingle hashes into a semi-join.
+At 100 TB the train side of that join is the cost — tens of billions of
+distinct grams move through one shuffle even with 8-byte keys.  Spark's own
 runtime row-level filtering solves the identical problem by folding the
 build side into a Bloom filter and broadcasting it; `bloom_filter_agg`
 exists in the JVM but is not registered for SQL (verified against this
@@ -48,8 +48,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
-from hiero_spark.functions._fanout import fan_out as _fan_out
-from hiero_spark.functions.dedup import shingle_hash_array
+from hiero_spark.functions.pipeline import _gram_stream
 
 
 def _positions(item: Column, m_bits: int, n_hashes: int) -> Column:
@@ -146,26 +145,21 @@ def contaminated_docs_bloom(
     """Benchmark decontamination via a broadcast Bloom filter: eval docs
     sharing (probably) any word k-gram with the training corpus.
 
-    vs `contaminated_docs_hashed`: the train side is folded into m bits
-    (512 KB at the default) instead of a distinct+semi-join shuffle of
+    vs `contaminated_docs(hashed=True)`: the train side is folded into
+    m bits (512 KB at the default) instead of a distinct+semi-join shuffle of
     every distinct gram hash; the eval side never shuffles at all until
     the final distinct on matched doc ids.  Superset semantics: every
     truly-contaminated doc is flagged (no false negatives); extra flags
     at the Bloom fp rate — size m_bits ~ 16 x distinct train grams for
-    ~(0.17)^3 = 0.5% per-gram fp.  The exact variants remain the
-    verifiers; this is the first-pass filter you run at 100 TB (flagged
+    ~(0.17)^3 = 0.5% per-gram fp.  The exact `contaminated_docs`
+    remains the verifier; this is the first-pass filter you run at 100 TB (flagged
     docs can be exact-checked afterwards at 1/1000 the input).
     """
-    tr = _fan_out(train_df, id_col).select(
-        F.explode(shingle_hash_array(F.col(text_col), k)).alias("h")
-    )
-    bitmap = build_bloom(tr, "h", m_bits=m_bits, n_hashes=n_hashes)
-    ev = _fan_out(eval_df, id_col).select(
-        F.col(id_col).alias("doc"),
-        F.explode(shingle_hash_array(F.col(text_col), k)).alias("h"),
-    )
+    tr = _gram_stream(train_df, text_col, id_col, k, hashed=True)
+    bitmap = build_bloom(tr, "gram", m_bits=m_bits, n_hashes=n_hashes)
+    ev = _gram_stream(eval_df, text_col, id_col, k, hashed=True)
     return (
-        bloom_filter_members(ev, "h", bitmap, m_bits, n_hashes)
+        bloom_filter_members(ev, "gram", bitmap, m_bits, n_hashes)
         .select(F.col("doc").alias(id_col))
         .distinct()
     )

@@ -93,8 +93,8 @@ def remove_boilerplate_lines(
     (array_sort on (pos, line) structs, no window). Lines shuffle as
     strings here because the DuckDB oracle must reproduce the keys
     exactly; at 100 TB shuffle xxhash64(line) longs instead, the same
-    trade `contaminated_docs_hashed` documents (2^-64 collision risk vs
-    ~8x less shuffle traffic).
+    trade `contaminated_docs(hashed=True)` documents (2^-64 collision
+    risk vs ~8x less shuffle traffic).
     """
     lines = df.select(
         F.col(id_col).alias("_id"),
@@ -123,15 +123,15 @@ def remove_boilerplate_lines(
     )
 
 
-def shingle_array(text: Column, k: int = 3) -> Column:
-    """Distinct word k-gram shingles as an array column (no explode).
+def _gram_array(text: Column, k: int) -> Column:
+    """Word k-grams of `text` in order, duplicates kept (no explode).
 
     Built by zipping k progressively-shifted views of the token array
     (zip_with pads the short side with null; concat_ws skips nulls; the
     final slice drops the ragged tail) instead of the obvious
     `transform(sequence(...), i -> slice(tokens, i, k))`. The two are
     semantically identical — including the <k-token edge case, which
-    yields the whole doc as one shingle — but in the transform/sequence
+    yields the whole doc as one gram — but in the transform/sequence
     form Catalyst inlines the `split` into the lambda body, re-tokenizing
     the document once per ELEMENT (interpreted HOFs get no common-
     subexpression elimination): measured 4x slower at sf0.1. Here every
@@ -143,32 +143,28 @@ def shingle_array(text: Column, k: int = 3) -> Column:
     for j in range(1, k):
         shifted = F.slice(toks, j + 1, F.greatest(n - j, F.lit(0)))
         grams = F.zip_with(grams, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    return F.array_distinct(F.slice(grams, 1, F.greatest(n - (k - 1), F.lit(1))))
+    return F.slice(grams, 1, F.greatest(n - (k - 1), F.lit(1)))
+
+
+def shingle_array(text: Column, k: int = 3) -> Column:
+    """Distinct word k-gram shingles as an array column (no explode) —
+    the SQL-oracle-comparable form."""
+    return F.array_distinct(_gram_array(text, k))
 
 
 def shingle_hash_array(text: Column, k: int = 3) -> Column:
     """Distinct word k-gram shingles as 64-bit hashes: each gram string is
-    built transiently (concat_ws over the zipped token views) and fed to
-    one xxhash64 — only the 8-byte longs leave the expression, so the
-    array this returns is ~3x smaller to persist and shuffle than string
-    shingles (measured at sf0.1), and downstream comparisons are
-    fixed-width. Per-pair collision probability ~2^-64 shifts a Jaccard
-    estimate by at most 1/|shingles|, far below any useful threshold. The
-    string form (`shingle_array`) remains the SQL-oracle-comparable
-    variant.
-
-    Same zip_with construction as `shingle_array` (see its docstring: the
-    transform/sequence form re-tokenizes per element); hashing the joined
+    built transiently and fed to one xxhash64 — only the 8-byte longs
+    leave the expression, so the array this returns is ~3x smaller to
+    persist and shuffle than string shingles (measured at sf0.1), and
+    downstream comparisons are fixed-width. Per-pair collision
+    probability ~2^-64 shifts a Jaccard estimate by at most
+    1/|shingles|, far below any useful threshold. Hashing the joined
     gram string keeps the k-tuple -> hash mapping injective up to the
     ' ' join."""
-    toks = F.split(F.trim(F.lower(text)), r"\s+")
-    n = F.size(toks)
-    grams = toks
-    for j in range(1, k):
-        shifted = F.slice(toks, j + 1, F.greatest(n - j, F.lit(0)))
-        grams = F.zip_with(grams, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    grams = F.slice(grams, 1, F.greatest(n - (k - 1), F.lit(1)))
-    return F.array_distinct(F.transform(grams, lambda g: F.xxhash64(g)))
+    return F.array_distinct(
+        F.transform(_gram_array(text, k), lambda g: F.xxhash64(g))
+    )
 
 
 def shingles(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> DataFrame:
@@ -364,31 +360,6 @@ def jaccard_verify_arrays(
     )
 
 
-def jaccard_verify(
-    pairs: DataFrame, sh: DataFrame, threshold: float = 0.7
-) -> DataFrame:
-    """Exact Jaccard from exploded (doc, shingle) form — the join-based
-    variant for when shingle sets are too large to carry as arrays."""
-    sh_a = sh.select(F.col("doc").alias("doc_a"), F.col("shingle"))
-    sh_b = sh.select(F.col("doc").alias("doc_b"), F.col("shingle"))
-    inter = (
-        pairs.join(sh_a, "doc_a")
-        .join(sh_b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-    out = (
-        inter.join(sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-    )
-    return out.filter(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "jaccard")
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -408,12 +379,11 @@ def ngram_jaccard_pairs(
 
     The (doc, shingle) relation feeds THREE consumers — the per-doc size
     aggregation and both sides of the self-join — so it is persisted
-    (tracked, round-9 ADVICE pattern): without it each branch re-runs the
-    tokenize + k-gram + distinct chain per consumer. Fresh-process A/B at
-    sf0.1 on the cluster queries built on this function:
-    n1_cluster_sizes 3.95 -> 2.89 s, n1_cluster_best 2.67 -> 2.22 s,
-    n1_dedup_clusters 2.15 -> 1.91 s (same finding as the setsim.py
-    `sets` persist this round).
+    (tracked, so long-lived drivers can release it): without it each
+    branch re-runs the tokenize + k-gram + distinct chain per consumer.
+    Fresh-process A/B at sf0.1 on the cluster queries built on this
+    function: n1_cluster_sizes 3.95 -> 2.89 s, n1_cluster_best
+    2.67 -> 2.22 s.
     """
     from hiero_spark.functions._cachetrack import persist_tracked
 
@@ -437,79 +407,6 @@ def ngram_jaccard_pairs(
         )
     )
     return out.filter(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "jaccard")
-
-
-def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
-    """Connected components over near-dup pairs -> (doc, canonical) where
-    canonical is the minimum doc id in the component (the representative a
-    dedup pipeline keeps).
-
-    Hash-min label propagation: each round every doc takes the min of its
-    own label and its neighbors' labels; stop when no label changes.
-    Rounds needed = component diameter, and near-dup components are tiny
-    (bounded cluster sizes — the exact-pairs form emits near-cliques, so
-    observed diameters are 1-2), so this converges in a few iterations
-    even at corpus scale. Per round: one join + one agg, shuffling only
-    (doc, label) longs. Labels persist per round and lineage is cut with
-    localCheckpoint so the plan doesn't deepen iteration over iteration —
-    the standard shape for iterative algorithms on DataFrames.
-
-    Round-14: the convergence check used to be its own per-round job
-    joining the new label frame back to the old one; the old label now
-    rides THROUGH the min-aggregation as a second column (labels
-    contribute (doc, label, old=label); neighbor candidates contribute
-    old=NULL, which min() ignores — every doc keeps exactly its own
-    prior label in `old`), so `changed` is a filter-count on the frame
-    the round just materialized: no join, and the count reads
-    checkpointed data. Labels only decrease under min, so
-    label < old ⟺ label ≠ old.
-    """
-    e = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    edges = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).persist()
-    labels = (
-        edges.select(F.col("a").alias("doc"))
-        .distinct()
-        .withColumn("label", F.col("doc"))
-        .localCheckpoint()
-    )
-    from pyspark.sql import Observation
-
-    from hiero_spark.functions.graph import _observed
-
-    label_t = labels.schema["label"].dataType
-    for _ in range(max_iter):
-        neigh = edges.join(labels, edges["a"] == labels["doc"]).select(
-            F.col("b").alias("doc"),
-            F.col("label"),
-            F.lit(None).cast(label_t).alias("old"),
-        )
-        cur = labels.select("doc", "label", F.col("label").alias("old"))
-        # round 15: the changed-count rides the round's own checkpoint
-        # materialization as an Observation (the connected_components
-        # pattern, returned to its donor) — the round-14 shape still ran
-        # one explicit count job per round over the checkpointed frame
-        obs = Observation()
-        new_labels = (
-            cur.unionByName(neigh)
-            .groupBy("doc")
-            .agg(F.min("label").alias("label"), F.min("old").alias("old"))
-            .observe(
-                obs,
-                F.sum(
-                    F.when(F.col("label") < F.col("old"), 1).otherwise(0)
-                ).alias("changed"),
-            )
-            .localCheckpoint()
-        )
-        changed = _observed(
-            obs, "changed",
-            lambda: new_labels.filter(F.col("label") < F.col("old")).count(),
-        )
-        labels = new_labels.select("doc", "label")
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels.select("doc", F.col("label").alias("canonical"))
 
 
 def minhash_near_dups(
@@ -542,8 +439,8 @@ def minhash_near_dups(
     from hiero_spark.functions._cachetrack import persist_tracked
 
     df = fan_out(df, id_col)
-    # tracked persists (round-9 ADVICE): load-bearing for the 3-consumer
-    # plan, releasable by long-lived drivers via release_caches()
+    # tracked persists: load-bearing for the 3-consumer plan, releasable
+    # by long-lived drivers via release_caches()
     docs = persist_tracked(df.select(
         F.col(id_col).alias("doc"), shingle_hash_array(F.col(text_col), k).alias("sh")
     ))

@@ -3,8 +3,8 @@
 Pretraining pipelines score crawled pages by link centrality (OPIC /
 PageRank buckets in CommonCrawl derivatives) and keep or up-sample the
 well-linked tail. This implements the power iteration as DataFrame
-join+agg rounds — the same iterative shape as dedup_clusters' label
-propagation (per round: one join edges⋈ranks, one groupBy(dst) sum;
+join+agg rounds — the same iterative shape as connected_components'
+label propagation (per round: one join edges⋈ranks, one groupBy(dst) sum;
 ranks persist per round and lineage is cut with localCheckpoint so the
 plan doesn't deepen).
 
@@ -27,18 +27,17 @@ from pyspark.sql import DataFrame, functions as F
 
 SCALE = 1_000_000  # rank 1.0 in micro-units
 
-# Cluster-regime switch for the loop-invariant edge relation (round 15,
-# r14 verdict #6 / guide §2.4): above this size the materialized edge
-# list is hash-partitioned by the per-round join key and persisted, so
-# the planner sees its partitioning and every round's join skips the
-# edge-side exchange entirely — rounds shuffle only the O(V) label/dist
-# frame.  Below it (every shipped SF is ~3 orders of magnitude below
-# the default) the edge frame is localCheckpoint'ed as before: a fixed
-#-width pre-partition at local scale was measured 2x WORSE in round 14
-# (it defeats AQE's coalescing of the tiny per-round shuffles), which
-# is exactly why this is a size gate and not a constant behavior.
-_PREPARTITION_CONF = "spark.hiero.graph.prepartitionBytes"
-_PREPARTITION_DEFAULT = "1g"
+# Cluster-regime switch for the loop-invariant edge relation: above
+# this plan-size estimate the materialized edge list is hash-partitioned
+# by the per-round join key and persisted, so the planner sees its
+# partitioning and every round's join skips the edge-side exchange
+# entirely — rounds shuffle only the O(V) label/dist frame.  Below it
+# (every shipped SF is ~3 orders of magnitude below) the edge frame is
+# localCheckpoint'ed: a fixed-width pre-partition at local scale was
+# measured 2x WORSE (it defeats AQE's coalescing of the tiny per-round
+# shuffles), which is exactly why this is a size gate and not a
+# constant behavior.
+_PREPARTITION_BYTES = 1 << 30
 
 
 def _pin_wide(
@@ -49,7 +48,7 @@ def _pin_wide(
 ) -> DataFrame:
     """Materialize a loop-invariant relation for an iterative operator.
 
-    Gate ON (plan estimate > the conf threshold): repartition by `key`
+    Gate ON (plan estimate > _PREPARTITION_BYTES): repartition by `key`
     into spark.sql.shuffle.partitions, persist (tracked — released via
     release_caches(), the operator-internal cache contract), and
     materialize with a count.  Persist, not checkpoint, on purpose: a
@@ -67,20 +66,15 @@ def _pin_wide(
     (Long.MaxValue — the gate would always fire).  Callers pass the
     pre-checkpoint source plan, which carries real scan statistics.
     """
-    from hiero_spark.functions.pipeline import _parse_size_bytes
-
     spark = df.sparkSession
     try:
-        thr = _parse_size_bytes(
-            spark.conf.get(_PREPARTITION_CONF, _PREPARTITION_DEFAULT)
-        )
         basis = size_hint_df if size_hint_df is not None else df
         est = int(
             basis._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:
-        thr, est = 0, 0
-    if thr > 0 and est > thr:
+        est = 0
+    if est > _PREPARTITION_BYTES:
         from hiero_spark.functions._cachetrack import persist_tracked
 
         p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
@@ -102,8 +96,8 @@ def pagerank(
     Nodes = union of edge endpoints; a node with no in-links keeps the
     teleport mass."""
     # one-time materialization of the static relations (the bfs_levels
-    # lesson, applied in round 14): edge list, node set, and out-degrees
-    # are loop-invariant, but without the checkpoint every round's
+    # lesson): edge list, node set, and out-degrees are loop-invariant,
+    # but without the checkpoint every round's
     # contribs join re-derives the caller's edge plan and every ranks
     # rebuild re-runs the nodes distinct and the outdeg aggregation —
     # 3 redundant subplans per iteration.
@@ -150,6 +144,29 @@ def pagerank(
     )
 
 
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The undirected simple graph induced by `edges`: one (a, b) row
+    per edge with a < b — direction, self-loops and duplicates dropped."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _triangles(und: DataFrame) -> DataFrame:
+    """Every triangle {x<y<z} of an `_undirected` edge list exactly once,
+    as the compact-forward chain e1(x,y) ⋈ e2(y,z) ⋈ e3(x,z): each wedge
+    is generated from its middle node only, both endpoints larger."""
+    e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
+    e2 = und.select(F.col("a").alias("y"), F.col("b").alias("z"))
+    e3 = und.select(F.col("a").alias("x"), F.col("b").alias("z"))
+    return e1.join(e2, "y").join(e3, ["x", "z"])
+
+
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Global triangle count over the undirected simple graph induced by
     `edges` (direction and duplicates dropped). One row:
@@ -165,19 +182,8 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     the standard compact-forward bound). Integer counts, so the oracle
     is exact with no tolerance.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = und.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    e3 = und.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    wedges = e1.join(e2, "y")  # x < y < z by construction
-    tris = wedges.join(e3, ["x", "z"])
+    und = _undirected(edges, src, dst)
+    tris = _triangles(und)
     nodes = und.select(F.col("a").alias("n")).union(
         und.select(F.col("b").alias("n"))
     ).distinct()
@@ -208,20 +214,10 @@ def local_clustering_coefficient(
     statistic is hash-checkable cross-engine (most graph ops are
     rows-only; this one earns a full SQL oracle).
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = und.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    e3 = und.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    tris = e1.join(e2, "y").join(e3, ["x", "z"])
+    und = _undirected(edges, src, dst)
     tri_per_node = (
-        tris.select(F.explode(F.array("x", "y", "z")).alias("v"))
+        _triangles(und)
+        .select(F.explode(F.array("x", "y", "z")).alias("v"))
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("t"))
     )
@@ -274,15 +270,7 @@ def k_core(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    cur = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    cur = _undirected(edges, src, dst).localCheckpoint()
 
     def degrees(e: DataFrame) -> DataFrame:
         return (
@@ -295,10 +283,9 @@ def k_core(
     from pyspark.sql import Observation
 
     for _ in range(n_rounds):
-        # one degree pass per round (round 15): the old shape ran the
-        # aggregation TWICE when peeling continued — once under
-        # isEmpty(), again under the checkpoint — and the emptiness
-        # check now rides the checkpoint job as an Observation
+        # one degree pass per round: the emptiness check rides the
+        # checkpoint job as an Observation instead of a separate
+        # isEmpty() job re-running the aggregation
         obs = Observation()
         bad = (
             degrees(cur).filter(F.col("d") < k).select("v")
@@ -335,15 +322,14 @@ def connected_components(
        symmetrized edge list once, so one join + one min-agg covers
        both the neighbor minimum and the node's own label.  The
        node's PRIOR label also rides through the same aggregation as
-       a second min column (only the self-loop row contributes it —
-       the dedup_clusters fusion, round 15).
+       a second min column (only the self-loop row contributes it).
     2. pointer jump — L(v) <- L(L(v)), which squares the propagation
        distance; with it, convergence needs O(log diameter) rounds
        instead of O(diameter) — the difference between 5 rounds and
        5000 on a chain-shaped 100 TB web graph. (GraphFrames' CC uses
        the same alternating contraction idea.)
 
-    CONVERGENCE-CHECKED EXIT (round 15): `n_iter` is a CAP, not an
+    CONVERGENCE-CHECKED EXIT: `n_iter` is a CAP, not an
     assumed round count.  A round whose neighbor-min step changes no
     label is a proof of full convergence — stability under
     neighbor-min over the symmetric self-looped edge relation forces
@@ -360,17 +346,16 @@ def connected_components(
     with a deep component keeps iterating instead of silently
     returning unconverged labels.
 
-    Round-over-round cost vs the round-14 shape (which ran an assumed
-    3 rounds): the observation round a convergence exit inherently
-    adds is paid for by three removals — round 1 runs NO join at all
-    (the initial labels are the identity, so the neighbor-min is a
-    plain aggregation over the self-looped edge list); the
-    self-looped union is no longer separately checkpointed (both of
-    its inputs already are — re-deriving a union per round is free);
-    and the two setup distincts collapsed into one.
+    The observation round a convergence exit inherently adds is paid
+    for elsewhere: round 1 runs NO join at all (the initial labels are
+    the identity, so the neighbor-min is a plain aggregation over the
+    self-looped edge list); the self-looped union is not separately
+    checkpointed (both of its inputs already are — re-deriving a union
+    per round is free); and one setup distinct covers both endpoint
+    sources.
 
     The symmetrized edge list is materialized ONCE up front (the
-    bfs_levels lesson, round 14): without it every round's joins
+    bfs_levels lesson): without it every round's joins
     re-derive the caller's edge plan — for entity resolution that
     plan is a blocking self-join plus a levenshtein filter.  The
     per-round checkpoint sits on the neighbor-min frame, so the jump
@@ -396,11 +381,10 @@ def connected_components(
         endpoints = endpoints.union(
             nodes.select(F.col(nodes.columns[0]).alias("node"))
         )
-    # one distinct covers both sources (round 15: the old shape ran a
-    # distinct on the endpoints and a second distinct after the union)
+    # one distinct covers both sources
     endpoints = endpoints.distinct().localCheckpoint()
     # lazy union: both inputs are checkpointed, so per-round re-derivation
-    # is a free concat — the old third checkpoint bought nothing.  Above
+    # is a free concat — a third checkpoint would buy nothing.  Above
     # the cluster-regime gate the union IS worth materializing, hash-
     # partitioned by the per-round join key (size hint = the caller's
     # edge plan: symx is built over checkpointed inputs whose stats
@@ -537,8 +521,8 @@ def bfs_levels(
     for h in range(1, max_hops + 1):
         seen = reduce(lambda a, b: a.unionByName(b), pieces)
         # the empty-frontier check rides the layer's own checkpoint
-        # materialization as an Observation (round 15 — the CC pattern):
-        # the old isEmpty() was one extra job per hop
+        # materialization as an Observation (the CC pattern) instead of
+        # one extra isEmpty() job per hop
         obs = Observation()
         nxt = (
             sym.join(frontier, sym["u"] == frontier["node"])

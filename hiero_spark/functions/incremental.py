@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from hiero_spark.functions._cachetrack import persist_tracked
 from hiero_spark.functions._fanout import fan_out
 from hiero_spark.functions.dedup import (
     band_buckets,
@@ -86,15 +87,16 @@ def lsh_index(
     re-derived per probe); shingles = (doc, sh) hashed shingle arrays for
     the verify join. Persist both; bucket the bucket relation by
     (band, bkt) and daily probes join it shuffle-free."""
-    # persist the shingled relation BEFORE minhashing: minhash_signatures
+    # persist the shingled relation BEFORE minhashing (tracked, so a
+    # long-lived driver releases it with release_caches()): minhash_signatures
     # requires `sh` to be a cheap column reference (its docstring
     # contract) — unmaterialized, CollapseProject inlines the shingling
     # expression into the per-seed transform lambda and re-shingles every
     # document num_hashes times (measured 13 s -> 1.4 s cold at sf0.1)
-    docs = fan_out(corpus_df, id_col).select(
+    docs = persist_tracked(fan_out(corpus_df, id_col).select(
         F.col(id_col).alias("doc"),
         shingle_hash_array(F.col(text_col), k).alias("sh"),
-    ).persist()
+    ))
     sig = minhash_signatures(docs, num_hashes)
     buckets = band_buckets(sig, num_hashes, bands)
     capped = buckets.withColumn(
@@ -120,10 +122,10 @@ def incremental_near_dups(
     Jaccard on candidates only. The corpus is never re-shingled; identical
     text always collides (equal shingle sets give equal signatures in
     every band), so planted exact copies are found deterministically."""
-    b_docs = fan_out(batch_df, id_col).select(
+    b_docs = persist_tracked(fan_out(batch_df, id_col).select(
         F.col(id_col).alias("doc"),
         shingle_hash_array(F.col(text_col), k).alias("sh"),
-    ).persist()
+    ))
     b_sig = minhash_signatures(b_docs, num_hashes)
     b_buckets = band_buckets(b_sig, num_hashes, bands)
     cand = (
@@ -205,8 +207,8 @@ def quantile_state(
     """Mergeable per-key quantile state: (key, bucket, cnt) counts on a
     fixed integer grid (bucket = floor(cents / width)).
 
-    FLOOR semantics, not Spark's truncate-toward-zero `DIV` (round-7
-    ADVICE): for negative cents (refunds/credits) truncation would fold
+    FLOOR semantics, not Spark's truncate-toward-zero `DIV`: for
+    negative cents (refunds/credits) truncation would fold
     (-width, width) into bucket 0 and disagree with the DuckDB `//`
     oracle. Computed as (cents - pmod(cents, width)) DIV width — pmod's
     remainder is nonnegative, so the numerator is an exact multiple of

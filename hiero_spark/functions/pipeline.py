@@ -9,10 +9,11 @@ Scale notes per operator:
 - the vocabulary build is explode -> partial+final count (map-side combine
   takes the shuffle down to distinct tokens per partition, not token
   occurrences);
-- decontamination has two variants: `contaminated_docs` shuffles shingle
-  strings (exactly SQL-oracle-reproducible), `contaminated_docs_hashed`
-  semi-joins on xxhash64(shingle) longs — fixed-width 8-byte shuffle keys,
-  the 100 TB shape, accepting the ~2^-64 per-pair false-positive rate;
+- decontamination (`contaminated_docs`) semi-joins eval grams against
+  the distinct train grams, keyed either by the shingle strings (exactly
+  SQL-oracle-reproducible) or, with `hashed=True`, by xxhash64(shingle)
+  longs — fixed-width 8-byte shuffle keys, the 100 TB shape, accepting
+  the ~2^-64 per-pair false-positive rate;
 - PII scrubbing is a per-row regexp pass (codegen'd, no shuffle).
 """
 
@@ -21,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from hiero_spark.functions._fanout import fan_out as _fan_out
-from hiero_spark.functions.dedup import shingle_hash_array, shingles
+from hiero_spark.functions.dedup import shingle_array, shingle_hash_array
 
 SPLIT_TRAIN, SPLIT_VAL, SPLIT_TEST = "train", "val", "test"
 
@@ -32,9 +33,9 @@ SPLIT_TRAIN, SPLIT_VAL, SPLIT_TEST = "train", "val", "test"
 # part, with >=7 digits overall, minus the two ISO-ish date shapes
 # (y-m-d / d-m-y).  Bare digit runs ("12345678") and dates ("2026-08-13",
 # "2026 08 13") are NOT redacted — they are overwhelmingly ids/dates in a
-# training corpus, and redacting them destroys data (the round-2 verdict
-# caught the old pattern doing exactly that).  Java regex (Spark-side
-# only; scrub_pii has no SQL oracle), so lookarounds are available.
+# training corpus, and redacting them destroys data.  Java regex
+# (Spark-side only; scrub_pii has no SQL oracle), so lookarounds are
+# available.
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PHONE_RE = (
     r"(?<![0-9])"
@@ -168,8 +169,8 @@ def _past_broadcast_scale(df: DataFrame) -> int | None:
     """Catalyst's size estimate for `df`'s optimized plan, IF it exceeds
     the session's broadcast threshold — else None.
 
-    This is the size gate the decontamination arms use (round 15, guide
-    §3.2): below the threshold the planner broadcasts the distinct
+    This is the size gate decontamination uses: below the threshold the
+    planner broadcasts the distinct
     train-gram side and the semi-join is already shuffle-free on the
     eval side, so a Bloom pre-filter would only add work; above it the
     join degrades to a full shuffle of the eval gram stream and the
@@ -195,7 +196,7 @@ def _past_broadcast_scale(df: DataFrame) -> int | None:
 def _bloom_prefilter(ev: DataFrame, tr_items: DataFrame, col: str,
                      est_bytes: int) -> DataFrame:
     """Drop definitely-uncontaminated rows from the eval gram stream
-    BEFORE the exact semi-join shuffles it (guide §3.2): fold the train
+    BEFORE the exact semi-join shuffles it: fold the train
     grams into a broadcast Bloom bitmap (bounded bit_or shuffle — grams
     never distinct, never move) and keep only eval rows whose gram
     might be present.  No false negatives, so the semi-join result is
@@ -213,18 +214,32 @@ def _bloom_prefilter(ev: DataFrame, tr_items: DataFrame, col: str,
     return bloom_filter_members(ev, col, bitmap, m_bits)
 
 
-def _contaminated_ids(ev: DataFrame, tr_grams: DataFrame, key: str,
+def _gram_stream(df: DataFrame, text_col: str, id_col: str, k: int,
+                 hashed: bool) -> DataFrame:
+    """(doc, gram): one row per distinct word k-gram of each document —
+    the gram string, or its xxhash64 long when `hashed`.  The narrow scan
+    is fanned out first: shingling is the CPU-dominant map work."""
+    grams = (
+        shingle_hash_array(F.col(text_col), k)
+        if hashed
+        else shingle_array(F.col(text_col), k)
+    )
+    return _fan_out(df, id_col).select(
+        F.col(id_col).alias("doc"), F.explode(grams).alias("gram")
+    )
+
+
+def _contaminated_ids(ev: DataFrame, tr_grams: DataFrame,
                       train_text: DataFrame, id_col: str) -> DataFrame:
-    """The tail both decontamination arms share: `ev` is (doc, key) eval
-    grams, `tr_grams` the train grams in the one column `key`.  Above
-    broadcast scale of `train_text` the eval grams are Bloom-pre-filtered;
-    then one semi-join against the distinct train grams, and the distinct
-    eval doc ids, named `id_col`."""
+    """`ev` is (doc, gram) eval grams, `tr_grams` the train grams in the
+    one column `gram`.  Above broadcast scale of `train_text` the eval
+    grams are Bloom-pre-filtered; then one semi-join against the distinct
+    train grams, and the distinct eval doc ids, named `id_col`."""
     est = _past_broadcast_scale(train_text)
     if est is not None:
-        ev = _bloom_prefilter(ev, tr_grams, key, est)
+        ev = _bloom_prefilter(ev, tr_grams, "gram", est)
     return (
-        ev.join(tr_grams.distinct(), key, "left_semi")
+        ev.join(tr_grams.distinct(), "gram", "left_semi")
         .select(F.col("doc").alias(id_col))
         .distinct()
     )
@@ -236,10 +251,21 @@ def contaminated_docs(
     text_col: str,
     id_col: str,
     k: int = 3,
+    hashed: bool = False,
 ) -> DataFrame:
     """Benchmark decontamination: eval docs sharing ANY word k-gram with the
     training corpus. Shingle both sides (same shingling as MinHash dedup),
     distinct the train side, one semi-join. Returns distinct eval ids.
+
+    `hashed=True` shingles both sides straight to xxhash64 longs
+    (`shingle_hash_array`) and semi-joins on the hashes — no gram string
+    ever reaches a shuffle.  A false positive needs a 64-bit collision
+    between an eval gram and any train gram (~2^-64 per pair), which
+    does not change the doc-id set at any realistic corpus size, so the
+    string form's SQL oracle verifies this one too.  This is the form to
+    run at 100 TB: fixed-width long keys cut shuffle bytes (a 3-gram
+    string averages ~20 bytes; the hash is 8) and compare in constant
+    time.
 
     Above broadcast scale (the train relation's plan estimate exceeds
     the session broadcast threshold — see `_past_broadcast_scale`), the
@@ -248,42 +274,9 @@ def contaminated_docs(
     bounded by (probably-contaminated + fp) grams instead of every eval
     gram.  Below the threshold nothing changes — the planner already
     broadcasts the train side."""
-    ev = shingles(_fan_out(eval_df, id_col), text_col, id_col, k=k)
-    tr_grams = shingles(_fan_out(train_df, id_col), text_col, id_col, k=k)
-    return _contaminated_ids(
-        ev, tr_grams.select("shingle"), "shingle",
-        train_df.select(text_col), id_col,
-    )
-
-
-def contaminated_docs_hashed(
-    eval_df: DataFrame,
-    train_df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-) -> DataFrame:
-    """`contaminated_docs` with 8-byte shuffle keys: both sides shingle
-    straight to xxhash64 longs (`shingle_hash_array`) and the semi-join
-    runs on the hashes — no gram string ever reaches a shuffle.
-
-    A false positive needs a 64-bit collision between an eval gram and
-    any train gram (~2^-64 per pair), which does not change the doc-id
-    set at any realistic corpus size — so the string variant's SQL
-    oracle verifies this one too.  This is the variant to run at 100 TB:
-    fixed-width long keys cut shuffle bytes (a 3-gram string averages
-    ~20 bytes; the hash is 8) and compare in constant time.
-
-    Size-gated Bloom pre-filter above broadcast scale, exactly as in
-    `contaminated_docs` (the hashes feed the same bitmap build)."""
-    ev = _fan_out(eval_df, id_col).select(
-        F.col(id_col).alias("doc"),
-        F.explode(shingle_hash_array(F.col(text_col), k)).alias("h"),
-    )
-    tr_grams = _fan_out(train_df, id_col).select(
-        F.explode(shingle_hash_array(F.col(text_col), k)).alias("h")
-    )
-    return _contaminated_ids(ev, tr_grams, "h", train_df.select(text_col), id_col)
+    ev = _gram_stream(eval_df, text_col, id_col, k, hashed)
+    tr_grams = _gram_stream(train_df, text_col, id_col, k, hashed).select("gram")
+    return _contaminated_ids(ev, tr_grams, train_df.select(text_col), id_col)
 
 
 def pack_into_bins(
@@ -432,8 +425,7 @@ def stratified_sample(
     ranks each stratum by the deterministic shuffle_key: reproducible
     across runs and engines.
 
-    Scale shape (round 10 — this function's own skew note, implemented):
-    ranking runs through grouped_topk's salted two-phase window, so a
+    Scale shape: ranking runs through grouped_topk's salted two-phase window, so a
     pathologically hot stratum (half the corpus is English) fans over
     n_salt tasks in phase 1 and only quota*n_salt survivors reach the
     per-stratum final rank — the textbook single-window form serializes

@@ -36,9 +36,9 @@ from hiero_spark.functions.dedup import (
 # The persist inside _collapsed_sized is load-bearing (4 consumers read
 # each `sized`; without it Spark recomputes the shingle->df->sort->collapse
 # chain per consumer, measured 154 s -> 68 s at the 1M-doc skew corpus) but
-# invisible to callers — long-lived drivers must be able to release it
-# (round-9 ADVICE).  The shared tracker (functions/_cachetrack.py) owns the
-# registry; release_caches is re-exported here for the operator's users.
+# invisible to callers — long-lived drivers must be able to release it.
+# The shared tracker (functions/_cachetrack.py) owns the registry;
+# release_caches is re-exported here for the operator's users.
 from hiero_spark.functions._cachetrack import (
     persist_tracked as _persist_tracked,
     release_caches,
@@ -60,10 +60,10 @@ def _collapsed_sized(
     (sd, id, n_ids, [ids], s, prefix) — sd/prefix keep (df, tok) structs
     so posting sides can prune df==1 tokens without a second corpus pass.
 
-    The collapse (round-8 verdict #3, extended to Jaccard in round 10): a
-    doc that is pure boilerplate has nothing but hot tokens, so its prefix
-    is unavoidably hot — g verbatim copies generate g*df candidates and
-    g^2 verify rows for what is ONE set-level relationship.  Grouping by
+    The collapse: a doc that is pure boilerplate has nothing but hot
+    tokens, so its prefix is unavoidably hot — g verbatim copies
+    generate g*df candidates and g^2 verify rows for what is ONE
+    set-level relationship.  Grouping by
     the ordered array costs one shuffle of the same (id, sd) volume the
     ordered agg already produced, and turns the hot-copy regime from
     O(copies * df) into O(df): measured 525M -> 100k candidates on a
@@ -85,8 +85,8 @@ def _collapsed_sized(
     # the ordered-array rebuild below; without a persist each branch
     # re-runs the shingle expression (regex split + k-fold zip_with +
     # array_distinct over every document) — the CPU-dominant map work of
-    # the whole operator, paid twice (round-14 measurement: the doubled
-    # shingling was ~1/3 of n1_containment_join's wall time at sf0.1)
+    # the whole operator, paid twice (measured: the doubled shingling
+    # was ~1/3 of n1_containment_join's wall time at sf0.1)
     # fan out before the map-heavy shingle projection (the
     # minhash_near_dups contract): a single-file local scan arrives as
     # ONE partition, which would serialize the dominant map stage onto
@@ -160,9 +160,9 @@ def _jaccard_prepared(
     # PPJoin length filter — sound pruning before the pair dedup/verify:
     # J(a,b) >= t forces t*|b| <= |a| (and symmetrically), so pairs whose
     # set sizes are too far apart never even form a candidate.  Same-size
-    # hot groups used to pass this filter verbatim (g copies -> g^2/2
-    # candidates, the round-9 verdict's last quadratic); the identical-set
-    # collapse in _collapsed_sized removes them before this join runs.
+    # hot groups pass this filter verbatim (g copies -> g^2/2
+    # candidates); the identical-set collapse in _collapsed_sized removes
+    # them before this join runs.
     tt = float(threshold)
     pairs = (
         a.join(b, "tok")
@@ -194,6 +194,37 @@ def jaccard_candidates(
     return pairs
 
 
+def _verify_rows(
+    docs: DataFrame, sized: DataFrame, pairs: DataFrame, expand: bool
+) -> DataFrame:
+    """Join the deduped candidate GROUP pairs back to both groups' arrays:
+    (id_a, id_b, s_a, n_ids_a[, ids_a], s_b, n_ids_b[, ids_b]) — the input
+    of both joins' verify step.
+
+    The pair list is re-widened first: the pair-dedup shuffle is a few
+    bytes per pair, so AQE's byte-targeted coalescing collapses it to one
+    partition — and then the verify stage (array joins + per-pair
+    array_intersect, the CPU-dense step) runs on ONE task.  A keyed
+    repartition to the session's parallelism costs one narrow shuffle of
+    (id_a, id_b) longs and spreads the verify across the cluster; at
+    100 TB the pair list is large enough that AQE would keep it wide
+    anyway and this is a no-op-sized exchange on 16-byte rows.  Measured
+    at sf0.1: verify chain 4.0 s -> 1.35 s."""
+    pairs = pairs.repartition(
+        docs.sparkSession.sparkContext.defaultParallelism, "id_a"
+    )
+    extra = ["ids"] if expand else []
+
+    def side(tag: str) -> DataFrame:
+        return sized.select(
+            F.col("id").alias(f"id_{tag}"), F.col("s").alias(f"s_{tag}"),
+            F.col("n_ids").alias(f"n_ids_{tag}"),
+            *[F.col(c).alias(f"{c}_{tag}") for c in extra],
+        )
+
+    return pairs.join(side("a"), "id_a").join(side("b"), "id_b")
+
+
 def jaccard_join(
     docs: DataFrame,
     threshold: float = 0.8,
@@ -213,10 +244,10 @@ def jaccard_join(
     space is where prefix filtering actually prunes).
 
     Identical shingle sets are collapsed to one representative before any
-    candidate is generated (round-10: the same collapse containment_join
-    and entity resolution got).  g verbatim copies of a document used to
-    pass the length filter verbatim and generate g^2/2 candidate AND
-    verify pairs; collapsed, the duplicate group contributes ONE
+    candidate is generated (the same collapse containment_join and
+    entity resolution use).  g verbatim copies of a document would pass
+    the length filter verbatim and generate g^2/2 candidate AND verify
+    pairs; collapsed, the duplicate group contributes ONE
     representative to candidate generation and its intra-group clique is
     emitted arithmetically.
 
@@ -244,31 +275,7 @@ def jaccard_join(
     sized, pairs = _jaccard_prepared(
         docs, threshold, k, text_col, id_col, hashed, expand=expand_identical
     )
-    # Re-widen the deduped pair list before the verify joins (round-14):
-    # the pair-dedup shuffle is a few bytes per pair, so AQE's
-    # byte-targeted coalescing collapses it to one partition — and then
-    # the verify stage (array joins + per-pair array_intersect, the
-    # CPU-dense step) runs on ONE task.  A keyed repartition to the
-    # session's parallelism costs one narrow shuffle of (id_a, id_b)
-    # longs and spreads the verify across the cluster; at 100 TB the
-    # pair list is large enough that AQE would keep it wide anyway and
-    # this is a no-op-sized exchange on 16-byte rows.  Measured at
-    # sf0.1: verify chain 4.0 s -> 1.35 s.
-    pairs = pairs.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, "id_a"
-    )
-    extra = ["ids"] if expand_identical else []
-    side_a = sized.select(
-        F.col("id").alias("id_a"), F.col("s").alias("s_a"),
-        F.col("n_ids").alias("n_ids_a"),
-        *[F.col(c).alias(f"{c}_a") for c in extra],
-    )
-    side_b = sized.select(
-        F.col("id").alias("id_b"), F.col("s").alias("s_b"),
-        F.col("n_ids").alias("n_ids_b"),
-        *[F.col(c).alias(f"{c}_b") for c in extra],
-    )
-    cand = pairs.join(side_a, "id_a").join(side_b, "id_b")
+    cand = _verify_rows(docs, sized, pairs, expand_identical)
     inter = F.size(F.array_intersect("s_a", "s_b"))
     union = F.size("s_a") + F.size("s_b") - inter
     jac = inter.cast("double") / union.cast("double")
@@ -414,8 +421,8 @@ def containment_join(
     _containment_prepared), which closes the pure-boilerplate hole where
     a hot snippet's verbatim copies each carried a hot prefix token.
     The length filter |B| >= t*|A| prunes before pair dedup; arrays join
-    back once per side onto the deduped pair list (the jaccard_join
-    shape).
+    back once per side onto the deduped pair list (`_verify_rows`, shared
+    with jaccard_join).
 
     ``expand_identical=False`` is the extreme-duplication arm: instead of
     materializing member-level pairs (g copies quoted in p pages = g*p
@@ -431,25 +438,7 @@ def containment_join(
     sized, pairs = _containment_prepared(
         docs, threshold, k, text_col, id_col, hashed, expand=expand_identical
     )
-    # re-widen the coalesced pair list before the CPU-dense verify joins
-    # (see jaccard_join: AQE coalesces the tiny pair shuffle to one
-    # partition and serializes the array_intersect stage; measured
-    # 4.0 s -> 1.35 s at sf0.1, scale-safe by the same argument)
-    pairs = pairs.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, "id_a"
-    )
-    extra = ["ids"] if expand_identical else []
-    side_a = sized.select(
-        F.col("id").alias("id_a"), F.col("s").alias("s_a"),
-        F.col("n_ids").alias("n_ids_a"),
-        *[F.col(c).alias(f"{c}_a") for c in extra],
-    )
-    side_b = sized.select(
-        F.col("id").alias("id_b"), F.col("s").alias("s_b"),
-        F.col("n_ids").alias("n_ids_b"),
-        *[F.col(c).alias(f"{c}_b") for c in extra],
-    )
-    cand = pairs.join(side_a, "id_a").join(side_b, "id_b")
+    cand = _verify_rows(docs, sized, pairs, expand_identical)
     inter = F.size(F.array_intersect("s_a", "s_b"))
     cont = inter.cast("double") / F.size("s_a").cast("double")
     inter_groups = cand.filter(cont >= tt).select(

@@ -21,7 +21,7 @@ Scale shape:
 The gram key travels as the STRING (DuckDB has no xxhash64, and the
 oracle must recompute identical keys); a production run at 100 TB
 passes hashed=True to shuffle 8-byte xxhash64 longs instead — the same
-string/hashed pairing as contaminated_docs(_hashed), with collisions at
+string/hashed pairing as contaminated_docs(hashed=...), with collisions at
 ~2^-64 per pair.
 
 Reconstruction is canonicalized: tokens are the lowercase/trim/split

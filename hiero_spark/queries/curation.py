@@ -319,14 +319,16 @@ def n1_dedup_incremental(spark, sf_dir):
 )
 def n1_cluster_best(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
+    from hiero_spark.functions.graph import connected_components
+
     pairs = dd.ngram_jaccard_pairs(docs, "text", "doc_id", k=3, threshold=0.4)
-    clusters = dd.dedup_clusters(pairs)
+    comp = connected_components(pairs, src="doc_a", dst="doc_b", n_iter=20)
     quality = docs.select(
-        F.col("doc_id").alias("doc"), tx.quality_score(F.col("text")).alias("quality")
+        F.col("doc_id").alias("node"), tx.quality_score(F.col("text")).alias("quality")
     )
-    joined = clusters.join(quality, "doc")
-    return joined.groupBy("canonical").agg(
-        F.expr("min_by(doc, struct(-quality, doc))").alias("best_doc"),
+    joined = comp.join(quality, "node")
+    return joined.groupBy(F.col("component").alias("canonical")).agg(
+        F.expr("min_by(node, struct(-quality, node))").alias("best_doc"),
         F.round(F.max("quality"), 6).alias("best_quality"),
         F.count(F.lit(1)).alias("cluster_size"),
     )
@@ -938,6 +940,7 @@ def n4_normalize_text(spark, sf_dir):
     """,
 )
 def n5_curation_pipeline2(spark, sf_dir):
+    from hiero_spark.functions._cachetrack import persist_tracked
     from hiero_spark.functions.entropy import char_entropy
     from hiero_spark.functions.normalize import normalize_text
 
@@ -948,9 +951,9 @@ def n5_curation_pipeline2(spark, sf_dir):
     # md5 — unmaterialized, CollapseProject re-runs the regex chain per
     # reference (measured 7.2 s -> 1.4 s at sf0.1); at
     # 100 TB this persist is the checkpoint of the normalized corpus
-    norm = rebuilt.select(
+    norm = persist_tracked(rebuilt.select(
         "doc_id", normalize_text(F.col("new_text")).alias("n")
-    ).persist()
+    ))
     # gate on RAW (unrounded) entropy to mirror the oracle's comparison
     ent = char_entropy(F.col("n"), rounded=False)
     gated = norm.withColumn(

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from hiero_spark.functions import dedup as dd
 from hiero_spark.functions import similarity as sim
+from hiero_spark.functions.graph import connected_components
 from hiero_spark.functions import text as tx
 from hiero_spark.registry import query
 from hiero_spark.queries._util import t
@@ -1026,7 +1027,8 @@ def n2_ann_batch(spark, sf_dir):
     "n1_dedup_clusters",
     group="N1",
     doc="Near-dup clustering: connected components over exact-Jaccard pairs "
-        "(hash-min label propagation), canonical = min doc id per component "
+        "(graph.connected_components: hash-min label propagation with "
+        "pointer jumping), canonical = min doc id per component "
         "— the keep-one-representative step of a dedup pipeline. Oracle "
         "recomputes components with a recursive CTE.",
     oracle=r"""
@@ -1061,7 +1063,10 @@ def n1_dedup_clusters(spark, sf_dir):
     pairs = dd.ngram_jaccard_pairs(
         t(spark, sf_dir, "documents"), "text", "doc_id", k=3, threshold=0.4
     )
-    return dd.dedup_clusters(pairs)
+    comp = connected_components(pairs, src="doc_a", dst="doc_b", n_iter=20)
+    return comp.select(
+        F.col("node").alias("doc"), F.col("component").alias("canonical")
+    )
 
 
 @query(
@@ -1525,7 +1530,7 @@ def n6_triplets(spark, sf_dir):
         "docs dedup removes): per component size, cluster count, docs "
         "covered, and removable docs (size-1 each); unclustered docs "
         "report as the size-1 row with zero removable. Same component "
-        "derivation as n1_dedup_clusters (hash-min label propagation / "
+        "derivation as n1_dedup_clusters (graph.connected_components / "
         "recursive-CTE oracle); the distribution is two bounded "
         "aggregates on top.",
     oracle=r"""
@@ -1575,15 +1580,15 @@ def n6_triplets(spark, sf_dir):
 def n1_cluster_sizes(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     pairs = dd.ngram_jaccard_pairs(docs, "text", "doc_id", k=3, threshold=0.4)
-    comp = dd.dedup_clusters(pairs)
-    csz = comp.groupBy("canonical").agg(F.count(F.lit(1)).alias("sz"))
+    comp = connected_components(pairs, src="doc_a", dst="doc_b", n_iter=20)
+    csz = comp.groupBy("component").agg(F.count(F.lit(1)).alias("sz"))
     clustered = csz.groupBy(F.col("sz").cast("long").alias("cluster_size")).agg(
         F.count(F.lit(1)).cast("long").alias("n_clusters"),
         F.sum("sz").cast("long").alias("n_docs"),
         F.sum(F.col("sz") - 1).cast("long").alias("n_removable"),
     )
     singles = (
-        docs.join(comp, docs["doc_id"] == comp["doc"], "left_anti")
+        docs.join(comp, docs["doc_id"] == comp["node"], "left_anti")
         .agg(F.count(F.lit(1)).cast("long").alias("n_clusters"))
         .select(
             F.lit(1).cast("long").alias("cluster_size"),

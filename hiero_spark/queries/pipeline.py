@@ -155,12 +155,13 @@ def n6_decontamination(spark, sf_dir):
 )
 def n6_decontamination_hashed(spark, sf_dir):
     docs = pl.assign_split(t(spark, sf_dir, "documents"), "doc_id")
-    return pl.contaminated_docs_hashed(
+    return pl.contaminated_docs(
         docs.filter(F.col("split") == "test"),
         docs.filter(F.col("split") == "train"),
         "text",
         "doc_id",
         k=3,
+        hashed=True,
     )
 
 
@@ -205,7 +206,7 @@ def n6_decontamination_bloom(spark, sf_dir):
     ev = docs.filter(F.col("split") == "test")
     tr = docs.filter(F.col("split") == "train")
     flagged = bl.contaminated_docs_bloom(ev, tr, "text", "doc_id", k=3)
-    exact = pl.contaminated_docs_hashed(ev, tr, "text", "doc_id", k=3)
+    exact = pl.contaminated_docs(ev, tr, "text", "doc_id", k=3, hashed=True)
     missed = exact.join(flagged, "doc_id", "left_anti")
     extras = flagged.join(exact, "doc_id", "left_anti")
     return (

@@ -338,26 +338,27 @@ class HieroHandler(BaseHTTPRequestHandler):
                 # fn() itself is inside the try: eager operators can
                 # register tracked persists and THEN raise at build time;
                 # those must be released on this request too, not left
-                # for the next request to drain (round-10 ADVICE).
+                # for the next request to drain.
                 try:
                     df = specs[parts[2]].fn(self.spark, self.sf_dir)
-                    return self._send(
-                        {
-                            "query": parts[2],
-                            "columns": df.columns,
-                            "rows": _rows(df, int(q.get("limit", [MAX_ROWS])[0])),
-                        }
-                    )
+                    payload = {
+                        "query": parts[2],
+                        "columns": df.columns,
+                        "rows": _rows(df, int(q.get("limit", [MAX_ROWS])[0])),
+                    }
                 finally:
                     # set-similarity/minhash operators persist internal
                     # frames for their multi-consumer plans; a long-lived
                     # server must release them per request or the caches
-                    # accumulate for the session (round-9 ADVICE)
+                    # accumulate for the session.  Released BEFORE the
+                    # response goes out, so a client that has its answer
+                    # sees the session's caches as they were before.
                     from hiero_spark.functions._cachetrack import (
                         release_caches,
                     )
 
                     release_caches()
+                return self._send(payload)
             if parts[:2] == ["api", "sql"]:
                 sql = q.get("q", [""])[0]
                 _reject_unsafe_sql(self.spark, sql, set(catalog.TABLES))

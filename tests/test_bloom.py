@@ -49,7 +49,7 @@ def test_contaminated_bloom_superset(spark, sf_dir):
     ev = docs.filter(F.col("split") == "test")
     tr = docs.filter(F.col("split") == "train")
     flagged = bl.contaminated_docs_bloom(ev, tr, "text", "doc_id", k=3)
-    exact = pl.contaminated_docs_hashed(ev, tr, "text", "doc_id", k=3)
+    exact = pl.contaminated_docs(ev, tr, "text", "doc_id", k=3, hashed=True)
     missed = exact.join(flagged, "doc_id", "left_anti").count()
     assert missed == 0
     extras = flagged.join(exact, "doc_id", "left_anti").count()

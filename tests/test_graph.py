@@ -36,7 +36,7 @@ def test_rank_mass_reasonable(spark):
     assert got[0] > 10 * 150000  # the hub collects the mass
 
 
-# --- connected components (round-8 continuation) ------------------------
+# --- connected components ------------------------------------------------
 
 
 def test_cc_ring_and_bridge(spark):
@@ -80,7 +80,7 @@ def test_cc_pointer_jump_beats_linear_propagation(spark):
 def test_cc_reach_recurrence_boundary_is_exactly_14_at_3_rounds(spark):
     """Pins the reach recurrence: neighbor-min adds 1 hop, the pointer
     jump doubles, so reach after r rounds is d_r = 2*(d_{r-1}+1) ->
-    d_3 = 14 EXACTLY on a path.  With the round-15 convergence cap the
+    d_3 = 14 EXACTLY on a path.  Under the convergence cap the
     boundary still shows whenever the cap binds below convergence.
 
     Both sides of the boundary are asserted so the test fails if the
@@ -108,15 +108,13 @@ def test_cc_reach_recurrence_boundary_is_exactly_14_at_3_rounds(spark):
 
 
 def test_cc_niter_is_a_convergence_cap_not_a_round_count(spark):
-    """Round-15 semantic fix (round-14 verdict #1): n_iter used to be an
-    ASSUMED round count — a graph whose diameter exceeded the cap's
-    reach silently got wrong labels.  Now every round's neighbor-min
-    carries the prior label through the aggregation (the dedup_clusters
-    fusion) and the loop exits the round after nothing changes, so a
-    generous cap costs nothing once converged and a deep graph keeps
-    iterating.  A diameter-15 path — the old test pinned this shape as
-    NOT converged at the round-14 call-site setting — must now converge
-    exactly under a high cap."""
+    """n_iter is a convergence cap, not an assumed round count: every
+    round's neighbor-min carries the prior label through the
+    aggregation and the loop exits the round after nothing changes, so
+    a generous cap costs nothing once converged and a deep graph keeps
+    iterating instead of silently returning unconverged labels.  A
+    diameter-15 path (not closed by 3 rounds) must converge exactly
+    under a high cap."""
     from hiero_spark.functions.graph import connected_components
 
     edges = spark.createDataFrame(
@@ -136,11 +134,11 @@ def test_cc_niter_is_a_convergence_cap_not_a_round_count(spark):
 
 
 def test_cc_shipped_workload_shapes_converge_at_3_rounds(spark):
-    """The two round-14 call sites lowered n_iter to 3 on a convergence
-    argument (block diameter 7 for the planted chains of 8; observed
-    diameter 2 for the entity-resolution stars).  Reproduce both shapes
-    at operator level and assert n_iter=3 is already the fixed point:
-    identical labels to n_iter=4, and exactly the expected components."""
+    """The two shipped workload shapes converge within 3 rounds (block
+    diameter 7 for the planted chains of 8; observed diameter 2 for the
+    entity-resolution stars).  Reproduce both shapes at operator level
+    and assert n_iter=3 is already the fixed point: identical labels to
+    n_iter=4, and exactly the expected components."""
     from hiero_spark.functions.graph import connected_components
 
     # n7 shape: consecutive chains of 8 (diameter 7), 16 blocks.
@@ -169,13 +167,15 @@ def test_cc_shipped_workload_shapes_converge_at_3_rounds(spark):
     assert er3[5] == 0 and er3[1_000_005] == 0 and er3[1_000_010] == 10
 
 
-def test_prepartition_gate_is_size_adaptive_not_constant(spark, sf_dir):
-    """Round-15 (r14 verdict #6): the loop-invariant edge relation is
-    hash-partitioned + persisted ONLY above a size threshold (conf,
-    default 1g).  Below it the local behavior is unchanged
-    (localCheckpoint; a fixed pre-partition was measured 2x worse at
-    local scale in r14); above it the planner must see the keyed
-    partitioning.  Results must be identical either way."""
+def test_prepartition_gate_is_size_adaptive_not_constant(
+    spark, sf_dir, monkeypatch
+):
+    """The loop-invariant edge relation is hash-partitioned + persisted
+    ONLY above a size threshold (`_PREPARTITION_BYTES`, 1 GiB).  Below
+    it the local behavior is unchanged (localCheckpoint; a fixed
+    pre-partition was measured 2x worse at local scale); above it the
+    planner must see the keyed partitioning.  Results must be identical
+    either way."""
     from pyspark.sql import functions as F
 
     from hiero_spark.functions import graph as G
@@ -197,7 +197,7 @@ def test_prepartition_gate_is_size_adaptive_not_constant(spark, sf_dir):
     # gate ON under a 1-byte threshold: cached keyed repartition, and
     # the partitioning is VISIBLE to the planner (the whole point —
     # a checkpoint would erase it)
-    spark.conf.set(G._PREPARTITION_CONF, "1")
+    monkeypatch.setattr(G, "_PREPARTITION_BYTES", 1)
     try:
         on = G._pin_wide(df, "u")
         on_plan = on._jdf.queryExecution().optimizedPlan().toString()
@@ -209,7 +209,7 @@ def test_prepartition_gate_is_size_adaptive_not_constant(spark, sf_dir):
             map(tuple, G.bfs_levels(edges, src_df, max_hops=2).collect())
         )
     finally:
-        spark.conf.unset(G._PREPARTITION_CONF)
+        monkeypatch.undo()
         release_caches()
         spark.catalog.clearCache()
     plain = sorted(
@@ -218,7 +218,7 @@ def test_prepartition_gate_is_size_adaptive_not_constant(spark, sf_dir):
     assert gated == plain
 
 
-# --- BFS levels (round-8 continuation) -----------------------------------
+# --- BFS levels ----------------------------------------------------------
 
 
 def test_bfs_hand_built_chain_and_branch(spark):
@@ -266,7 +266,7 @@ def test_bfs_early_exit_on_empty_frontier(spark):
     assert got == {0: 0, 1: 1}
 
 
-# --- Bellman-Ford (round-8 continuation) ----------------------------------
+# --- Bellman-Ford --------------------------------------------------------
 
 
 def _wedges(spark, triples):
@@ -305,7 +305,7 @@ def test_bf_round_bound_is_leg_bound(spark):
     assert got == {0: 0, 1: 1, 2: 2}
 
 
-# --- label propagation (round-8 continuation) ------------------------------
+# --- label propagation ---------------------------------------------------
 
 
 def test_lp_seeds_clamped_and_majority_wins(spark):
@@ -348,9 +348,8 @@ def test_lp_propagates_by_rounds_and_skips_unreached(spark):
     assert three == {0: 5, 1: 5, 2: 5, 3: 5}  # island never labeled
 
 
-# --- differential fuzz (round-8 continuation): random graphs vs a pure-
-# Python reference — the window/set-op fuzzer discipline applied to the
-# iterative graph operators
+# --- differential fuzz: random graphs vs a pure-Python reference — the
+# window/set-op fuzzer discipline applied to the iterative graph operators
 
 
 def _py_bfs(edges, sources, max_hops):
@@ -563,10 +562,23 @@ def test_cc_fuzz_vs_python_reference(spark):
     """connected_components (hash-min + pointer jumping) vs union-find
     on random graphs — the CC fuzz the BFS/BF/k-core trio already had.
     n_iter=5 pointer-jumping rounds cover label distance 2^5, far past
-    any 24-node diameter."""
+    any 24-node diameter.  The fixed first case is the near-dup pair
+    shape the dedup cluster queries feed it: chain 1-2-3-4 plus the
+    pair 10-11, on their (doc_a, doc_b) columns."""
     import random
 
     from hiero_spark.functions.graph import connected_components
+
+    chain_and_pair = [(1, 2), (2, 3), (3, 4), (10, 11)]
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(
+            spark.createDataFrame(chain_and_pair, "doc_a long, doc_b long"),
+            src="doc_a", dst="doc_b", n_iter=20,
+        ).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    assert got == _py_components(chain_and_pair)
 
     rng = random.Random(4242)
     for trial in range(5):

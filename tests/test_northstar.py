@@ -386,16 +386,6 @@ def test_multimodal_resize_plumbing(spark, sf_dir):
     assert all(bytes(r["payload"]) == orig[r["media_id"]] for r in rows)
 
 
-def test_dedup_clusters_chain_and_pair(spark):
-    from hiero_spark.functions import dedup as dd
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11)], "doc_a long, doc_b long"
-    )
-    got = {r["doc"]: r["canonical"] for r in dd.dedup_clusters(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
-
-
 def test_kmeans_fit_reduces_sse_and_converges(spark):
     import random
 

@@ -68,8 +68,8 @@ def test_contaminated_docs_exact(decontam_frames):
     assert got == {10}
 
 
-@pytest.mark.parametrize("arm", [pl.contaminated_docs, pl.contaminated_docs_hashed])
-def test_contaminated_docs_bloom_gate_forced_open(spark, decontam_frames, monkeypatch, arm):
+@pytest.mark.parametrize("hashed", [False, True])
+def test_contaminated_docs_bloom_gate_forced_open(spark, decontam_frames, monkeypatch, hashed):
     """A 1-byte broadcast threshold opens the size gate, so the Bloom
     pre-filter runs; the id set must equal the gate-closed answer."""
     evals, train = decontam_frames
@@ -78,13 +78,18 @@ def test_contaminated_docs_bloom_gate_forced_open(spark, decontam_frames, monkey
     monkeypatch.setattr(
         pl, "_bloom_prefilter", lambda *a: calls.append(a) or real(*a)
     )
-    closed = {r["doc_id"] for r in arm(evals, train, "text", "doc_id").collect()}
+
+    def ids():
+        out = pl.contaminated_docs(evals, train, "text", "doc_id", hashed=hashed)
+        return {r["doc_id"] for r in out.collect()}
+
+    closed = ids()
     assert not calls
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     spark.conf.set(key, "1")
     try:
-        opened = {r["doc_id"] for r in arm(evals, train, "text", "doc_id").collect()}
+        opened = ids()
     finally:
         spark.conf.set(key, old)
     assert len(calls) == 1

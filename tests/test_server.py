@@ -61,6 +61,19 @@ def test_run_registered_query(api, spark):
     assert len(body["rows"]) == direct.limit(10).count()
 
 
+@pytest.mark.parametrize(
+    "name", ["n1_incremental_near_dups", "n5_curation_pipeline2"]
+)
+def test_query_request_releases_its_persists(api, spark, name):
+    """A query whose operators persist internally leaves no cached frame
+    behind once the response is sent: those persists are tracked, and
+    the server releases the tracked frames per request."""
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    status, body = _get(api, f"/api/query/{name}?limit=5")
+    assert status == 200 and body["rows"]
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 def test_unknown_query_404(api):
     with pytest.raises(urllib.error.HTTPError) as e:
         _get(api, "/api/query/nope")
