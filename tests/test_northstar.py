@@ -386,6 +386,19 @@ def test_multimodal_resize_plumbing(spark, sf_dir):
     assert all(bytes(r["payload"]) == orig[r["media_id"]] for r in rows)
 
 
+def test_dedup_clusters_chain_and_pair(spark):
+    """The cluster step of n1_dedup_clusters on its near-dup pair
+    columns: connected components labelled by the min doc id."""
+    from hiero_spark.functions.graph import connected_components
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "doc_a long, doc_b long"
+    )
+    comp = connected_components(pairs, src="doc_a", dst="doc_b", n_iter=20)
+    got = {r["node"]: r["component"] for r in comp.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+
+
 def test_kmeans_fit_reduces_sse_and_converges(spark):
     import random
 

@@ -27,6 +27,15 @@ def _get(base, path):
         return r.status, json.loads(r.read())
 
 
+def _persisted_ids(spark):
+    """Ids of the session's persisted RDDs.  Compared as sets, not
+    counts: the JVM's ContextCleaner may unpersist an unreferenced
+    earlier RDD mid-request, which shrinks the count without saying
+    anything about what the request itself left behind."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(i) for i in rdds.keySet()}
+
+
 def test_tables_catalog(api):
     status, body = _get(api, "/api/tables")
     assert status == 200
@@ -68,10 +77,10 @@ def test_query_request_releases_its_persists(api, spark, name):
     """A query whose operators persist internally leaves no cached frame
     behind once the response is sent: those persists are tracked, and
     the server releases the tracked frames per request."""
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    before = _persisted_ids(spark)
     status, body = _get(api, f"/api/query/{name}?limit=5")
     assert status == 200 and body["rows"]
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    assert _persisted_ids(spark) - before == set()
 
 
 def test_unknown_query_404(api):
@@ -290,7 +299,7 @@ def test_progressive_merge_mode_final_equals_prefix_exact(api):
 def test_progressive_merge_releases_its_persists(api, spark):
     """A drained merge-mode stream unpersists the per-tier partials it
     cached, so a long-lived server does not accumulate them."""
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    before = _persisted_ids(spark)
     url = (
         api
         + "/api/progressive/histogram?table=lineitem&col=l_quantity"
@@ -299,7 +308,7 @@ def test_progressive_merge_releases_its_persists(api, spark):
     with urllib.request.urlopen(url, timeout=300) as r:
         lines = [json.loads(x) for x in r.read().splitlines() if x.strip()]
     assert [ln["fraction"] for ln in lines][-1] == 1.0
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    assert _persisted_ids(spark) - before == set()
 
 
 def test_progressive_bad_mode_400(api):
@@ -396,7 +405,7 @@ def test_progressive_disconnect_cancels_job_group(api, spark, mode,
 
     monkeypatch.setattr(progressive, "progressive_merge", holding_merge)
     before = set(srv_mod._STREAMS)
-    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    persisted = _persisted_ids(spark)
     u = urlparse(api)
     tiers = 16
     path = (
@@ -430,7 +439,7 @@ def test_progressive_disconnect_cancels_job_group(api, spark, mode,
     assert state["cancelled"], state
     assert state["done"], state
     assert len(held) == (mode == "merge")
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    assert _persisted_ids(spark) - persisted == set()
     # early stop: nowhere near all 16 tiers were computed for a dead reader
     assert state["tiers_done"] < tiers, state
     # the fraction-done meter froze below 1.0 where the cancel landed
