@@ -1,10 +1,12 @@
-"""Numpy-vectorized block arm of the vendored codec ladder (round-10
-verdict item 4).
+"""Numpy-vectorized decode arm: the one runtime decode path of
+multimodal.py.
 
 The scalar decoders in jpeg.py / multimodal.py are the spec-reference
 implementations — scalar Python on purpose, cited line-by-line by the
-hand-vector tests.  This module is the THROUGHPUT arm: identical container
-parsing and entropy decoding (shared code, not copies — see
+hand-vector tests, which compare this arm against them.  This module is
+what `decode_image`, `decode_audio` (PCM16), `resize_images` and the
+frame-luma and average-hash steps run: identical container parsing and
+entropy decoding (shared code, not copies — see
 `jpeg.decode_jpeg(assemble=...)` and `multimodal._parse_png`), with the
 embarrassingly-data-parallel stages rewritten over numpy arrays:
 
@@ -30,9 +32,10 @@ where both clamp to 0).
 
 Decoded pixels stay numpy end-to-end here — (w, h, uint8 array (h, w, 3))
 — and only the final feature floats cross back into Python, which is
-where the 10-100x over per-pixel tuple building comes from.  The Spark
-contract is unchanged: `decode_image` (multimodal.py) calls this arm
-first inside the same mapInPandas batches.
+where the 10-100x over per-pixel tuple building comes from.  Bytes this
+arm rejects are rejected by the scalar arm too (pinned per payload family
+in tests/test_codec_np.py), so callers go straight to the stub (or, for
+audio, to the IMA-ADPCM decoder) without a second scalar pass.
 """
 
 from __future__ import annotations
@@ -273,8 +276,8 @@ def nn_resize_rows(decoded, width: int, height: int):
 
 
 def decode_pixels_np(payload: bytes):
-    """The numpy decode ladder: BMP, then PNG, then JPEG — same order and
-    same accept/reject behavior as decode_image's vendored ladder.
+    """The numpy decode: BMP, then PNG, then JPEG — the same order and
+    the same accept/reject behavior as the scalar reference decoders.
     Returns (w, h, uint8 (h, w, 3)) or None."""
     return (
         decode_bmp_np(payload)
@@ -284,7 +287,7 @@ def decode_pixels_np(payload: bytes):
 
 
 def decode_wav_np(payload: bytes):
-    """Vectorized half of the PCM16 WAV decode (round-11): container
+    """Vectorized half of the PCM16 WAV decode: container
     parsing shared with the scalar arm (multimodal._parse_wav_pcm), the
     per-sample channel mixdown done as array ops.  Returns
     (mono float64 ndarray, rate, channels) or None.
@@ -294,7 +297,7 @@ def decode_wav_np(payload: bytes):
     unbounded int there), and both then apply the same two float64
     divisions in the same order (/ channels, / 32768.0).
 
-    IMA-ADPCM stays on the scalar arm by construction: its
+    IMA-ADPCM has no numpy arm by construction: its
     predictor/step recurrence makes every sample depend on the previous
     one — a serial scan, the same reason Average/Paeth PNG rows stay
     scalar."""

@@ -2,40 +2,24 @@
 
 hiero's only general compute escape hatch is a per-row JavaScript UDF
 (`maps/CreateColumnJSMap.java`, Nashorn). Spark-first translation: stay in
-Catalyst expressions (`F.expr`) whenever the logic is SQL-expressible —
-JVM-side, codegen'd, pushdown-friendly — and drop to an Arrow-vectorized
-pandas UDF only for genuinely non-SQL logic (documented deviation: Python
-semantics, not JS).
+Catalyst expressions (`F.expr`) — JVM-side, codegen'd, pushdown-friendly.
+Logic SQL cannot express belongs in a caller's own Arrow-vectorized
+`pandas_udf` (documented deviation: Python semantics, not JS).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 
 def derive_expr(df: DataFrame, name: str, sql_expr: str) -> DataFrame:
-    """F1 (fast path): derived column from a SQL expression string.
+    """F1: derived column from a SQL expression string.
 
     Equivalent of CreateColumnJSMap for expressible logic; Catalyst folds
     constants and keeps it inside whole-stage codegen.
     """
     return df.withColumn(name, F.expr(sql_expr))
-
-
-def derive_pandas(df: DataFrame, name: str, fn: Callable[[pd.Series], pd.Series],
-                  return_type: str, input_col: str) -> DataFrame:
-    """F1 (general path): Arrow-vectorized scalar UDF over one column.
-
-    ~10-100x faster than row-at-a-time Python UDFs; still the slow path vs
-    built-ins — use derive_expr when possible.
-    """
-    udf = pandas_udf(fn, return_type)
-    return df.withColumn(name, udf(F.col(input_col)))
 
 
 def convert_column(df: DataFrame, col: str, to: str, new_name: str | None = None) -> DataFrame:

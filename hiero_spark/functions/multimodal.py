@@ -2,21 +2,25 @@
 
 Images/audio/video are opaque `binary` columns plus a typed metadata
 struct. The Spark-side plumbing — schema, Arrow batch shape, mapInPandas
-signatures, partition sizing — is real and tested. Codec resolution is a
-three-step ladder, decided per payload inside the worker:
+signatures, partition sizing — is real and tested. Each operation has
+one runtime decode path, decided per payload inside the worker:
 
-1. real library (PIL / soundfile) when importable and the bytes parse;
-2. vendored pure-Python decoders for uncompressed 24bpp BMP, 8-bit
-   non-interlaced PNG (zlib IDAT + all five scanline filters — a real
-   COMPRESSED image format, stdlib zlib/struct only), PCM16 WAV, and
-   mono IMA-ADPCM WAV (4-bit nibbles -> 16-bit PCM — the COMPRESSED
-   audio format; `_decode_bmp` / `_decode_png` / `_decode_wav` /
-   `_decode_wav_ima`) — these run
-   UNSKIPPED in this container, so the real-decode feature path is
-   exercised under test even with no image/audio libs installed;
+1. the numpy arm (codec_np.py) over the vendored formats: 24bpp BMP,
+   8-bit PNG (zlib IDAT + all five scanline filters, Adam7), Huffman
+   JPEG (jpeg.py: baseline, extended sequential, progressive) and PCM16
+   WAV;
+2. for audio only, mono IMA-ADPCM WAV (`_decode_wav_ima`: 4-bit nibbles
+   -> 16-bit PCM, a serial predictor recurrence with no numpy arm);
 3. `decode_image_stub`, a deterministic fake keyed on the payload hash,
-   for bytes nothing recognizes (this container's synthetic payloads are
-   utf-8 text).
+   for bytes nothing recognizes (the `n3_multimodal_features` payloads
+   are utf-8 text).
+
+No system codec library is consulted, so features are a function of the
+bytes alone. Formats outside the vendored set (arithmetic-coded JPEG,
+GIF, MP3/OGG) decode to the stub. The scalar decoders here
+(`_decode_bmp` / `_decode_png` / `_decode_wav` with `_bmp_features` /
+`_wav_features` / `_ahash_ints`) are the spec reference the numpy arm is
+tested bit-identical against; codec_np shares their container parsers.
 
 At 100 TB the pattern is: keep payloads in their own parquet column
 (column pruning means metadata-only queries never read bytes), size
@@ -61,8 +65,8 @@ def decode_image_stub(payload: bytes) -> list[float]:
 
     The fake derives an 8-dim feature from the payload digest so tests are
     reproducible and downstream plumbing (schema, batching) is exercised
-    end-to-end. `decode_image` tries a real PIL decode first and falls
-    back here.
+    end-to-end. `decode_image` and `decode_audio` return it for bytes no
+    vendored decoder recognizes.
     """
     if payload is None:
         raise NotImplementedError("real codecs unavailable; payload must be non-null")
@@ -70,41 +74,12 @@ def decode_image_stub(payload: bytes) -> list[float]:
     return [b / 255.0 for b in digest[:8]]
 
 
-def _pil_image():
-    """Worker-side probe for PIL (cached per python process — mapInPandas
-    workers are long-lived, so the import cost is paid once)."""
-    global _PIL_IMAGE
-    try:
-        return _PIL_IMAGE
-    except NameError:
-        pass
-    try:
-        from PIL import Image as _PIL_IMAGE  # noqa: N806
-    except ImportError:
-        _PIL_IMAGE = None
-    return _PIL_IMAGE
-
-
-def _soundfile():
-    """Worker-side probe for soundfile (same caching as _pil_image)."""
-    global _SOUNDFILE
-    try:
-        return _SOUNDFILE
-    except NameError:
-        pass
-    try:
-        import soundfile as _SOUNDFILE
-    except (ImportError, OSError):  # OSError: libsndfile missing
-        _SOUNDFILE = None
-    return _SOUNDFILE
-
-
 def _decode_bmp(payload: bytes):
     """Pure-stdlib decode of uncompressed 24bpp BMP (the one raster format
     writable and readable with `struct` alone). Returns (width, height,
-    rows of (r, g, b)) or None if the bytes aren't such a BMP. Exists so
-    the real-decode branch has an executable path in lib-free containers;
-    anything fancier (compression, other depths) belongs to PIL."""
+    rows of (r, g, b)) or None if the bytes aren't such a BMP: the
+    scalar reference for codec_np.decode_bmp_np. Compressed BMPs and
+    other depths are out of scope and decode to the stub."""
     import struct
 
     if len(payload) < 54 or payload[:2] != b"BM":
@@ -238,16 +213,15 @@ def _parse_png(payload: bytes):
 def _decode_png(payload: bytes):
     """Pure-stdlib decode of 8-bit PNG (gray / RGB / RGBA — the
     overwhelming majority of real PNGs), non-interlaced OR Adam7
-    interlaced (round 9). zlib-inflates the IDAT stream and applies the
+    interlaced. zlib-inflates the IDAT stream and applies the
     five scanline filters (None/Sub/Up/Average/Paeth) per the spec —
     per PASS for Adam7, whose seven sub-images each carry their own
     filter state and scatter into the pixel grid. Returns (width,
     height, rows of (r, g, b)) — the same shape as `_decode_bmp`, so
     the feature/resize paths are codec-agnostic — or None if the bytes
-    aren't such a PNG. This is the first COMPRESSED vendored codec: the
-    decode exercises real entropy-coded data in lib-free containers
-    (round-6 verdict item 8). Alpha is dropped, not composited;
-    palette/16-bit inputs belong to PIL."""
+    aren't such a PNG. A COMPRESSED vendored codec: the decode
+    exercises real entropy-coded data with stdlib zlib alone. Alpha is
+    dropped, not composited; palette/16-bit inputs are out of scope."""
     parsed = _parse_png(payload)
     if parsed is None:
         return None
@@ -308,9 +282,9 @@ def _encode_png(rows) -> bytes:
 
 
 def _bmp_features(decoded) -> list[float]:
-    """Same 8-dim shape as the PIL branch: normalized width/height/bands, a
-    1.0 real-decode marker, and a 2x2 grayscale thumbnail (box average +
-    ITU-R 601-2 luma; documented as not bit-identical to PIL's bicubic)."""
+    """8-dim image feature: normalized width/height/bands, a 1.0
+    real-decode marker, and a 2x2 grayscale thumbnail (box average +
+    ITU-R 601-2 luma). Scalar reference for codec_np.features_np."""
     w, h, rows = decoded
     thumb = []
     for qr in range(2):
@@ -328,52 +302,22 @@ def _bmp_features(decoded) -> list[float]:
 
 
 def decode_image(payload: bytes) -> list[float]:
-    """Decode + feature-extract with a real codec where one exists.
+    """Decode + feature-extract through the numpy arm (codec_np.py).
 
-    If PIL is importable AND the payload is an image it recognizes, the
-    feature is computed from the actual pixels (8-dim: normalized width,
-    height, band count, a 1.0 real-decode marker, and a 2x2 grayscale
-    thumbnail). Without PIL, uncompressed 24bpp BMP, 8-bit
-    non-interlaced PNG, and baseline JPEG payloads still take a real
-    pixel path via the vendored `_decode_bmp` / `_decode_png` /
-    `jpeg.decode_jpeg`. Only bytes none of those recognize (this
-    container's synthetic payloads are utf-8 text) fall back to the
-    deterministic stub.
+    24bpp BMP, 8-bit PNG and Huffman-coded JPEG payloads yield an 8-dim
+    feature computed from the actual pixels: normalized width, height,
+    band count, a 1.0 real-decode marker, and a 2x2 grayscale thumbnail
+    (`_bmp_features` is the scalar reference it matches bit for bit).
+    Bytes the arm does not recognize (the `n3_multimodal_features`
+    payloads are utf-8 text) get the deterministic stub.
     """
     if payload is None:
         raise NotImplementedError("payload must be non-null")
-    Image = _pil_image()
-    if Image is not None:
-        try:
-            import io
+    from hiero_spark.functions import codec_np
 
-            img = Image.open(io.BytesIO(payload))
-            img.load()
-            thumb = list(img.convert("L").resize((2, 2)).getdata())
-            return [
-                img.width / 4096.0,
-                img.height / 4096.0,
-                len(img.getbands()) / 4.0,
-                1.0,
-            ] + [p / 255.0 for p in thumb]
-        except Exception:
-            pass  # not an image (or truncated): try BMP/PNG/JPEG, then stub
-    try:
-        # numpy block arm: same parsers/entropy decode, vectorized block
-        # assembly + feature math — bit-identical output, ~an order of
-        # magnitude faster (codec_np.py)
-        from hiero_spark.functions import codec_np
-
-        decoded_np = codec_np.decode_pixels_np(payload)
-        if decoded_np is not None:
-            return codec_np.features_np(decoded_np)
-    except ImportError:
-        pass  # numpy-free container: scalar reference arm below
-    from hiero_spark.functions.jpeg import decode_jpeg
-
-    decoded = _decode_bmp(payload) or _decode_png(payload) or decode_jpeg(payload)
+    decoded = codec_np.decode_pixels_np(payload)
     if decoded is not None:
-        return _bmp_features(decoded)
+        return codec_np.features_np(decoded)
     return decode_image_stub(payload)
 
 
@@ -407,7 +351,7 @@ def _parse_wav_pcm(payload: bytes):
 def _decode_wav(payload: bytes):
     """Pure-stdlib decode of PCM16 RIFF/WAVE. Returns (mono float samples
     in [-1, 1), sample_rate, n_channels) or None. Same role as
-    `_decode_bmp`: a real decode path that needs no libsndfile."""
+    `_decode_bmp`: the scalar reference for codec_np.decode_wav_np."""
     parsed = _parse_wav_pcm(payload)
     if parsed is None:
         return None
@@ -425,8 +369,9 @@ def _decode_wav(payload: bytes):
 
 
 def _wav_features(mono, rate: int, channels: int) -> list[float]:
-    """Same 8-dim shape as the soundfile branch: duration s, rate/1e5,
-    channels/8, RMS, peak, 3 thirds-energy bins."""
+    """8-dim audio feature: duration s, rate/1e5, channels/8, RMS, peak,
+    3 thirds-energy bins. Scalar reference for codec_np.wav_features_np,
+    and the feature step of the IMA-ADPCM path."""
     n = len(mono)
     third = max(n // 3, 1)
     energies = []
@@ -439,53 +384,26 @@ def _wav_features(mono, rate: int, channels: int) -> list[float]:
 
 
 def decode_audio(payload: bytes) -> list[float]:
-    """Audio decode + feature-extract: real via soundfile when available
-    (8-dim: duration s, sample rate / 1e5, channel count / 8, RMS, peak,
-    and 3 coarse thirds-energy bins); PCM16 WAV still decodes for real via
-    the vendored `_decode_wav` when soundfile is absent; only unrecognized
-    bytes fall back to the deterministic stub (same digest features as
-    images — the plumbing is the point in the stub environment)."""
+    """Audio decode + feature-extract (8-dim: duration s, sample rate /
+    1e5, channel count / 8, RMS, peak, and 3 coarse thirds-energy bins).
+    PCM16 WAV takes the numpy arm (codec_np.py, bit-identical to the
+    scalar `_decode_wav` + `_wav_features`); mono IMA-ADPCM WAV, whose
+    serial predictor has no numpy arm, takes `_decode_wav_ima`; other
+    bytes get the deterministic stub (the same digest features as
+    images)."""
     if payload is None:
         raise NotImplementedError("payload must be non-null")
-    sf = _soundfile()
-    if sf is not None:
-        try:
-            import io
+    from hiero_spark.functions import codec_np
 
-            data, rate = sf.read(io.BytesIO(payload), always_2d=True)
-            mono = data.mean(axis=1)
-            n = len(mono)
-            third = max(n // 3, 1)
-            energies = [
-                float((mono[i * third:(i + 1) * third] ** 2).mean()) if n else 0.0
-                for i in range(3)
-            ]
-            return [
-                n / float(rate),
-                rate / 1e5,
-                data.shape[1] / 8.0,
-                float((mono ** 2).mean() ** 0.5) if n else 0.0,
-                float(abs(mono).max()) if n else 0.0,
-            ] + energies
-        except Exception:
-            pass
     try:
-        # numpy arm (round 11): shared container parse, vectorized
-        # mixdown + feature sums — bit-identical to the scalar arm
-        # (tests/test_codec_np.py), same pattern as decode_image above.
-        # IMA-ADPCM never takes it: serial predictor recurrence.
-        from hiero_spark.functions import codec_np
-
         dec_np = codec_np.decode_wav_np(payload)
         if dec_np is not None:
             return codec_np.wav_features_np(*dec_np)
     except Exception:
-        # defensive, matching the soundfile branch above: an ImportError
-        # (numpy-free container) OR any unexpected decode error falls
-        # through to the scalar spec-reference arm instead of failing
-        # the whole Arrow batch (round-11 ADVICE)
+        # an unexpected decode error falls through to the IMA arm and
+        # then the stub instead of failing the whole Arrow batch
         pass
-    decoded = _decode_wav(payload) or _decode_wav_ima(payload)
+    decoded = _decode_wav_ima(payload)
     if decoded is not None:
         return _wav_features(*decoded)
     return decode_image_stub(payload)
@@ -551,83 +469,28 @@ def _encode_bmp(rows) -> bytes:
 def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     """Image resize as mapInPandas over binary batches.
 
-    Pixel transform is real when PIL can decode the payload (decode →
-    resize → re-encode PNG inside the batch loop); without PIL, 24bpp BMP
-    payloads are resized for real via the vendored decoder (nearest
-    neighbor, re-encoded as BMP). Bytes neither path can decode pass
-    through unchanged with resized=False and NULL width/height — emitting
-    the requested dimensions there would misdescribe untouched bytes
-    (round-5 ADVICE). The Spark-side contract is identical either way —
-    binary in/binary out keeps payloads off the driver, metadata updated
-    in the same pass, Arrow batch shape the same as production.
+    BMP, PNG and JPEG payloads are decoded by the numpy arm
+    (codec_np.py), resized nearest-neighbor, and re-encoded in their own
+    format. Bytes it cannot decode pass through unchanged with
+    resized=False and NULL width/height — emitting the requested
+    dimensions there would misdescribe untouched bytes. Binary in/binary
+    out keeps payloads off the driver, with metadata updated in the same
+    pass.
     """
+    from hiero_spark.functions import codec_np
+    from hiero_spark.functions.jpeg import encode_jpeg
 
     def resize_one(payload):
         if payload is None:
             raise NotImplementedError("payload must be non-null")
-        Image = _pil_image()
-        if Image is not None:
-            try:
-                import io
-
-                img = Image.open(io.BytesIO(payload))
-                out = io.BytesIO()
-                img.resize((width, height)).save(out, format="PNG")
-                return out.getvalue(), True
-            except Exception:
-                pass
-        try:
-            # numpy block arm (codec_np.py): bit-identical decode, same
-            # nearest-neighbor index math; format-preserving like the
-            # scalar ladder below (which remains the numpy-free fallback)
-            from hiero_spark.functions import codec_np
-        except ImportError:
-            codec_np = None
-        if codec_np is not None:
-            dec = codec_np.decode_bmp_np(payload)
+        for decode, encode in (
+            (codec_np.decode_bmp_np, _encode_bmp),
+            (codec_np.decode_png_np, _encode_png),
+            (codec_np.decode_jpeg_np, encode_jpeg),
+        ):
+            dec = decode(payload)
             if dec is not None:
-                return _encode_bmp(
-                    codec_np.nn_resize_rows(dec, width, height)
-                ), True
-            dec = codec_np.decode_png_np(payload)
-            if dec is not None:  # PNG stays PNG through the resize
-                return _encode_png(
-                    codec_np.nn_resize_rows(dec, width, height)
-                ), True
-            dec = codec_np.decode_jpeg_np(payload)
-            if dec is not None:  # JPEG stays JPEG through the resize
-                from hiero_spark.functions.jpeg import encode_jpeg
-
-                return encode_jpeg(
-                    codec_np.nn_resize_rows(dec, width, height)
-                ), True
-            return payload, False
-        decoded = _decode_bmp(payload)
-        if decoded is not None:
-            w0, h0, rows = decoded
-            resized = [
-                [rows[(r * h0) // height][(c * w0) // width] for c in range(width)]
-                for r in range(height)
-            ]
-            return _encode_bmp(resized), True
-        decoded = _decode_png(payload)
-        if decoded is not None:  # PNG stays PNG through the resize
-            w0, h0, rows = decoded
-            resized = [
-                [rows[(r * h0) // height][(c * w0) // width] for c in range(width)]
-                for r in range(height)
-            ]
-            return _encode_png(resized), True
-        from hiero_spark.functions.jpeg import decode_jpeg, encode_jpeg
-
-        decoded = decode_jpeg(payload)
-        if decoded is not None:  # JPEG stays JPEG through the resize
-            w0, h0, rows = decoded
-            resized = [
-                [rows[(r * h0) // height][(c * w0) // width] for c in range(width)]
-                for r in range(height)
-            ]
-            return encode_jpeg(resized), True
+                return encode(codec_np.nn_resize_rows(dec, width, height)), True
         return payload, False
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -647,10 +510,6 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     return media.select("media_id", "payload").mapInPandas(run, RESIZED_SCHEMA)
 
 
-# Backwards-compatible name from the stub-only era.
-resize_stub = resize_images
-
-
 def synthetic_media(spark, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Build a media table from documents (payload = utf8 bytes) so the
     binary plumbing is testable with the data available in this container."""
@@ -667,7 +526,7 @@ def synthetic_media(spark, docs: DataFrame, id_col: str = "doc_id", text_col: st
     )
 
 
-# --- real frame extraction over a lib-free video container (round 6) ---
+# --- real frame extraction over a lib-free video container ---
 
 FRAMEPACK_MAGIC = b"FPK1"
 
@@ -728,8 +587,8 @@ def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
                 if not frames:
                     continue
                 for idx in range(0, len(frames), every_n):
-                    # frames may be BMP, PNG (r7), or JPEG (r8) — the
-                    # container is codec-agnostic, like MJPEG-in-AVI
+                    # frames may be BMP, PNG, or JPEG — the container
+                    # is codec-agnostic, like MJPEG-in-AVI
                     from hiero_spark.functions.jpeg import decode_jpeg
 
                     dec = (
@@ -795,7 +654,8 @@ def _decode_wav_ima(payload: bytes):
     the vendored COMPRESSED audio codec, closing the same gap for audio
     that the PNG decoder closed for images (4-bit nibbles -> 16-bit PCM,
     ~4x compression). Returns (mono float samples in [-1, 1),
-    sample_rate, 1) or None. Stereo/other tags belong to soundfile."""
+    sample_rate, 1) or None. Stereo and other format tags are out of
+    scope and decode to the stub."""
     import struct
 
     if len(payload) < 44 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
@@ -879,7 +739,7 @@ def _encode_wav_ima(pcm16, rate: int = 8000, block_samples: int = 505) -> bytes:
     return b"RIFF" + struct.pack("<I", len(riff)) + riff
 
 
-# --- round-8 continuation: signal-level audio + video analysis ----------
+# --- signal-level audio + video analysis ----------------------------------
 
 SPECTRAL_SCHEMA = (
     "media_id long, sample_rate int, n_samples int, dominant_bin int, "
@@ -1004,29 +864,13 @@ def spectral_features(media: DataFrame, n_fft: int = 2048) -> DataFrame:
 
 
 def _frame_mean_luma(frame: bytes):
-    """Decode one frame (BMP/PNG/JPEG ladder, like sample_frames) and
-    return its integer mean luma in [0, 255], or None.  numpy block arm
-    first (bit-identical — codec_np.py), scalar ladder as the
-    numpy-free fallback."""
-    try:
-        from hiero_spark.functions import codec_np
+    """Decode one frame (BMP/PNG/JPEG) through the numpy arm
+    (codec_np.py) and return its integer mean luma in [0, 255], or
+    None."""
+    from hiero_spark.functions import codec_np
 
-        dec = codec_np.decode_pixels_np(frame)
-        return codec_np.mean_luma_np(dec) if dec is not None else None
-    except ImportError:
-        pass
-    from hiero_spark.functions.jpeg import decode_jpeg
-
-    dec = _decode_bmp(frame) or _decode_png(frame) or decode_jpeg(frame)
-    if dec is None:
-        return None
-    w, h, rows = dec
-    acc = sum(
-        (299 * r + 587 * g + 114 * b) // 1000
-        for row in rows
-        for r, g, b in row
-    )
-    return acc // (w * h)
+    dec = codec_np.decode_pixels_np(frame)
+    return codec_np.mean_luma_np(dec) if dec is not None else None
 
 
 def detect_scene_cuts(media: DataFrame, threshold: int = 40) -> DataFrame:
@@ -1142,18 +986,12 @@ def synthetic_pattern_images(
 
 
 def _decode_and_ahash(b: bytes, grid: int = 8):
-    """Decode + average-hash through the numpy block arm (codec_np.py —
-    bit-identical, ~an order of magnitude faster), falling back to the
-    scalar ladder + `_ahash_ints` in a numpy-free container.  Returns
-    (hi, lo) or None for undecodable bytes.  Shared by image AND
-    per-frame video hashing so the two dedup families cannot drift."""
-    try:
-        from hiero_spark.functions import codec_np
-    except ImportError:
-        from hiero_spark.functions.jpeg import decode_jpeg
+    """Decode + average-hash through the numpy arm (codec_np.py, tested
+    bit-identical to the scalar `_ahash_ints`).  Returns (hi, lo) or
+    None for undecodable bytes.  Shared by image AND per-frame video
+    hashing so the two dedup families cannot drift."""
+    from hiero_spark.functions import codec_np
 
-        dec = _decode_bmp(b) or _decode_png(b) or decode_jpeg(b)
-        return _ahash_ints(dec, grid) if dec is not None else None
     dec = codec_np.decode_pixels_np(b)
     return codec_np.ahash_ints_np(dec, grid) if dec is not None else None
 
@@ -1162,8 +1000,7 @@ def _ahash_ints(dec, grid: int = 8):
     """Average-hash core over a decoded (w, h, rows) image: integer luma,
     exact block partition (pixel (i,j) -> block (i*grid DIV h,
     j*grid DIV w)), strict cross-multiplied mean threshold; returns the
-    (hi, lo) 32-bit halves. Shared by image AND per-frame video hashing
-    so the two dedup families cannot drift."""
+    (hi, lo) 32-bit halves. Scalar reference for codec_np.ahash_ints_np."""
     w, h, rows = dec
     n_blocks = grid * grid
     sums = [0] * n_blocks
@@ -1188,7 +1025,7 @@ def _ahash_ints(dec, grid: int = 8):
 
 def average_hash(media: DataFrame, grid: int = 8) -> DataFrame:
     """Perceptual average-hash over binary image payloads: decode
-    (BMP/PNG/JPEG ladder), integer luma per pixel, block-sum downsample
+    (BMP/PNG/JPEG), integer luma per pixel, block-sum downsample
     to grid x grid (pixel (i,j) -> block (i*grid DIV h, j*grid DIV w) —
     exact integer partition, any dimensions), bit_k = 1 iff
     block_sum_k * n_blocks > total_sum (strict; cross-multiplied so no
@@ -1198,7 +1035,6 @@ def average_hash(media: DataFrame, grid: int = 8) -> DataFrame:
     anywhere. Undecodable payloads emit decoded=false with NULL hash
     (the resize_images contract). mapInPandas: decode never leaves the
     worker, output is 3 scalars per image."""
-    from hiero_spark.functions.jpeg import decode_jpeg
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1322,10 +1158,9 @@ def synthetic_pattern_video(
 
 def frame_hashes(media: DataFrame, grid: int = 8) -> DataFrame:
     """Per-frame average-hash over framepack videos: decode each frame
-    (BMP/PNG/JPEG ladder) and emit (media_id, frame_idx, hi, lo) through
-    the SAME hash core as image dedup (_ahash_ints). Undecodable frames
+    (BMP/PNG/JPEG) and emit (media_id, frame_idx, hi, lo) through the
+    SAME decode + hash step as image dedup (_decode_and_ahash). Undecodable frames
     are skipped; decode never leaves the worker."""
-    from hiero_spark.functions.jpeg import decode_jpeg
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

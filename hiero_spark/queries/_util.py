@@ -28,6 +28,21 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
+def _sf_export_dir(sf_dir: str, name: str) -> str:
+    """Per-scale export path: keyed on the sf_dir basename so concurrent
+    runs at different scale factors never read each other's artifacts
+    (a fixed shared path could race)."""
+    import os
+    import tempfile
+
+    sf_key = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    d = os.path.join(
+        tempfile.gettempdir(), "hiero_spark_sources", f"{name}_{sf_key}"
+    )
+    os.makedirs(os.path.dirname(d), exist_ok=True)
+    return d
+
+
 def money_sum(expr: Column, scale: int = 100) -> Column:
     """Exact sum of a fixed-decimal double column; returns double.
 

@@ -18,23 +18,8 @@ from hiero_spark.functions import text as tx
 from hiero_spark.functions import weights as wt
 from hiero_spark.functions._fanout import fan_out
 from hiero_spark.operators.grouptopk import grouped_topk
-from hiero_spark.queries._util import t
+from hiero_spark.queries._util import _sf_export_dir, t
 from hiero_spark.registry import query
-
-
-def _sf_export_dir(sf_dir: str, name: str) -> str:
-    """Per-scale export path: keyed on the sf_dir basename so concurrent
-    runs at different scale factors never read each other's artifacts
-    (round-6 advice: the fixed shared qemb_sq8 path could race)."""
-    import os
-    import tempfile
-
-    sf_key = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    d = os.path.join(
-        tempfile.gettempdir(), "hiero_spark_sources", f"{name}_{sf_key}"
-    )
-    os.makedirs(os.path.dirname(d), exist_ok=True)
-    return d
 
 
 @query(

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hiero_spark.functions import text as tx
-from hiero_spark.queries._util import t
+from hiero_spark.queries._util import _sf_export_dir, t
 from hiero_spark.registry import query
 
 _BM25_TERMS = ("spark", "join", "window", "stream")
@@ -55,19 +55,6 @@ _BM25_ORACLE = r"""
         SELECT doc_id, n_terms, ROUND(s, 6) AS bm25
         FROM agg ORDER BY s DESC, doc_id ASC LIMIT 10
 """
-
-
-def _sf_export_dir(sf_dir: str, name: str) -> str:
-    """Per-scale export path (same contract as queries/curation.py)."""
-    import os
-    import tempfile
-
-    sf_key = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    d = os.path.join(
-        tempfile.gettempdir(), "hiero_spark_sources", f"{name}_{sf_key}"
-    )
-    os.makedirs(os.path.dirname(d), exist_ok=True)
-    return d
 
 
 @query(

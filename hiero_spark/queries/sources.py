@@ -608,7 +608,7 @@ def s19_time_travel(spark, sf_dir):
     "s20_bloom_pruned_read",
     group="S20",
     doc="Bloom-sidecar file skipping "
-        "(sources/layout.py:save_bloom_indexed/read_bloom_pruned): "
+        "(sources/layout.py:save_bloom_indexed/read_bloom_pruned_many): "
         "documents land in 16 key-hashed file groups, each with a Bloom "
         "bitmap over its doc_ids in a _blooms.json sidecar; an equality "
         "lookup probes the bitmaps and reads ONLY the 'maybe' groups — "
@@ -616,7 +616,7 @@ def s19_time_travel(spark, sf_dir):
         "pruners (works on ANY layout, like Parquet bloom pages / "
         "Iceberg puffin). No false negatives by construction; the exact "
         "predicate still runs after pruning. Tests pin the strict-subset "
-        "scan; here three point lookups are hash-verified.",
+        "scan; here one batched lookup of three keys is hash-verified.",
     oracle="""
         SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars
         FROM documents WHERE doc_id IN (7, 123, 321)
@@ -628,10 +628,7 @@ def s20_bloom_pruned_read(spark, sf_dir):
     docs = t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     path = _export_dir("docs_bloom_indexed")
     layout.save_bloom_indexed(spark, docs, path, "doc_id", n_files=16)
-    parts = [layout.read_bloom_pruned(spark, path, k) for k in (7, 123, 321)]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = layout.read_bloom_pruned_many(spark, path, [7, 123, 321])
     return out.select(
         "doc_id", "source", F.col("n_chars").cast("long").alias("n_chars")
     )

@@ -256,20 +256,19 @@ def upsert_partitioned(
     Affected partitions are the union of (a) the partitions the change
     rows name and (b) the partitions the changed keys CURRENTLY occupy
     in the base table — an update may move a key across partitions, and
-    without (b) the old partition would keep a stale copy (round-6
-    ADVICE). Finding (b) is a key+partition column scan semi-joined
-    against the broadcast change keys — column-pruned, no data columns
-    read; with a partition-aligned key design (key embeds the partition)
-    or footer min/max on the key column the scan prunes further, which
-    is exactly the metadata lookup table formats do here.
+    without (b) the old partition would keep a stale copy. Finding (b)
+    is a key+partition column scan semi-joined against the broadcast
+    change keys — column-pruned, no data columns read; with a
+    partition-aligned key design (key embeds the partition) or footer
+    min/max on the key column the scan prunes further, which is exactly
+    the metadata lookup table formats do here.
     """
     from pyspark.sql import Observation, functions as F
 
     changed_keys = changes.select(key_col).distinct()
-    # the named and currently-occupied partitions come from ONE job
-    # (round 15, guide §1.2): the old shape collected them separately —
-    # two driver round-trips, two plans — for what is one distinct
-    # union of partition values
+    # the named and currently-occupied partitions come from ONE job: one
+    # distinct union of partition values, not two separate collects (two
+    # driver round-trips, two plans)
     parts = sorted(
         {
             r[0]
@@ -290,9 +289,9 @@ def upsert_partitioned(
     # dynamic overwrite only touches partitions PRESENT in the output: a
     # partition whose every row was deleted writes nothing and would keep
     # its old files — clear those directories explicitly.  The present
-    # set rides the write as an Observation (round 15): the old shape
-    # persisted the merge and ran a distinct-collect job before writing,
-    # scanning the affected partitions twice.
+    # set rides the write as an Observation, so the affected partitions
+    # are scanned once (a distinct-collect job before the write would
+    # scan them twice).
     obs = Observation()
     merged = survivors.unionByName(upserts).observe(
         obs, F.collect_set(part_col).alias("present")
@@ -334,12 +333,12 @@ def read_prefix_pruned(
     succ increments the prefix's last code point (carrying on overflow):
     any string starting with the prefix first differs from succ at that
     incremented position, so it sorts strictly below succ.  A prefix+
-    sentinel upper bound is NOT safe — strings like prefix+'\\uffff'+more
-    or prefix+U+1F600 sort above prefix+U+FFFF and would be lost (round-7
-    ADVICE).  Parquet footer min/max for string columns compare
+    sentinel upper bound is NOT safe — strings like
+    prefix+'\\uffff'+more or prefix+U+1F600 sort above prefix+U+FFFF and
+    would be lost.  Parquet footer min/max for string columns compare
     lexicographically, so `prune_files` works on string stats (truncated
-    stats stay safe: writers truncate min downward and max upward, so the
-    file interval only widens).  Survivor files then apply the exact
+    stats stay safe: writers truncate min downward and max upward, so
+    the file interval only widens).  Survivor files then apply the exact
     startswith predicate; pruning never decides row membership.  The
     string twin of the numeric Z-order path: sort-by-column layouts get
     LIKE-prefix scans bounded by the files whose name range intersects.
@@ -350,7 +349,7 @@ def read_prefix_pruned(
     return spark.read.parquet(*kept).filter(F.col(col).startswith(prefix))
 
 
-# --- Bloom-filter file skipping (round-8 continuation) -------------------
+# --- Bloom-filter file skipping ------------------------------------------
 
 
 def save_bloom_indexed(
@@ -377,19 +376,20 @@ def save_bloom_indexed(
     O(n_files x m_bits/64) words regardless of row count. The sidecar
     holds hex-encoded words only for non-zero positions (sparse).
 
-    Probing (`read_bloom_pruned`) needs the identical hash family; the
-    positions column expression is shared, and the probe computes the
-    literal's positions through the SAME JVM expression (a 1-row
-    select), never a Python reimplementation that could drift.
+    Probing (`read_bloom_pruned_many`) needs the identical hash family;
+    the positions column expression is shared, and the probe computes
+    the values' positions through the SAME JVM expression (a
+    1-row-per-value select), never a Python reimplementation that could
+    drift.
     """
     import json as _json
 
     grp = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_files))
-    # ONE scan of the source (round 15, guide §1.2): the grouped write
-    # and the bloom-word aggregation both consume the post-shuffle
-    # staged frame, so the source is read once and the (key, group)
-    # hash is computed once — the old shape re-scanned `df` and re-ran
-    # the hash for the words pass.
+    # ONE scan of the source: the grouped write and the bloom-word
+    # aggregation both consume the post-shuffle staged frame, so the
+    # source is read once and the (key, group) hash is computed once
+    # rather than re-scanning `df` and re-running the hash for the
+    # words pass.
     staged = df.withColumn("_grp", grp).repartition(n_files, "_grp").persist()
     (
         staged.write.mode("overwrite")
@@ -430,64 +430,41 @@ def save_bloom_indexed(
     return sidecar
 
 
-def read_bloom_pruned(spark: SparkSession, path: str, value) -> DataFrame:
-    """Equality lookup bounded by the Bloom sidecar: read ONLY the file
-    groups whose bitmap reports 'maybe' for `value`, then apply the
-    exact predicate (no false negatives => pruning never loses a row;
-    false positives only cost extra I/O).  For a point lookup the
-    expected survivor count is 1 + (n_files-1) x fp_rate.
-
-    The probe literal is cast to the stored key column's exact type
-    before hashing: xxhash64 is type-sensitive (INT 7 and BIGINT 7
-    hash differently), so an uncast Python int probing a BIGINT column
-    would silently miss every group — a false negative the cast rules
-    out by making the probe expression identical to the build's."""
+def _load_blooms(path: str) -> dict:
+    """The `_blooms.json` sidecar `save_bloom_indexed` wrote at `path`."""
     import json as _json
 
     with open(os.path.join(path, "_blooms.json")) as fh:
-        sc = _json.load(fh)
-    from hiero_spark.functions.bloom import _positions
+        return _json.load(fh)
 
-    key_col, m_bits, n_hashes = sc["key_col"], sc["m_bits"], sc["n_hashes"]
-    base = spark.read.parquet(path)
-    key_type = base.schema[key_col].dataType
-    lit = F.lit(value).cast(key_type)
-    pos_row = spark.range(1).select(
-        _positions(lit, m_bits, n_hashes).alias("p")
-    ).collect()[0]["p"]
-    survivors = []
-    for g, wordmap in sc["blooms"].items():
-        hit = True
-        for p in pos_row:
-            word = int(wordmap.get(str(p >> 6), "0"), 16)
-            if not (word >> (p & 63)) & 1:
-                hit = False
-                break
-        if hit:
-            survivors.append(int(g))
-    if not survivors:
-        return base.limit(0).filter(F.lit(False))
-    pruned = spark.read.option("basePath", path).parquet(
-        *[os.path.join(path, f"_grp={g}") for g in sorted(survivors)]
+
+def _bloom_maybe(wordmap: dict, positions) -> bool:
+    """True when every bit position is set in a group's sparse hex word
+    map: the key may be in that group (never a false negative)."""
+    return all(
+        (int(wordmap.get(str(p >> 6), "0"), 16) >> (p & 63)) & 1
+        for p in positions
     )
-    return pruned.filter(F.col(key_col) == lit).drop("_grp")
 
 
 def read_bloom_pruned_many(spark: SparkSession, path: str, values) -> DataFrame:
-    """Batched `read_bloom_pruned`: one lookup DataFrame for a LIST of
-    probe values — same pruning guarantee per value (read only the file
-    groups whose bitmap reports 'maybe' for that value), but the probe
-    positions for every value come from ONE 1-row-per-value Spark job
-    and the surviving groups are read in ONE pruned scan, where N
-    single-value calls pay N position jobs and N scans (round 15: the
-    s22 forget-me verification probes 3 ids — the job ladder tripled).
-    Row set == the union of the single-value reads: the final exact
-    `isin` predicate keeps only true matches, so extra groups admitted
-    by another value's bloom contribute nothing."""
-    import json as _json
+    """Equality lookup for a list of probe values bounded by the Bloom
+    sidecar: read ONLY the file groups whose bitmap reports 'maybe' for
+    at least one value, then apply the exact `isin` predicate (no false
+    negatives => pruning never loses a row; false positives only cost
+    extra I/O, and extra groups admitted by another value's bloom
+    contribute nothing).  For a point lookup the expected survivor count
+    is 1 + (n_files-1) x fp_rate.  The probe positions for every value
+    come from ONE 1-row-per-value Spark job and the surviving groups are
+    read in ONE pruned scan.
 
-    with open(os.path.join(path, "_blooms.json")) as fh:
-        sc = _json.load(fh)
+    Probe values ride as strings and are cast to the stored key
+    column's exact type before hashing: xxhash64 is type-sensitive (INT
+    7 and BIGINT 7 hash differently), so an uncast Python int probing a
+    BIGINT column would silently miss every group — a false negative
+    the cast rules out by making the probe expression identical to the
+    build's."""
+    sc = _load_blooms(path)
     from hiero_spark.functions.bloom import _positions
 
     key_col, m_bits, n_hashes = sc["key_col"], sc["m_bits"], sc["n_hashes"]
@@ -498,17 +475,10 @@ def read_bloom_pruned_many(spark: SparkSession, path: str, values) -> DataFrame:
     probes = vdf.select(
         lit.alias("key"), _positions(lit, m_bits, n_hashes).alias("p")
     ).collect()
-
-    def _hit(wordmap, positions) -> bool:
-        return all(
-            (int(wordmap.get(str(p >> 6), "0"), 16) >> (p & 63)) & 1
-            for p in positions
-        )
-
     survivors = sorted(
         int(g)
         for g, wordmap in sc["blooms"].items()
-        if any(_hit(wordmap, r["p"]) for r in probes)
+        if any(_bloom_maybe(wordmap, r["p"]) for r in probes)
     )
     if not survivors:
         return base.limit(0).filter(F.lit(False))
@@ -549,8 +519,7 @@ def delete_bloom_keys(spark: SparkSession, path: str, keys: list) -> dict:
     import json as _json
     import shutil
 
-    with open(os.path.join(path, "_blooms.json")) as fh:
-        sc = _json.load(fh)
+    sc = _load_blooms(path)
     from hiero_spark.functions.bloom import _positions
 
     key_col, m_bits, n_hashes = sc["key_col"], sc["m_bits"], sc["n_hashes"]
@@ -568,15 +537,12 @@ def delete_bloom_keys(spark: SparkSession, path: str, keys: list) -> dict:
         _positions(lit, m_bits, n_hashes).alias("p"),
     ).collect()
 
-    def _maybe(g: int, positions) -> bool:
-        wordmap = sc["blooms"].get(str(g), {})
-        return all(
-            (int(wordmap.get(str(p >> 6), "0"), 16) >> (p & 63)) & 1
-            for p in positions
-        )
-
-    touched = sorted({r["g"] for r in routed if _maybe(r["g"], r["p"])})
-    live_keys = [r["key"] for r in routed if _maybe(r["g"], r["p"])]
+    live = [
+        r for r in routed
+        if _bloom_maybe(sc["blooms"].get(str(r["g"]), {}), r["p"])
+    ]
+    touched = sorted({r["g"] for r in live})
+    live_keys = [r["key"] for r in live]
     if not touched:
         return {
             "groups_total": n_files, "groups_rewritten": 0,
@@ -587,11 +553,10 @@ def delete_bloom_keys(spark: SparkSession, path: str, keys: list) -> dict:
         [(str(k),) for k in live_keys], "k string"
     ).select(F.col("k").cast(key_type).alias(key_col))
     # ONE job rewrites the touched groups AND reports every statistic
-    # the sidecar update needs (round 15, guide §1.2/§5): the dead-row
-    # count, the survivor count, and the set of groups that still hold
-    # rows all ride the write as Observations — the old shape ran a
-    # count job, a persisted count job, and a distinct-collect job
-    # before the write, tripling the touched-group scans.
+    # the sidecar update needs: the dead-row count, the survivor count,
+    # and the set of groups that still hold rows all ride the write as
+    # Observations, so the touched groups are scanned once (separate
+    # count and distinct-collect jobs would each scan them again).
     from pyspark.sql import Observation
 
     obs_sub = Observation()

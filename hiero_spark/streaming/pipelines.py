@@ -49,16 +49,6 @@ def tumbling_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFra
     )
 
 
-def sliding_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """X2: sliding 1h/15min windows."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("event_count"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "event_count")
-    )
-
-
 def session_counts(events: DataFrame, gap: str = "30 minutes",
                    watermark: str = "10 minutes") -> DataFrame:
     """X3: session windows per user."""
@@ -157,67 +147,6 @@ def user_running_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def user_running_stats_tws(events: DataFrame) -> DataFrame:
-    """The same per-user running (count, first_ms, last_ms) operator as
-    `user_running_stats`, expressed on Spark 4's arbitrary-state API
-    (`transformWithStateInPandas` + StatefulProcessor + ValueState) instead
-    of the classic `applyInPandasWithState`/GroupState.
-
-    Why both exist: transformWithState is the forward path — typed state
-    variables (value/list/map) with per-state TTL, timers, and initial
-    state, over the RocksDB state store provider (required; the session
-    factory leaves the default HDFS-backed store for the classic op, so
-    tests set the provider conf explicitly). Runtime deps: the API's
-    state-server protocol needs google.protobuf, absent in this container
-    — the equivalence test (tests/test_streaming.py) is skipped-unless-
-    protobuf, and the classic GroupState twin remains the always-tested
-    path. Same state shape either way: one fixed-width tuple per user
-    key.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = "user_id long, event_count long, first_ms long, last_ms long"
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "stats", "event_count long, first_ms long, last_ms long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            count, first_ms, last_ms = (
-                self._state.get() if self._state.exists() else (0, None, None)
-            )
-            for pdf in rows:
-                if pdf.empty:
-                    continue
-                ms = pdf["ts"].astype("int64") // 1_000_000
-                count += len(pdf)
-                lo, hi = int(ms.min()), int(ms.max())
-                first_ms = lo if first_ms is None else min(first_ms, lo)
-                last_ms = hi if last_ms is None else max(last_ms, hi)
-            self._state.update((count, first_ms, last_ms))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "event_count": [count],
-                    "first_ms": [first_ms],
-                    "last_ms": [last_ms],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        RunningStats(), out_schema, "Update", "None"
-    )
-
-
 def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "complete",
                   timeout_s: int = 120):
     """Drain a streaming query into an in-memory table (availableNow: process
@@ -254,6 +183,19 @@ def batch_id_writer(path: str):
     return write_batch
 
 
+def _start_fold(stream_df: DataFrame, fold, checkpoint: str):
+    """Start `fold` as a foreachBatch sink over `stream_df`: availableNow
+    (process everything currently available, then stop), checkpointed at
+    `checkpoint` so a restart resumes after the last committed batch.
+    Returns the started query."""
+    return (
+        stream_df.writeStream.foreachBatch(fold)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def idempotent_parquet_sink(
     stream_df: DataFrame, path: str, checkpoint: str, timeout_s: int = 120
 ):
@@ -272,12 +214,7 @@ def idempotent_parquet_sink(
     increments into object storage without a table format's transaction
     log — and each batch's write is a narrow per-partition operation.
     """
-    q = (
-        stream_df.writeStream.foreachBatch(batch_id_writer(path))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = _start_fold(stream_df, batch_id_writer(path), checkpoint)
     q.awaitTermination(timeout_s)
     return q
 
@@ -349,12 +286,7 @@ def near_dup_stream_sink(
             .parquet(out_path)
         )
 
-    return (
-        doc_stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(doc_stream, probe, checkpoint)
 
 
 def attribution_join_outer(
@@ -477,12 +409,7 @@ def text_index_stream_sink(
                 batch_df, index_path, n_buckets, text_col, id_col
             )
 
-    return (
-        doc_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(doc_stream, fold, checkpoint)
 
 
 def ohlc_stream(
@@ -580,16 +507,7 @@ def join_view_stream_sink(
         da.write.mode("append").parquet(a_store)
         db.write.mode("append").parquet(b_store)
 
-    # started query like every other *_stream_sink in this module
-    # (round-8 ADVICE: returning an unstarted writer here silently
-    # never ran for callers following the X13/X16 sink pattern)
-    return (
-        tagged_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(tagged_stream, fold, checkpoint)
 
 
 def with_synthetic_ingest_ts(
@@ -723,13 +641,8 @@ def wap_stream_sink(
     ever see batches that passed. Composes X13's foreachBatch shape
     with the versioned table's staging (one code path with the batch
     wap_commit). See make_wap_fold for the crash/replay contract."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            make_wap_fold(table_path, checks, quarantine_path)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _start_fold(
+        stream_df, make_wap_fold(table_path, checks, quarantine_path), checkpoint
     )
 
 
@@ -805,12 +718,7 @@ def anomaly_stream_sink(
         )
         alerts.write.mode("overwrite").parquet(alerts_path)
 
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(events, fold, checkpoint)
 
 
 def count_min_stream_sink(
@@ -850,12 +758,7 @@ def count_min_stream_sink(
         # overwrite (the X21 read-then-overwrite discipline)
         merged.localCheckpoint().write.mode("overwrite").parquet(sketch_path)
 
-    return (
-        stream_df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(stream_df, fold, checkpoint)
 
 
 def scd2_stream_sink(
@@ -929,12 +832,7 @@ def scd2_stream_sink(
             closed.write.mode("append").parquet(closed_path)
         current.write.mode("overwrite").parquet(current_path)
 
-    return (
-        change_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(change_stream, fold, checkpoint)
 
 
 def hll_distinct_stream_sink(
@@ -978,12 +876,7 @@ def hll_distinct_stream_sink(
             merged = batch_sk
         merged.localCheckpoint().write.mode("overwrite").parquet(sketch_path)
 
-    return (
-        stream_df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(stream_df, fold, checkpoint)
 
 
 def cusum_stream_sink(
@@ -1039,9 +932,4 @@ def cusum_stream_sink(
             .parquet(drift_path)
         )
 
-    return (
-        order_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(order_stream, fold, checkpoint)

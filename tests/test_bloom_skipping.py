@@ -18,7 +18,7 @@ def bloom_table(spark, tmp_path_factory):
 
 def test_point_lookup_correct_and_pruned(spark, bloom_table):
     path, sc = bloom_table
-    out = L.read_bloom_pruned(spark, path, "key_1234")
+    out = L.read_bloom_pruned_many(spark, path, ["key_1234"])
     rows = out.collect()
     assert [(r.id, r.val) for r in rows] == [(1234, 3702)]
     # I/O bound: the scan planned a strict subset of the 16 file groups
@@ -29,12 +29,12 @@ def test_point_lookup_correct_and_pruned(spark, bloom_table):
 def test_no_false_negatives_sampled(spark, bloom_table):
     path, _ = bloom_table
     for i in range(0, 2000, 97):
-        assert L.read_bloom_pruned(spark, path, f"key_{i}").count() == 1
+        assert L.read_bloom_pruned_many(spark, path, [f"key_{i}"]).count() == 1
 
 
 def test_absent_key_yields_empty(spark, bloom_table):
     path, _ = bloom_table
-    assert L.read_bloom_pruned(spark, path, "nope_xyz").count() == 0
+    assert L.read_bloom_pruned_many(spark, path, ["nope_xyz"]).count() == 0
 
 
 def test_sidecar_is_sparse_and_typed(bloom_table):
@@ -67,34 +67,36 @@ def test_delete_rewrites_only_touched_groups(spark, tmp_path):
     untouched = [g for g in mtimes if after[g] == mtimes[g]]
     assert len(untouched) >= 8 - stats["groups_rewritten"]
     # deleted keys gone, everything else intact
-    assert L.read_bloom_pruned(spark, path, 7).count() == 0
-    assert L.read_bloom_pruned(spark, path, 8).collect()[0].v == 16
+    assert L.read_bloom_pruned_many(spark, path, [7]).count() == 0
+    assert L.read_bloom_pruned_many(spark, path, [8]).collect()[0].v == 16
     assert spark.read.parquet(path).count() == 498
 
 
 def test_batched_probe_equals_union_of_single_probes(spark, bloom_table):
-    """read_bloom_pruned_many (round 15: s22 verifies its 3 forget-me ids
-    with ONE position job + ONE pruned scan) must return exactly the
-    union of the single-value reads — including a never-stored probe
+    """read_bloom_pruned_many (s22 verifies its 3 forget-me ids with ONE
+    position job + ONE pruned scan) must return exactly the rows a
+    full-scan `isin` filter returns — including a never-stored probe
     contributing nothing — and still plan a pruned scan."""
     path, _ = bloom_table
     probes = ["key_3", "key_1234", "nope_xyz"]
-    singles = sorted(
+    full_scan = sorted(
         tuple(r)
-        for v in probes
-        for r in L.read_bloom_pruned(spark, path, v).collect()
+        for r in spark.read.parquet(path)
+        .filter(F.col("k").isin(probes))
+        .drop("_grp")
+        .collect()
     )
     many_df = L.read_bloom_pruned_many(spark, path, probes)
     many = sorted(tuple(r) for r in many_df.collect())
-    assert many == singles and len(many) == 2
+    assert many == full_scan and len(many) == 2
     groups = {f.split("_grp=")[1].split("/")[0] for f in many_df.inputFiles()}
     assert len(groups) < 16  # still a pruned read, not a full scan
 
 
 def test_replayed_delete_batch_rewrites_nothing(spark, tmp_path):
-    """Round-15 (r14 verdict #5): a forget-me batch REPLAYED against the
-    layout must be short-circuited entirely by the rebuilt bitmaps —
-    zero groups rewritten, zero rows deleted, bytes untouched."""
+    """A forget-me batch REPLAYED against the layout must be
+    short-circuited entirely by the rebuilt bitmaps — zero groups
+    rewritten, zero rows deleted, bytes untouched."""
     import os
     import time as _t
 
@@ -138,6 +140,6 @@ def test_deleted_group_bitmap_rebuilt(spark, tmp_path):
     L.save_bloom_indexed(spark, df, path, "id", n_files=4)
     L.delete_bloom_keys(spark, path, list(range(0, 200, 2)))  # evens die
     for k in (1, 51, 199):
-        assert L.read_bloom_pruned(spark, path, k).count() == 1
+        assert L.read_bloom_pruned_many(spark, path, [k]).count() == 1
     for k in (0, 50, 198):
-        assert L.read_bloom_pruned(spark, path, k).count() == 0
+        assert L.read_bloom_pruned_many(spark, path, [k]).count() == 0

@@ -167,9 +167,9 @@ def test_rejects_agree_and_fall_through():
 
 
 def test_ahash_mean_luma_and_resize_agree():
-    """The downstream per-pixel consumers rewired onto the np arm in
-    round 11 — average hash, frame mean luma, nearest-neighbor resize —
-    must match their scalar twins exactly on every codec family."""
+    """The downstream per-pixel consumers that run the np arm — average
+    hash, frame mean luma, nearest-neighbor resize — must match their
+    scalar twins exactly on every codec family."""
     payloads = [
         mm._encode_bmp(_gradient(31, 17, 2)),
         _make_png(_gradient(24, 15, 9), filters=[4] * 15),
@@ -235,7 +235,7 @@ def test_idct_batch_matches_scalar_bit_exactly():
 
 
 def test_wav_np_arm_bit_exact_and_served():
-    """Round-11 audio arm: decode_wav_np + wav_features_np must be
+    """Audio np arm: decode_wav_np + wav_features_np must be
     BIT-identical to the scalar _decode_wav + _wav_features on PCM16
     payloads — mono, stereo, 3-channel, odd trailing byte, empty data —
     and decode_audio's production ladder must TAKE the np arm."""

@@ -174,63 +174,6 @@ def test_stream_stream_attribution_matches_batch(spark, sf_dir, events_stream):
     assert got == expected and len(got) > 0
 
 
-def test_transform_with_state_matches_classic_and_batch(spark, sf_dir, events_stream):
-    """Spark 4 arbitrary-state API (transformWithStateInPandas + ValueState)
-    must produce the same final per-user state as the classic
-    applyInPandasWithState operator and the batch groupBy twin.
-    transformWithState requires the RocksDB state store provider AND
-    google.protobuf for its state-server protocol — absent in this
-    container, so this runs only where protobuf exists (the classic
-    GroupState twin above is the always-tested path)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        pl.run_to_memory(
-            pl.user_running_stats_tws(events_stream), "t_user_tws",
-            output_mode="update",
-        )
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
-    from pyspark.sql.window import Window
-
-    out = spark.table("t_user_tws")
-    latest = (
-        out.withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("user_id").orderBy(F.desc("event_count"))
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    got = {
-        r["user_id"]: (r["event_count"], r["first_ms"], r["last_ms"])
-        for r in latest.collect()
-    }
-    batch = (
-        _batch_events(spark, sf_dir)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            (F.unix_millis(F.min("ts"))).alias("first_ms"),
-            (F.unix_millis(F.max("ts"))).alias("last_ms"),
-        )
-    )
-    expected = {
-        r["user_id"]: (r["c"], r["first_ms"], r["last_ms"]) for r in batch.collect()
-    }
-    assert got == expected
-
-
 def test_idempotent_sink_exactly_once(spark, tmp_path):
     """X11: the batch-id-keyed sink delivers every input row exactly once
     across restarts, and a REPLAYED micro-batch (crash between sink write
