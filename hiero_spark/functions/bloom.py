@@ -35,10 +35,10 @@ this scale shuffles are memory-speed and the build aggregation + Python
 probe overhead dominate.  The claim this module makes is about shuffle
 VOLUME, not local wall-clock: the exact path's shuffle grows with
 distinct train grams (tens of billions at 100 TB), the Bloom probe's
-with the bitmap + final doc-id distinct only.  That is why
-`functions/pipeline.py` opens the pre-filter only above broadcast
-scale; `tests/test_pipeline.py` forces the gate open and pins the same
-doc-id set.
+with the bitmap + final doc-id distinct only.  It is its own operator
+(`n6_decontamination_bloom` checks it against the exact set), not a
+pre-filter inside `contaminated_docs`: no operator switches to it on a
+plan-size estimate.
 """
 
 from __future__ import annotations

@@ -214,12 +214,19 @@ def decode_bmp_np(payload: bytes):
     return w, h_abs, np.ascontiguousarray(rgb)
 
 
+def _luma_np(arr):
+    """ITU-R 601-2 integer luma plane (int64, (h, w)) of a uint8
+    (h, w, 3) decode — the scalar decoders' per-pixel
+    (299 r + 587 g + 114 b) // 1000."""
+    a = arr.astype(np.int64)
+    return (299 * a[:, :, 0] + 587 * a[:, :, 1] + 114 * a[:, :, 2]) // 1000
+
+
 def features_np(decoded) -> list[float]:
     """Vectorized twin of multimodal._bmp_features over a (w, h, uint8
     array) decode: identical integer luma + quadrant box-average math."""
     w, h, arr = decoded
-    a = arr.astype(np.int64)
-    luma = (299 * a[:, :, 0] + 587 * a[:, :, 1] + 114 * a[:, :, 2]) // 1000
+    luma = _luma_np(arr)
     thumb = []
     for qr in range(2):
         for qc in range(2):
@@ -236,8 +243,7 @@ def ahash_ints_np(decoded, grid: int = 8):
     (pixel (i, j) -> block (i*grid DIV h, j*grid DIV w)), same strict
     cross-multiplied threshold; returns the (hi, lo) 32-bit halves."""
     w, h, arr = decoded
-    a = arr.astype(np.int64)
-    luma = (299 * a[:, :, 0] + 587 * a[:, :, 1] + 114 * a[:, :, 2]) // 1000
+    luma = _luma_np(arr)
     bi = np.arange(h) * grid // h
     bj = np.arange(w) * grid // w
     idx = (bi[:, None] * grid + bj).ravel()
@@ -258,8 +264,7 @@ def mean_luma_np(decoded):
     """Vectorized twin of multimodal._frame_mean_luma's luma stage:
     integer mean luma in [0, 255] of a (w, h, uint8 array) decode."""
     w, h, arr = decoded
-    a = arr.astype(np.int64)
-    luma = (299 * a[:, :, 0] + 587 * a[:, :, 1] + 114 * a[:, :, 2]) // 1000
+    luma = _luma_np(arr)
     return int(luma.sum()) // (w * h)
 
 

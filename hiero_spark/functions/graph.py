@@ -27,63 +27,6 @@ from pyspark.sql import DataFrame, functions as F
 
 SCALE = 1_000_000  # rank 1.0 in micro-units
 
-# Cluster-regime switch for the loop-invariant edge relation: above
-# this plan-size estimate the materialized edge list is hash-partitioned
-# by the per-round join key and persisted, so the planner sees its
-# partitioning and every round's join skips the edge-side exchange
-# entirely — rounds shuffle only the O(V) label/dist frame.  Below it
-# (every shipped SF is ~3 orders of magnitude below) the edge frame is
-# localCheckpoint'ed: a fixed-width pre-partition at local scale was
-# measured 2x WORSE (it defeats AQE's coalescing of the tiny per-round
-# shuffles), which is exactly why this is a size gate and not a
-# constant behavior.
-_PREPARTITION_BYTES = 1 << 30
-
-
-def _pin_wide(
-    df: DataFrame,
-    key: str,
-    fallback: str = "checkpoint",
-    size_hint_df: DataFrame | None = None,
-) -> DataFrame:
-    """Materialize a loop-invariant relation for an iterative operator.
-
-    Gate ON (plan estimate > _PREPARTITION_BYTES): repartition by `key`
-    into spark.sql.shuffle.partitions, persist (tracked — released via
-    release_caches(), the operator-internal cache contract), and
-    materialize with a count.  Persist, not checkpoint, on purpose: a
-    localCheckpoint erases the partitioning from the planner's view (a
-    LogicalRDD has unknown partitioning), while the cached repartition
-    keeps hashpartitioning(key) visible so EnsureRequirements drops the
-    per-round edge-side exchange.
-
-    Gate OFF: `fallback` — "checkpoint" (lineage cut + materialized) or
-    "asis" (caller composes lazily over already-materialized inputs).
-
-    `size_hint_df`: estimate from THIS frame's plan instead of `df`'s —
-    required when `df` is built over already-checkpointed inputs, whose
-    LogicalRDD stats degenerate to spark.sql.defaultSizeInBytes
-    (Long.MaxValue — the gate would always fire).  Callers pass the
-    pre-checkpoint source plan, which carries real scan statistics.
-    """
-    spark = df.sparkSession
-    try:
-        basis = size_hint_df if size_hint_df is not None else df
-        est = int(
-            basis._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        est = 0
-    if est > _PREPARTITION_BYTES:
-        from hiero_spark.functions._cachetrack import persist_tracked
-
-        p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        wide = persist_tracked(df.repartition(p, key))
-        wide.count()  # materialize now — the checkpoint's role
-        return wide
-    return df.localCheckpoint() if fallback == "checkpoint" else df
-
-
 def pagerank(
     edges: DataFrame,
     n_iter: int = 3,
@@ -101,10 +44,9 @@ def pagerank(
     # contribs join re-derives the caller's edge plan and every ranks
     # rebuild re-runs the nodes distinct and the outdeg aggregation —
     # 3 redundant subplans per iteration.
-    ed = _pin_wide(
-        edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")),
-        "e_src",
-    )
+    ed = edges.select(
+        F.col(src).alias("e_src"), F.col(dst).alias("e_dst")
+    ).localCheckpoint()
     nodes = (
         ed.select(F.col("e_src").alias("node"))
         .union(ed.select(F.col("e_dst").alias("node")))
@@ -350,9 +292,9 @@ def connected_components(
     for elsewhere: round 1 runs NO join at all (the initial labels are
     the identity, so the neighbor-min is a plain aggregation over the
     self-looped edge list); the self-looped union is not separately
-    checkpointed (both of its inputs already are — re-deriving a union
-    per round is free); and one setup distinct covers both endpoint
-    sources.
+    checkpointed or pre-partitioned, at any input size (both of its
+    inputs already are checkpointed — re-deriving a union per round is
+    free); and one setup distinct covers both endpoint sources.
 
     The symmetrized edge list is materialized ONCE up front (the
     bfs_levels lesson): without it every round's joins
@@ -384,20 +326,9 @@ def connected_components(
     # one distinct covers both sources
     endpoints = endpoints.distinct().localCheckpoint()
     # lazy union: both inputs are checkpointed, so per-round re-derivation
-    # is a free concat — a third checkpoint would buy nothing.  Above
-    # the cluster-regime gate the union IS worth materializing, hash-
-    # partitioned by the per-round join key (size hint = the caller's
-    # edge plan: symx is built over checkpointed inputs whose stats
-    # degenerate).
-    symx = _pin_wide(
-        sym.union(
-            endpoints.select(
-                F.col("node").alias("u"), F.col("node").alias("v")
-            )
-        ),
-        "v",
-        fallback="asis",
-        size_hint_df=edges,
+    # is a free concat — a third checkpoint would buy nothing
+    symx = sym.union(
+        endpoints.select(F.col("node").alias("u"), F.col("node").alias("v"))
     )
     labels = None  # identity through round 1 — see below
     for it in range(n_iter):
@@ -502,12 +433,9 @@ def bfs_levels(
     # materialize the symmetrized edge list ONCE: without this, every
     # round's join re-derives the caller's edge plan (e.g. the
     # orders⋈lineitem distinct) — measured 6.2 s -> 4.0 s at sf0.1; the residual is per-round job overhead, not data. dist accumulates as LAYERS (each hop's checkpointed frame, unioned lazily) so no round rewrites the whole O(V) table — local wall is indifferent at sf0.1, the 100 TB write amplification is not
-    sym = _pin_wide(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        ),
-        "u",
-    )
+    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
+        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+    ).localCheckpoint()
     dist = (
         sources.select(F.col(sources.columns[0]).alias("node"))
         .distinct()
@@ -568,18 +496,13 @@ def bellman_ford(
     """
     # one-time edge materialization (the bfs_levels lesson): rounds must
     # relax a stored table, not re-run the caller's edge derivation
-    sym = _pin_wide(
+    sym = edges.select(
+        F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w"),
+    ).union(
         edges.select(
-            F.col(src).alias("u"), F.col(dst).alias("v"),
-            F.col(weight).alias("w"),
-        ).union(
-            edges.select(
-                F.col(dst).alias("u"), F.col(src).alias("v"),
-                F.col(weight).alias("w"),
-            )
-        ),
-        "u",
-    )
+            F.col(dst).alias("u"), F.col(src).alias("v"), F.col(weight).alias("w"),
+        )
+    ).localCheckpoint()
     dist = (
         sources.select(F.col(sources.columns[0]).alias("node"))
         .distinct()
@@ -624,12 +547,10 @@ def label_propagation(
     """
     from pyspark.sql.window import Window
 
-    sym = _pin_wide(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        ),
-        "v",
-    )  # rounds join a stored table, not the edge plan
+    # rounds join a stored table, not the edge plan
+    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
+        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+    ).localCheckpoint()
     seed_df = (
         seeds.select(
             F.col(seeds.columns[0]).alias("node"),

@@ -370,8 +370,7 @@ def _decode_wav(payload: bytes):
 
 def _wav_features(mono, rate: int, channels: int) -> list[float]:
     """8-dim audio feature: duration s, rate/1e5, channels/8, RMS, peak,
-    3 thirds-energy bins. Scalar reference for codec_np.wav_features_np,
-    and the feature step of the IMA-ADPCM path."""
+    3 thirds-energy bins. Scalar reference for codec_np.wav_features_np."""
     n = len(mono)
     third = max(n // 3, 1)
     energies = []
@@ -383,29 +382,44 @@ def _wav_features(mono, rate: int, channels: int) -> list[float]:
     return [n / float(rate), rate / 1e5, channels / 8.0, rms, peak] + energies
 
 
+def _decode_wav_any(payload: bytes):
+    """The runtime audio decode: PCM16 WAV through the numpy arm
+    (codec_np.decode_wav_np, bit-identical to the scalar `_decode_wav`),
+    then mono IMA-ADPCM WAV (`_decode_wav_ima`; its serial predictor has
+    no numpy arm).  Returns (mono float64 ndarray, rate, channels) or
+    None for bytes neither recognizes."""
+    import numpy as np
+
+    from hiero_spark.functions import codec_np
+
+    try:
+        decoded = codec_np.decode_wav_np(payload)
+        if decoded is not None:
+            return decoded
+    except Exception:
+        # an unexpected decode error falls through to the IMA arm
+        # instead of failing the whole Arrow batch
+        pass
+    decoded = _decode_wav_ima(payload)
+    if decoded is None:
+        return None
+    mono, rate, channels = decoded
+    return np.asarray(mono, dtype=np.float64), rate, channels
+
+
 def decode_audio(payload: bytes) -> list[float]:
     """Audio decode + feature-extract (8-dim: duration s, sample rate /
-    1e5, channel count / 8, RMS, peak, and 3 coarse thirds-energy bins).
-    PCM16 WAV takes the numpy arm (codec_np.py, bit-identical to the
-    scalar `_decode_wav` + `_wav_features`); mono IMA-ADPCM WAV, whose
-    serial predictor has no numpy arm, takes `_decode_wav_ima`; other
-    bytes get the deterministic stub (the same digest features as
-    images)."""
+    1e5, channel count / 8, RMS, peak, and 3 coarse thirds-energy bins)
+    through `_decode_wav_any` and codec_np.wav_features_np (bit-identical
+    to the scalar `_wav_features`); other bytes get the deterministic
+    stub (the same digest features as images)."""
     if payload is None:
         raise NotImplementedError("payload must be non-null")
     from hiero_spark.functions import codec_np
 
-    try:
-        dec_np = codec_np.decode_wav_np(payload)
-        if dec_np is not None:
-            return codec_np.wav_features_np(*dec_np)
-    except Exception:
-        # an unexpected decode error falls through to the IMA arm and
-        # then the stub instead of failing the whole Arrow batch
-        pass
-    decoded = _decode_wav_ima(payload)
+    decoded = _decode_wav_any(payload)
     if decoded is not None:
-        return _wav_features(*decoded)
+        return codec_np.wav_features_np(*decoded)
     return decode_image_stub(payload)
 
 
@@ -572,12 +586,13 @@ def _decode_framepack(payload: bytes):
 
 def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
     """REAL video frame sampling: parse the framepack container, take
-    every `every_n`-th frame, decode it with the vendored BMP decoder,
-    and emit per-frame stats (dimensions + mean luma). Arrow-batched
-    mapInPandas like the other decode paths — one row in, k rows out,
-    the 1:N shape metadata-only frame_sample_stub cannot produce.
+    every `every_n`-th frame, decode it through the numpy arm
+    (codec_np.decode_pixels_np: BMP, PNG or JPEG), and emit per-frame
+    stats (dimensions + mean luma). Arrow-batched mapInPandas like the
+    other decode paths — one row in, k rows out, the 1:N shape
+    metadata-only frame_sample_stub cannot produce.
     Non-framepack payloads yield no rows (they are not videos)."""
-    import pandas as pd
+    from hiero_spark.functions import codec_np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -589,21 +604,11 @@ def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
                 for idx in range(0, len(frames), every_n):
                     # frames may be BMP, PNG, or JPEG — the container
                     # is codec-agnostic, like MJPEG-in-AVI
-                    from hiero_spark.functions.jpeg import decode_jpeg
-
-                    dec = (
-                        _decode_bmp(frames[idx])
-                        or _decode_png(frames[idx])
-                        or decode_jpeg(frames[idx])
-                    )
+                    dec = codec_np.decode_pixels_np(frames[idx])
                     if dec is None:
                         continue
-                    w, h, rows = dec
-                    acc = sum(
-                        (299 * r + 587 * g + 114 * b) // 1000
-                        for row in rows
-                        for r, g, b in row
-                    )
+                    w, h, arr = dec
+                    acc = int(codec_np._luma_np(arr).sum())
                     out["media_id"].append(mid)
                     out["frame_idx"].append(idx)
                     out["width"].append(w)
@@ -802,20 +807,51 @@ def synthetic_tone_media(
     return base.mapInPandas(run, "media_id long, payload binary")
 
 
+def _spectral_row(mono, rate: int, n_fft: int) -> tuple:
+    """(dominant_bin, dominant_hz, centroid_hz, rolloff_hz, flatness) of
+    one clip's first `n_fft` samples (zero-padded if shorter)."""
+    import numpy as np
+
+    x = np.zeros(n_fft, dtype=np.float64)
+    seg = np.asarray(mono[:n_fft], dtype=np.float64)
+    x[: len(seg)] = seg
+    mag = np.abs(np.fft.rfft(x))
+    power = mag * mag
+    tot = float(power.sum())
+    freqs = np.arange(len(mag)) * (rate / n_fft)
+    if tot <= 0.0:
+        dom = 0
+        centroid = rolloff = 0.0
+        flat = 1.0
+    else:
+        dom = int(mag.argmax())
+        centroid = float((freqs * mag).sum() / mag.sum())
+        cum = np.cumsum(power)
+        rolloff = float(freqs[int(np.searchsorted(cum, 0.85 * tot))])
+        nz = power[power > 0.0]
+        flat = float(np.exp(np.log(nz).mean()) / (tot / len(power)))
+    return (
+        dom,
+        round(dom * rate / n_fft, 6),
+        round(centroid, 6),
+        round(rolloff, 6),
+        round(flat, 9),
+    )
+
+
 def spectral_features(media: DataFrame, n_fft: int = 2048) -> DataFrame:
     """Frequency-domain audio features via numpy rFFT, one Arrow batch at
     a time: dominant bin/Hz (argmax of magnitude), spectral centroid
     (magnitude-weighted mean frequency), 85% energy rolloff, and spectral
     flatness (geometric / arithmetic mean of power, 0 = tonal, 1 = noise).
 
-    Decode rides the vendored ladder (`_decode_wav` PCM16, then
+    Decode is `_decode_wav_any` (PCM16 through the numpy arm, then
     IMA-ADPCM); payloads neither recognizes emit no row — they are not
     audio. Clips are analyzed over their first `n_fft` samples
     (zero-padded if shorter) so bin width is fixed at rate/n_fft and
     features across clips are comparable. Per-clip cost is O(n_fft log
     n_fft) inside the worker; nothing leaves the executor but the
     8-column feature row."""
-    import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -825,39 +861,19 @@ def spectral_features(media: DataFrame, n_fft: int = 2048) -> DataFrame:
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 if payload is None:
                     continue
-                raw = bytes(payload)
-                decoded = _decode_wav(raw) or _decode_wav_ima(raw)
+                decoded = _decode_wav_any(bytes(payload))
                 if decoded is None:
                     continue
                 mono, rate, _ = decoded
-                x = np.zeros(n_fft, dtype=np.float64)
-                seg = np.asarray(mono[:n_fft], dtype=np.float64)
-                x[: len(seg)] = seg
-                mag = np.abs(np.fft.rfft(x))
-                power = mag * mag
-                tot = float(power.sum())
-                freqs = np.arange(len(mag)) * (rate / n_fft)
-                if tot <= 0.0:
-                    dom = 0
-                    centroid = rolloff = 0.0
-                    flat = 1.0
-                else:
-                    dom = int(mag.argmax())
-                    centroid = float((freqs * mag).sum() / mag.sum())
-                    cum = np.cumsum(power)
-                    rolloff = float(freqs[int(np.searchsorted(cum, 0.85 * tot))])
-                    nz = power[power > 0.0]
-                    flat = float(
-                        np.exp(np.log(nz).mean()) / (tot / len(power))
-                    )
                 out["media_id"].append(mid)
                 out["sample_rate"].append(rate)
                 out["n_samples"].append(len(mono))
-                out["dominant_bin"].append(dom)
-                out["dominant_hz"].append(round(dom * rate / n_fft, 6))
-                out["centroid_hz"].append(round(centroid, 6))
-                out["rolloff_hz"].append(round(rolloff, 6))
-                out["flatness"].append(round(flat, 9))
+                for k, v in zip(
+                    ("dominant_bin", "dominant_hz", "centroid_hz",
+                     "rolloff_hz", "flatness"),
+                    _spectral_row(mono, rate, n_fft),
+                ):
+                    out[k].append(v)
             yield pd.DataFrame(out)
 
     return media.select("media_id", "payload").mapInPandas(run, SPECTRAL_SCHEMA)
@@ -1250,7 +1266,7 @@ def synthetic_segment_audio(
 
 
 def audio_window_signatures(media: DataFrame, win: int = 256) -> DataFrame:
-    """Per-window audio signature: decode (PCM16/ADPCM WAV ladder),
+    """Per-window audio signature: decode (`_decode_wav_any`),
     recover exact int16 magnitudes (round(sample * 32768) inverts the
     dyadic normalization losslessly), and emit the mean |amplitude| of
     each full non-overlapping window as an exact long (sum DIV win) —
@@ -1262,19 +1278,10 @@ def audio_window_signatures(media: DataFrame, win: int = 256) -> DataFrame:
         for pdf in batches:
             out = {"media_id": [], "win_idx": [], "sig": []}
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                dec = _decode_wav(bytes(payload)) if payload is not None else None
-                if dec is None:
-                    dec = (
-                        _decode_wav_ima(bytes(payload))
-                        if payload is not None
-                        else None
-                    )
+                dec = _decode_wav_any(bytes(payload)) if payload is not None else None
                 if dec is None:
                     continue
-                samples = dec[0]
-                mags = np.abs(
-                    np.round(np.asarray(samples) * 32768.0)
-                ).astype(np.int64)
+                mags = np.abs(np.round(dec[0] * 32768.0)).astype(np.int64)
                 for w0 in range(0, len(mags) - win + 1, win):
                     out["media_id"].append(mid)
                     out["win_idx"].append(w0 // win)

@@ -149,71 +149,6 @@ def token_vocab(df: DataFrame, text_col: str, k: int = 20) -> DataFrame:
     )
 
 
-def _parse_size_bytes(v: str) -> int:
-    """Parse a Spark size conf ('67108864', '10MB', '64m', '-1')."""
-    s = str(v).strip().lower()
-    mult = 1
-    for suf, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                   ("tb", 1 << 40), ("k", 1 << 10), ("m", 1 << 20),
-                   ("g", 1 << 30), ("t", 1 << 40), ("b", 1)):
-        if s.endswith(suf):
-            s, mult = s[: -len(suf)], m
-            break
-    try:
-        return int(float(s) * mult)
-    except ValueError:
-        return -1
-
-
-def _past_broadcast_scale(df: DataFrame) -> int | None:
-    """Catalyst's size estimate for `df`'s optimized plan, IF it exceeds
-    the session's broadcast threshold — else None.
-
-    This is the size gate decontamination uses: below the threshold the
-    planner broadcasts the distinct
-    train-gram side and the semi-join is already shuffle-free on the
-    eval side, so a Bloom pre-filter would only add work; above it the
-    join degrades to a full shuffle of the eval gram stream and the
-    pre-filter pays.  The decision tracks the same statistics the
-    planner itself uses — no constant tuned to any local scale.  A
-    disabled threshold (<= 0) means every semi-join shuffles, so the
-    reference falls back to the 10 MB Spark default."""
-    spark = df.sparkSession
-    try:
-        thr = _parse_size_bytes(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-        )
-        if thr <= 0:
-            thr = 10 * 1024 * 1024
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return None
-    return est if est > thr else None
-
-
-def _bloom_prefilter(ev: DataFrame, tr_items: DataFrame, col: str,
-                     est_bytes: int) -> DataFrame:
-    """Drop definitely-uncontaminated rows from the eval gram stream
-    BEFORE the exact semi-join shuffles it: fold the train
-    grams into a broadcast Bloom bitmap (bounded bit_or shuffle — grams
-    never distinct, never move) and keep only eval rows whose gram
-    might be present.  No false negatives, so the semi-join result is
-    unchanged; false positives only cost residual shuffle.  The bitmap
-    is sized from the same plan estimate that opened the gate
-    (~1 gram per 6 input bytes, ~16 bits per gram), clamped to
-    [4M bits, 1G bits] so the broadcast stays a few MB-to-128MB."""
-    from hiero_spark.functions.bloom import bloom_filter_members, build_bloom
-
-    est_grams = max(1, est_bytes // 6)
-    m_bits = 1 << 22
-    while m_bits < est_grams * 16 and m_bits < (1 << 30):
-        m_bits <<= 1
-    bitmap = build_bloom(tr_items, col, m_bits=m_bits)
-    return bloom_filter_members(ev, col, bitmap, m_bits)
-
-
 def _gram_stream(df: DataFrame, text_col: str, id_col: str, k: int,
                  hashed: bool) -> DataFrame:
     """(doc, gram): one row per distinct word k-gram of each document —
@@ -226,22 +161,6 @@ def _gram_stream(df: DataFrame, text_col: str, id_col: str, k: int,
     )
     return _fan_out(df, id_col).select(
         F.col(id_col).alias("doc"), F.explode(grams).alias("gram")
-    )
-
-
-def _contaminated_ids(ev: DataFrame, tr_grams: DataFrame,
-                      train_text: DataFrame, id_col: str) -> DataFrame:
-    """`ev` is (doc, gram) eval grams, `tr_grams` the train grams in the
-    one column `gram`.  Above broadcast scale of `train_text` the eval
-    grams are Bloom-pre-filtered; then one semi-join against the distinct
-    train grams, and the distinct eval doc ids, named `id_col`."""
-    est = _past_broadcast_scale(train_text)
-    if est is not None:
-        ev = _bloom_prefilter(ev, tr_grams, "gram", est)
-    return (
-        ev.join(tr_grams.distinct(), "gram", "left_semi")
-        .select(F.col("doc").alias(id_col))
-        .distinct()
     )
 
 
@@ -267,16 +186,18 @@ def contaminated_docs(
     string averages ~20 bytes; the hash is 8) and compare in constant
     time.
 
-    Above broadcast scale (the train relation's plan estimate exceeds
-    the session broadcast threshold — see `_past_broadcast_scale`), the
-    eval gram stream is Bloom-pre-filtered before the semi-join: the
-    exact join survives as the verifier, but the shuffle it pays is
-    bounded by (probably-contaminated + fp) grams instead of every eval
-    gram.  Below the threshold nothing changes — the planner already
-    broadcasts the train side."""
+    The semi-join is the whole operator at every scale: the planner
+    broadcasts the distinct train grams when they are small and
+    shuffles both sides otherwise.  The broadcast Bloom probe
+    (`bloom.contaminated_docs_bloom`) is a separate operator, not a
+    pre-filter of this one."""
     ev = _gram_stream(eval_df, text_col, id_col, k, hashed)
     tr_grams = _gram_stream(train_df, text_col, id_col, k, hashed).select("gram")
-    return _contaminated_ids(ev, tr_grams, train_df.select(text_col), id_col)
+    return (
+        ev.join(tr_grams.distinct(), "gram", "left_semi")
+        .select(F.col("doc").alias(id_col))
+        .distinct()
+    )
 
 
 def pack_into_bins(

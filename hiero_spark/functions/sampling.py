@@ -6,7 +6,7 @@ proportional to length/quality-mass" — but binomial samplers
 Efraimidis-Spirakis keys (u^(1/w)) need pow(), which is not
 ulp-guaranteed across engines — so E-S SCORES can never be
 hash-verified (though the selected SET can: see
-weighted_kmin_sample's boundary-gap argument, round 13). This
+weighted_kmin_sample's boundary-gap argument). This
 implements SYSTEMATIC PPS sampling first (the survey-sampling /
 index-sampling standard): lay the k thresholds W*(2i+1)/(2k) over the
 cumulative weight line in a stable key order, and a row is selected
@@ -45,8 +45,8 @@ def systematic_pps_sample(
     Weights must be NONNEGATIVE integers (negatives would break the
     monotone cumulative line the systematic thresholds walk); an empty
     input or all-zero weights yields an empty sample, mirroring the
-    grouped variant's `_tw > 0` guard (round-7 ADVICE: tot=0 previously
-    reached the SQL as a division by zero)."""
+    grouped variant's `_tw > 0` guard (a zero total would otherwise
+    reach the SQL as a division by zero)."""
     d = (
         df.select(order_col, F.col(weight_col).cast("long").alias("_w"))
         .repartitionByRange(n_parts, F.col(order_col))
@@ -121,7 +121,7 @@ def systematic_pps_sample_grouped(
     thresholds as `systematic_pps_sample`; groups whose total weight is
     0 contribute nothing.
 
-    Scale shape (round 10): with LOW-cardinality groups the per-group
+    Scale shape: with LOW-cardinality groups the per-group
     cumulative window serializes each group's whole sequence onto one
     task — the same trap stratified_sample/ordered_lead closed.  The
     prefix sum therefore runs the two-phase form per (group, physical
@@ -234,27 +234,17 @@ def hash_sample(
     key_col: str,
     fraction: float,
     salt: str = "",
-    method: str = "md5",
 ) -> DataFrame:
     """Deterministic content-addressed Bernoulli sample: keep a row iff
     the md5 of (key || '|' || salt) falls under the fraction threshold.
 
-    Two hash arms, same contract (reproducible across re-runs,
-    repartitionings, and appends; superset-monotone in the fraction;
-    NULL keys dropped at EVERY fraction including 1.0 — the early
-    return applies the same isNotNull filter, so there is no
-    behavioral discontinuity at the boundary):
-
-    * ``method="md5"`` (default) — cross-engine PORTABLE: any engine
-      with md5() evaluates the identical predicate, which is what makes
-      n6_hash_sample fully oracle-verifiable.
-    * ``method="xxhash64"`` — the PRODUCTION arm for 100 TB scans:
-      Spark's codegen'd 8-byte xxhash64 skips the digest and hex
-      string entirely; measured 2.8x end-to-end over the md5 arm at
-      64M rows on 32 cores (1.77 -> 0.63 s — the scan bounds the win;
-      the per-expression gap is larger).  Spark-specific: verified
-      against the md5 arm's statistical properties in tests, not
-      cross-engine.
+    Contract: reproducible across re-runs, repartitionings, and
+    appends; superset-monotone in the fraction; NULL keys dropped at
+    EVERY fraction including 1.0 — the early return applies the same
+    isNotNull filter, so there is no behavioral discontinuity at the
+    boundary.  md5 is cross-engine PORTABLE: any engine with md5()
+    evaluates the identical predicate, which is what makes
+    n6_hash_sample fully oracle-verifiable.
 
     Why not df.sample()/rand(seed): those are seeded per-partition, so
     the kept set changes with partitioning, input order, and engine —
@@ -282,30 +272,15 @@ def hash_sample(
     """
     if not (0.0 <= fraction <= 1.0):
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    if method not in ("md5", "xxhash64"):
-        raise ValueError(f"method must be md5 or xxhash64, got {method!r}")
     if fraction >= 1.0:
-        # Round-11 ADVICE: the early return must not change NULL
-        # semantics at the boundary — at every fraction < 1.0 a NULL key
-        # yields a NULL predicate and the row is dropped, so fraction=1.0
-        # drops them too (the contract is unconditional, and superset
-        # monotonicity now holds over the FULL [0, 1] range, not just
-        # [0, 1)).  Still shuffle-free: a map-side IsNotNull that pushes
+        # the early return must not change NULL semantics at the
+        # boundary — at every fraction < 1.0 a NULL key yields a NULL
+        # predicate and the row is dropped, so fraction=1.0 drops them
+        # too (the contract is unconditional, and superset monotonicity
+        # holds over the FULL [0, 1] range, not just [0, 1)).  Still shuffle-free: a map-side IsNotNull that pushes
         # to the parquet scan.
         return df.filter(F.col(key_col).isNotNull())
     keyed = F.concat(F.col(key_col).cast("string"), F.lit("|" + salt))
-    if method == "xxhash64":
-        # signed long -> uniform [0, 2^32) bucket; same lexicographic-
-        # threshold monotonicity as the hex arm (superset property).
-        # NULL-key guard is EXPLICIT here: Spark's xxhash64(NULL) is the
-        # seed (a non-null long), not NULL — without the isNotNull the
-        # arm would keep every NULL key and diverge from the md5 arm's
-        # three-valued drop.
-        bucket = F.pmod(F.xxhash64(keyed), F.lit(1 << 32))
-        return df.filter(
-            F.col(key_col).isNotNull()
-            & (bucket < F.lit(int(fraction * (1 << 32))))
-        )
     threshold = format(int(fraction * 16**8), "08x")
     return df.filter(F.substring(F.md5(keyed), 1, 8) < F.lit(threshold))
 
@@ -316,12 +291,11 @@ def hash_sample_grouped(
     group_col: str,
     fractions: dict[str, float],
     salt: str = "",
-    method: str = "md5",
     default: float = 0.0,
 ) -> DataFrame:
     """Content-addressed GROUPED Bernoulli sample: each group (language,
     source, domain, ...) keeps rows at its own fraction, decided by the
-    same md5/xxhash64 verdict as hash_sample — the deterministic twin of
+    same md5 verdict as hash_sample — the deterministic twin of
     mixture_sample (functions/pipeline.py), which uses sampleBy's
     per-partition seeded coins and therefore changes its kept set under
     repartitioning, appends, or another engine.
@@ -343,9 +317,7 @@ def hash_sample_grouped(
       * a group ABSENT from `fractions` (and a NULL group) samples at
         `default` (0.0 = dropped), so an unexpected new domain in a
         100 TB scan fails closed instead of flooding the mix.
-      * method="md5" is the cross-engine-portable arm (the oracle runs
-        the identical CASE/threshold predicate); "xxhash64" is the
-        codegen'd production arm with integer thresholds.
+      * the oracle runs the identical CASE/threshold predicate.
 
     Scale shape: one CASE expression over the group column + the same
     narrow map-side filter as hash_sample — no shuffle, no join against
@@ -356,21 +328,7 @@ def hash_sample_grouped(
     for g, f in fractions.items():
         if not (0.0 <= f <= 1.0):
             raise ValueError(f"fraction for {g!r} must be in [0, 1], got {f}")
-    if method not in ("md5", "xxhash64"):
-        raise ValueError(f"method must be md5 or xxhash64, got {method!r}")
     keyed = F.concat(F.col(key_col).cast("string"), F.lit("|" + salt))
-
-    if method == "xxhash64":
-        bucket = F.pmod(F.xxhash64(keyed), F.lit(1 << 32))
-        thr = None
-        for g, frac in fractions.items():
-            lim = F.lit(int(frac * (1 << 32)))
-            cond = F.col(group_col) == F.lit(g)
-            thr = F.when(cond, lim) if thr is None else thr.when(cond, lim)
-        thr = (thr.otherwise(F.lit(int(default * (1 << 32))))
-               if thr is not None else F.lit(int(default * (1 << 32))))
-        # explicit NULL-key guard: xxhash64(NULL) is the seed, not NULL
-        return df.filter(F.col(key_col).isNotNull() & (bucket < thr))
 
     def _hex_threshold(frac: float) -> str:
         # 'g' sorts above every hex digit, so frac >= 1.0 keeps every
@@ -424,7 +382,7 @@ def kmin_sample(
         raise ValueError(f"k must be positive, got {k}")
     # collision-free temp name: withColumn would silently REPLACE a
     # pre-existing column of the same name and drop() would then remove
-    # it, corrupting the caller's schema (round-12 ADVICE).
+    # it, corrupting the caller's schema.
     tmp = "_kmin_h"
     while tmp in df.columns:
         tmp += "_"
@@ -439,8 +397,8 @@ def kmin_sample(
 
 
 def _temp_col(df: DataFrame, base: str) -> str:
-    """Collision-free temp column name (round-12 ADVICE: withColumn
-    silently replaces an existing column of the same name)."""
+    """Collision-free temp column name (withColumn silently replaces an
+    existing column of the same name)."""
     name = base
     while name in df.columns:
         name += "_"

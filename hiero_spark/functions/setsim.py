@@ -341,14 +341,14 @@ def _containment_prepared(
     k: int,
     text_col: str,
     id_col: str,
-    hashed: bool,
-    expand: bool,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared candidate pipeline: (sized distinct-set groups, deduped
     candidate GROUP pairs).  See containment_join for the algorithm;
     shingling, rarest-first ordering, identical-set collapse, and prefix
     sizing live in _collapsed_sized (shared with the Jaccard join)."""
-    sized = _collapsed_sized(docs, threshold, k, text_col, id_col, hashed, expand)
+    sized = _collapsed_sized(
+        docs, threshold, k, text_col, id_col, hashed=False, expand=True
+    )
     tt = float(threshold)
     # df==1 tokens appear in exactly one doc, so they can only ever match
     # their own set — pruning them from BOTH posting sides is sound (a
@@ -382,14 +382,11 @@ def containment_candidates(
     k: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hashed: bool = False,
 ) -> DataFrame:
     """Deduped candidate GROUP pairs before verification — the
     candidate volume that the prefix filter and the identical-set collapse
     bound, exposed for tests and skew diagnostics."""
-    _sized, pairs = _containment_prepared(
-        docs, threshold, k, text_col, id_col, hashed, expand=False
-    )
+    _sized, pairs = _containment_prepared(docs, threshold, k, text_col, id_col)
     return pairs
 
 
@@ -399,8 +396,6 @@ def containment_join(
     k: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hashed: bool = False,
-    expand_identical: bool = True,
 ) -> DataFrame:
     """Directional set-CONTAINMENT join: all ordered pairs (a != b) where
     |A n B| / |A| >= threshold over word-k-gram shingle sets — the
@@ -422,23 +417,12 @@ def containment_join(
     a hot snippet's verbatim copies each carried a hot prefix token.
     The length filter |B| >= t*|A| prunes before pair dedup; arrays join
     back once per side onto the deduped pair list (`_verify_rows`, shared
-    with jaccard_join).
-
-    ``expand_identical=False`` is the extreme-duplication arm: instead of
-    materializing member-level pairs (g copies quoted in p pages = g*p
-    rows plus the g^2 intra-group clique), return GROUP-level rows —
-    representative ids with ``count_a``/``count_b`` multiplicities, and
-    one self-row (id_a == id_b) per duplicate group standing for its
-    intra-group clique.  The default expands to exactly the historical
-    member-level contract.
-
-    ``hashed=True`` swaps string shingles for xxhash64 longs end-to-end
-    (the 100 TB arm, ~3x smaller shuffles; 2^-64 per-pair collisions)."""
+    with jaccard_join).  Each verified group pair then expands to its
+    member-level pairs, and each duplicate group to its intra-group
+    clique."""
     tt = float(threshold)
-    sized, pairs = _containment_prepared(
-        docs, threshold, k, text_col, id_col, hashed, expand=expand_identical
-    )
-    cand = _verify_rows(docs, sized, pairs, expand_identical)
+    sized, pairs = _containment_prepared(docs, threshold, k, text_col, id_col)
+    cand = _verify_rows(docs, sized, pairs, expand=True)
     inter = F.size(F.array_intersect("s_a", "s_b"))
     cont = inter.cast("double") / F.size("s_a").cast("double")
     inter_groups = cand.filter(cont >= tt).select(
@@ -447,9 +431,8 @@ def containment_join(
         inter.cast("long").alias("n_common"),
         F.size("s_a").cast("long").alias("n_a"),
         F.round(cont, 6).alias("containment"),
-        F.col("n_ids_a").alias("count_a"),
-        F.col("n_ids_b").alias("count_b"),
-        *([F.col("ids_a"), F.col("ids_b")] if expand_identical else []),
+        "ids_a",
+        "ids_b",
     )
     # identical nonempty sets are mutually contained: one clique per
     # duplicate group (containment exactly 1.0, n_common = n_a = |s|)
@@ -459,13 +442,9 @@ def containment_join(
         F.size("s").cast("long").alias("n_common"),
         F.size("s").cast("long").alias("n_a"),
         F.lit(1.0).alias("containment"),
-        F.col("n_ids").alias("count_a"),
-        F.col("n_ids").alias("count_b"),
-        *([F.col("ids").alias("ids_a"), F.col("ids").alias("ids_b")]
-          if expand_identical else []),
+        F.col("ids").alias("ids_a"),
+        F.col("ids").alias("ids_b"),
     )
-    if not expand_identical:
-        return inter_groups.unionByName(dup_groups)
     out_cols = ["id_a", "id_b", "n_common", "n_a", "containment"]
     expanded_inter = (
         inter_groups.withColumn("id_a", F.explode("ids_a"))

@@ -18,11 +18,8 @@ Scale shape:
 - reconstruction is per-row Catalyst (filter token positions against
   the doc's covered-set array) — documents never shuffle.
 
-The gram key travels as the STRING (DuckDB has no xxhash64, and the
-oracle must recompute identical keys); a production run at 100 TB
-passes hashed=True to shuffle 8-byte xxhash64 longs instead — the same
-string/hashed pairing as contaminated_docs(hashed=...), with collisions at
-~2^-64 per pair.
+The gram key travels as the STRING: the oracle recomputes identical
+keys (DuckDB has no xxhash64).
 
 Reconstruction is canonicalized: tokens are the lowercase/trim/split
 tokenization (the span-matching domain), rejoined single-spaced.
@@ -52,17 +49,13 @@ def remove_repeated_spans(
     text_col: str,
     id_col: str,
     k: int = 16,
-    hashed: bool = False,
 ) -> DataFrame:
     """(doc_id, clean_text, n_removed): corpus with every repeated
     k-token span kept only at its first (doc, pos) occurrence."""
-    key = (lambda g: F.xxhash64(g)) if hashed else (lambda g: g)
     base = fan_out(df, id_col)
     spans = base.select(
         F.col(id_col).alias("doc"),
-        F.posexplode(
-            F.transform(_position_grams(F.col(text_col), k), lambda g: key(g))
-        ).alias("pos", "gram"),
+        F.posexplode(_position_grams(F.col(text_col), k)).alias("pos", "gram"),
     )
     keepers = spans.groupBy("gram").agg(
         F.min(F.struct("doc", "pos")).alias("keep")

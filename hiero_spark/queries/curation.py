@@ -662,7 +662,7 @@ def n2_recall_at_k(spark, sf_dir):
     # the (k, n_overlap, recall) rows — the old per-k union of three
     # j.agg() branches re-ran the whole upstream (quantized scan + both
     # top-k windows + the full-outer join) once per k, tripling the query
-    # (round-14: 2.30 s -> one upstream pass; identical output rows)
+    # (measured 2.30 s before; one upstream pass, identical output rows)
     def hit(k):
         return F.sum(
             F.when((F.col("rank_e") <= k) & (F.col("rank_a") <= k), 1)
@@ -763,7 +763,7 @@ def _pca_model(spark, emb, dim, sf_dir):
         "exact full-dim rerank of candidates only. The projection is fit "
         "ONCE and persisted (fit_pca_model, functions/rerank.py) — the "
         "save_ivf build/probe split; the probe loads d*(k+1) doubles and "
-        "scans the corpus once (round-6 fix: the per-query Gram refit "
+        "scans the corpus once (a per-query Gram refit "
         "was 5.5 s/call, all training). Rows-only (the candidate set "
         "depends on the eigenfit); the verdict twin pins the pipeline's "
         "exactness properties. HONEST NEGATIVE on this corpus: the "
@@ -865,7 +865,7 @@ def n4_normalize_text(spark, sf_dir):
 @query(
     "n5_curation_pipeline2",
     group="N5",
-    doc="Round-6 composed curation pass, one plan end to end: keep-first "
+    doc="Composed curation pass, one plan end to end: keep-first "
         "line dedup (raw text — line structure must survive to this "
         "stage) -> unicode normalization -> char-entropy + quality + "
         "stopword-prose gates "
@@ -1093,7 +1093,7 @@ def n7_connected_components(spark, sf_dir):
             (F.col("doc_id") + 1).alias("dst"),
         )
     )
-    # n_iter is a convergence CAP (round 15): connected_components now
+    # n_iter is a convergence CAP: connected_components
     # early-exits the round after no label changes, so the planted
     # chains of 8 (diameter 7, within the round-3 reach d_3 = 14 of the
     # recurrence d_r = 2*(d_{r-1}+1)) run 4 rounds — three that
@@ -1207,8 +1207,8 @@ def n6_mixture_apply(spark, sf_dir):
     # floor(weight*100) bound) per salt bucket — sound for every
     # stratum — and the per-source quota filter applies to the final
     # rank.  grouped_topk fans each source over salt buckets instead of
-    # serializing a hot source onto one window task (round 10; the
-    # stratified_sample upgrade, applied to the variable-quota case).
+    # serializing a hot source onto one window task (the
+    # stratified_sample technique, applied to the variable-quota case).
     ranked = grouped_topk(
         docs.join(F.broadcast(quotas), "source")
         .withColumn("_sk", pl.shuffle_key(F.col("doc_id"), seed=7)),
@@ -1231,9 +1231,8 @@ def n6_mixture_apply(spark, sf_dir):
         "(doc, pos) occurrence; later occurrences are cut and documents "
         "reassemble from the remaining tokens (functions/spans.py). "
         "835 naturally-duplicated spans at sf0.01 make the oracle "
-        "non-vacuous without planting. Gram keys travel as strings here "
-        "(the oracle must recompute them); hashed=True is the 100 TB "
-        "8-byte-key arm, unit-tested equivalent.",
+        "non-vacuous without planting. Gram keys travel as strings "
+        "(the oracle must recompute them).",
     oracle=r"""
         WITH toks0 AS (
           SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS w
@@ -1500,7 +1499,7 @@ def n5_curation_funnel(spark, sf_dir):
     # `flagged` feeds TWO consumers — the 14-column gates aggregate and
     # the exact-dedup branch — which would each re-run every text gate;
     # the persisted frame is gate booleans + fp + n_tok, never the text
-    # (round 14, guide §1.2/§5).
+    # (guide §1.2/§5).
     docs = tx.with_language_id(
         fan_out(t(spark, sf_dir, "documents"), "doc_id"), "text"
     )
@@ -1996,7 +1995,7 @@ def n5_rejection_reasons(spark, sf_dir):
     # The gate expressions (top_2gram_share's per-doc array_sort above
     # all) are the dominant cost and a single-file corpus scans as ONE
     # task — fan_out spreads the map stage across the session
-    # parallelism (round 14, guide §2; no-op on a multi-file corpus).
+    # parallelism (guide §2; no-op on a multi-file corpus).
     # Output is a 7-group order-independent aggregation, so the
     # repartition cannot change results.
     docs = tx.with_language_id(

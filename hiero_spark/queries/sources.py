@@ -371,14 +371,12 @@ def s14_compaction(spark, sf_dir):
     "s15_training_shards",
     group="S15",
     doc="Training-shard export (sources/layout.py:export_training_shards): "
-        "documents shard by pmod(xxhash64(doc_id), 8) — membership is a "
-        "pure function of the id, so re-exports are reproducible and "
-        "loaders resume by shard — written partitionBy(shard), manifest "
-        "read back FROM THE WRITTEN FILES. The oracle recomputes the "
-        "manifest from the source table: match proves the export lost "
-        "and duplicated nothing, per shard. (Oracle uses the pmod shard "
-        "fn — DuckDB has no xxhash64; the hashed production default is "
-        "unit-tested, the assign_split/hash_split pattern.)",
+        "documents shard by pmod(doc_id, 8) — membership is a pure "
+        "function of the id, so re-exports are reproducible and loaders "
+        "resume by shard — written partitionBy(shard), manifest read "
+        "back FROM THE WRITTEN FILES. The oracle recomputes the manifest "
+        "from the source table: match proves the export lost and "
+        "duplicated nothing, per shard.",
     oracle="""
         WITH s AS (
           SELECT doc_id, doc_id % 8 AS shard FROM documents
@@ -395,7 +393,7 @@ def s15_training_shards(spark, sf_dir):
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     return layout.export_training_shards(
-        docs, _export_dir("doc_shards"), "doc_id", n_shards=8, hashed=False
+        docs, _export_dir("doc_shards"), "doc_id", n_shards=8
     )
 
 
@@ -715,7 +713,7 @@ def s22_deletion_propagation(spark, sf_dir):
     layout.delete_bloom_keys(
         spark, path, [7, 123, 321, 10_000_000, 20_000_000]
     )
-    # batched probe (round 15): one position job + one pruned read for
+    # batched probe: one position job + one pruned read for
     # all three verification ids, instead of three of each
     n_found = layout.read_bloom_pruned_many(spark, path, [7, 123, 321]).count()
     return (
@@ -835,7 +833,7 @@ def s24_wap_commit(spark, sf_dir):
         res = V.wap_commit(spark, batch, path, Checks().unique("doc_id"))
         # a clean publish promotes exactly the audited file list, so the
         # audit job's observed row count IS the new version's count
-        # (round 15: drops one full-version count job); after an abort
+        # (no separate full-version count job); after an abort
         # the table state is the PREVIOUS version — count that directly
         if res["published"]:
             n_after = res["n_rows_audited"]

@@ -186,21 +186,17 @@ def compact_parquet(
     return {"files_in": len(files), "files_out": files_out, "bytes_in": bytes_in}
 
 
-def export_training_shards(
-    df, dst_path: str, id_col: str, n_shards: int = 8, hashed: bool = True
-):
+def export_training_shards(df, dst_path: str, id_col: str, n_shards: int = 8):
     """Export a curated dataset as deterministic training shards with a
     manifest — the hand-off format between the data pipeline and the
     training loader (each loader worker claims whole shards; the
     manifest is the contract it validates against).
 
-    Shard = pmod(xxhash64(id), n_shards) (hashed=True, the production
-    default: unbiased under clustered id ranges) or pmod(id, n_shards)
-    (hashed=False — SQL-oracle-mirrorable, the same split the
-    assign_split/hash_split pair makes). Either way membership is a pure
-    function of the id: stable under reruns and independent of physical
-    layout, so re-exports reproduce byte-wise identical shard
-    MEMBERSHIP (loaders can resume by shard id). One
+    Shard = pmod(id, n_shards): SQL-oracle-mirrorable, the split
+    assign_split makes. Membership is a pure function of the id: stable
+    under reruns and independent of physical layout, so re-exports
+    reproduce byte-wise identical shard MEMBERSHIP (loaders can resume
+    by shard id). One
     repartition on the shard key, partitionBy write (dynamic partition
     dirs shard=N/), then a metadata-only manifest pass: per shard, row
     count and id span read back from the written files — the manifest
@@ -209,8 +205,7 @@ def export_training_shards(
     from pyspark.sql import functions as F
 
     spark = df.sparkSession
-    key = F.xxhash64(F.col(id_col)) if hashed else F.col(id_col)
-    sharded = df.withColumn("shard", F.pmod(key, F.lit(n_shards)))
+    sharded = df.withColumn("shard", F.pmod(F.col(id_col), F.lit(n_shards)))
     (
         sharded.repartition(n_shards, "shard")
         .write.mode("overwrite")

@@ -283,3 +283,84 @@ def test_decode_audio_serves_the_wav_np_arm(monkeypatch):
     payload = _make_wav([(1000 * (-1) ** i,) for i in range(300)])
     feat = mm.decode_audio(payload)
     assert calls["n"] == 1 and len(feat) == 8
+
+
+def test_frame_and_audio_operators_match_scalar_reference(spark):
+    """sample_frames, spectral_features and audio_window_signatures run
+    the numpy decode; on synthetic media (BMP/PNG/JPEG frames, PCM16
+    mono/stereo and IMA-ADPCM clips, junk) their rows must equal the
+    same per-row math over the scalar reference decoders."""
+    from pyspark.sql import functions as F
+
+    from tests.test_multimodal_codecs import _make_wav
+
+    docs = spark.range(12).withColumnRenamed("id", "doc_id")
+    mixed = mm.encode_framepack([
+        mm._encode_bmp(_gradient(9, 7, 1)),
+        mm._encode_png(_gradient(6, 5, 2)),
+        encode_jpeg(_gradient(17, 9, 3), quality=75),
+        encode_jpeg(_gradient(8, 8, 4), quality=95),
+        mm._encode_png(_gradient(3, 4, 5)),
+    ])
+    extra = spark.createDataFrame(
+        [(100, bytearray(mixed)), (101, bytearray(b"not media")), (102, None)],
+        "media_id long, payload binary",
+    )
+    video = mm.synthetic_pattern_video(docs).unionByName(extra)
+    pcm = [((i * 37) % 4096 - 2048) for i in range(700)]
+    clips = spark.createDataFrame(
+        [
+            (200, bytearray(mm._encode_wav_ima(pcm))),
+            (201, bytearray(_make_wav(
+                [(i * 31 % 32768 - 16384, -i * 17 % 32768 + 1)
+                 for i in range(600)], rate=16000, channels=2))),
+        ],
+        "media_id long, payload binary",
+    )
+    audio = (
+        mm.synthetic_tone_media(docs)
+        .unionByName(mm.synthetic_segment_audio(docs).withColumn(
+            "media_id", F.col("media_id") + 50))
+        .unionByName(clips)
+        .unionByName(extra)
+    )
+
+    def scalar_pixels(b):
+        return mm._decode_bmp(b) or mm._decode_png(b) or decode_jpeg(b)
+
+    def scalar_wav(b):
+        return mm._decode_wav(b) or mm._decode_wav_ima(b)
+
+    want_frames = []
+    for r in video.collect():
+        frames = mm._decode_framepack(bytes(r.payload)) if r.payload else None
+        for idx in range(0, len(frames or []), 2):
+            dec = scalar_pixels(frames[idx])
+            if dec is None:
+                continue
+            w, h, rows = dec
+            acc = sum((299 * pr + 587 * pg + 114 * pb) // 1000
+                      for row in rows for pr, pg, pb in row)
+            want_frames.append(
+                (r.media_id, idx, w, h, round(acc / (w * h) / 255.0, 6)))
+    got_frames = sorted(map(tuple, mm.sample_frames(video).collect()))
+    assert got_frames == sorted(want_frames)
+    assert {m for m, *_ in got_frames} >= {0, 100}
+
+    want_spec, want_sigs = [], []
+    for r in audio.collect():
+        dec = scalar_wav(bytes(r.payload)) if r.payload else None
+        if dec is None:
+            continue
+        mono, rate, _ = dec
+        want_spec.append((r.media_id, rate, len(mono),
+                          *mm._spectral_row(mono, rate, 2048)))
+        mags = np.abs(np.round(np.asarray(mono) * 32768.0)).astype(np.int64)
+        for w0 in range(0, len(mags) - 256 + 1, 256):
+            want_sigs.append(
+                (r.media_id, w0 // 256, int(mags[w0:w0 + 256].sum() // 256)))
+    got_spec = sorted(map(tuple, mm.spectral_features(audio).collect()))
+    assert got_spec == sorted(want_spec)
+    assert {m for m, *_ in got_spec} >= {0, 50, 200, 201}
+    got_sigs = sorted(map(tuple, mm.audio_window_signatures(audio).collect()))
+    assert got_sigs == sorted(want_sigs)

@@ -167,55 +167,23 @@ def test_cc_shipped_workload_shapes_converge_at_3_rounds(spark):
     assert er3[5] == 0 and er3[1_000_005] == 0 and er3[1_000_010] == 10
 
 
-def test_prepartition_gate_is_size_adaptive_not_constant(
-    spark, sf_dir, monkeypatch
-):
-    """The loop-invariant edge relation is hash-partitioned + persisted
-    ONLY above a size threshold (`_PREPARTITION_BYTES`, 1 GiB).  Below
-    it the local behavior is unchanged (localCheckpoint; a fixed
-    pre-partition was measured 2x worse at local scale); above it the
-    planner must see the keyed partitioning.  Results must be identical
-    either way."""
-    from pyspark.sql import functions as F
-
+def test_graph_ops_on_in_memory_edges_leave_no_tracked_cache(spark):
+    """An in-memory edge list reports Spark's default plan size
+    (Long.MaxValue); the iterative operators still materialize their
+    edge relation by localCheckpoint, so no tracked persist outlives
+    the call."""
     from hiero_spark.functions import graph as G
-    from hiero_spark.functions._cachetrack import release_caches
-    from hiero_spark.queries._util import t as _t
+    from hiero_spark.functions._cachetrack import live_count, release_caches
 
-    docs = _t(spark, sf_dir, "documents")
-    edges = docs.select(
-        F.col("doc_id").alias("src"), (F.col("doc_id") + 7).alias("dst")
-    )
-    df = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-
-    # gate OFF at the default threshold: checkpointed (LogicalRDD scan)
-    off = G._pin_wide(df, "u")
-    off_plan = off._jdf.queryExecution().optimizedPlan().toString()
-    assert "LogicalRDD" in off_plan or "ExistingRDD" in off_plan
-    assert "InMemoryRelation" not in off_plan
-
-    # gate ON under a 1-byte threshold: cached keyed repartition, and
-    # the partitioning is VISIBLE to the planner (the whole point —
-    # a checkpoint would erase it)
-    monkeypatch.setattr(G, "_PREPARTITION_BYTES", 1)
-    try:
-        on = G._pin_wide(df, "u")
-        on_plan = on._jdf.queryExecution().optimizedPlan().toString()
-        assert "InMemoryRelation" in on_plan
-        assert "hashpartitioning(u" in on_plan
-        # end-to-end equality through a real operator
-        src_df = docs.select(F.col("doc_id").alias("node")).limit(5)
-        gated = sorted(
-            map(tuple, G.bfs_levels(edges, src_df, max_hops=2).collect())
-        )
-    finally:
-        monkeypatch.undo()
-        release_caches()
-        spark.catalog.clearCache()
-    plain = sorted(
-        map(tuple, G.bfs_levels(edges, src_df, max_hops=2).collect())
-    )
-    assert gated == plain
+    release_caches()
+    e = _edges(spark, [(0, 1), (1, 2), (5, 6)])
+    src = spark.createDataFrame([(0,)], ["node"])
+    dist = {r.node: r.dist for r in G.bfs_levels(e, src, max_hops=3).collect()}
+    assert dist == {0: 0, 1: 1, 2: 2}
+    comp = {r.node: r.component
+            for r in G.connected_components(e, n_iter=5).collect()}
+    assert comp == {0: 0, 1: 0, 2: 0, 5: 5, 6: 5}
+    assert live_count() == 0
 
 
 # --- BFS levels ----------------------------------------------------------

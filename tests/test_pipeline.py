@@ -41,10 +41,9 @@ def test_token_vocab_counts(spark):
 
 
 @pytest.fixture
-def decontam_frames(spark, tmp_path):
-    """(evals, train), read back from parquet so their plans carry real
-    size statistics: an in-memory createDataFrame frame reports Spark's
-    default size (Long.MaxValue), which alone opens the Bloom gate."""
+def decontam_frames(spark):
+    """(evals, train): eval doc 10 shares the 3-gram 'quick brown fox'
+    with the one train doc; eval doc 11 shares nothing."""
     train = spark.createDataFrame(
         [(1, "the quick brown fox jumps")], "doc_id long, text string"
     )
@@ -55,11 +54,7 @@ def decontam_frames(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    out = []
-    for name, df in (("evals", evals), ("train", train)):
-        df.write.parquet(str(tmp_path / name))
-        out.append(spark.read.parquet(str(tmp_path / name)))
-    return tuple(out)
+    return evals, train
 
 
 def test_contaminated_docs_exact(decontam_frames):
@@ -69,31 +64,16 @@ def test_contaminated_docs_exact(decontam_frames):
 
 
 @pytest.mark.parametrize("hashed", [False, True])
-def test_contaminated_docs_bloom_gate_forced_open(spark, decontam_frames, monkeypatch, hashed):
-    """A 1-byte broadcast threshold opens the size gate, so the Bloom
-    pre-filter runs; the id set must equal the gate-closed answer."""
+def test_contaminated_docs_plans_no_bloom_probe(decontam_frames, hashed):
+    """In-memory frames report Spark's default plan size (Long.MaxValue);
+    the operator is still the plain semi-join, with no Python Bloom
+    probe (ArrowEvalPython) in its plan, and both arms find doc 10."""
+    from hiero_spark.plans import has_node
+
     evals, train = decontam_frames
-    calls = []
-    real = pl._bloom_prefilter
-    monkeypatch.setattr(
-        pl, "_bloom_prefilter", lambda *a: calls.append(a) or real(*a)
-    )
-
-    def ids():
-        out = pl.contaminated_docs(evals, train, "text", "doc_id", hashed=hashed)
-        return {r["doc_id"] for r in out.collect()}
-
-    closed = ids()
-    assert not calls
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "1")
-    try:
-        opened = ids()
-    finally:
-        spark.conf.set(key, old)
-    assert len(calls) == 1
-    assert opened == closed == {10}
+    out = pl.contaminated_docs(evals, train, "text", "doc_id", hashed=hashed)
+    assert not has_node(out, "ArrowEvalPython")
+    assert {r["doc_id"] for r in out.collect()} == {10}
 
 
 def test_scrub_pii_redacts_and_counts(spark):
@@ -125,8 +105,8 @@ def test_scrub_pii_phone_forms_redacted(spark):
 
 
 def test_scrub_pii_leaves_dates_and_ids_alone(spark):
-    """Round-2 verdict item 4: the old pattern redacted any 8+ run of
-    digits/spaces/dashes — dates and numeric ids came out as <PHONE>."""
+    """Dates and numeric ids are not phones: a bare run of 8+ digits,
+    spaces or dashes must not come out as <PHONE>."""
     clean = [
         "released 2026-08-13 and 2026 08 13 ok",
         "eu style 13.08.2026 date",
@@ -306,80 +286,30 @@ def test_hash_sample_null_keys_dropped_and_bounds(spark):
     df = spark.createDataFrame(
         [(1,), (None,), (2,)], "k long"
     )
-    # fraction 1.0 drops null keys like every other fraction (round-11
-    # ADVICE boundary fix: the early return applies the same isNotNull
-    # filter, so the contract has no discontinuity at 1.0)
+    # fraction 1.0 drops null keys like every other fraction (the early
+    # return applies the same isNotNull filter, so the contract has no
+    # discontinuity at 1.0)
     kept_full = hash_sample(df, "k", 1.0).select("k").collect()
     assert {r[0] for r in kept_full} == {1, 2}
     # any fraction < 1 drops null keys (md5(concat(NULL,..)) is NULL)
     kept = hash_sample(df, "k", 0.999999).select("k").collect()
     assert None not in {r[0] for r in kept} and len(kept) <= 2
     # superset monotonicity holds across the boundary: kept(0.999999)
-    # is a subset of kept(1.0) under both arms
-    for method in ("md5", "xxhash64"):
-        lo = {r[0] for r in hash_sample(df, "k", 0.999999, method=method)
-              .select("k").collect()}
-        hi = {r[0] for r in hash_sample(df, "k", 1.0, method=method)
-              .select("k").collect()}
-        assert lo <= hi == {1, 2}
+    # is a subset of kept(1.0)
+    lo = {r[0] for r in hash_sample(df, "k", 0.999999).select("k").collect()}
+    hi = {r[0] for r in hash_sample(df, "k", 1.0).select("k").collect()}
+    assert lo <= hi == {1, 2}
     with _pytest.raises(ValueError):
         hash_sample(df, "k", -0.1)
     with _pytest.raises(ValueError):
         hash_sample(df, "k", 1.5)
 
 
-def test_hash_sample_xxhash64_production_arm(spark):
-    """The xxhash64 arm carries the same contract as the portable md5
-    arm: repartition-invariant kept set, 6-sigma fraction band, strict
-    superset under a larger fraction, salt independence, NULL drop —
-    and differs from the md5 arm's draw (independent hash)."""
-    import math
-
-    from hiero_spark.functions.sampling import hash_sample
-
-    docs = load_table(spark, SF_ORACLE, "documents")
-    total = docs.count()
-    kept = hash_sample(docs, "doc_id", 0.2, salt="s1", method="xxhash64")
-    ids = sorted(r[0] for r in kept.select("doc_id").collect())
-    again = sorted(
-        r[0]
-        for r in hash_sample(
-            docs.repartition(5), "doc_id", 0.2, salt="s1", method="xxhash64"
-        ).select("doc_id").collect()
-    )
-    assert ids == again
-    sigma = math.sqrt(total * 0.2 * 0.8)
-    assert abs(len(ids) - 0.2 * total) <= 6 * sigma + 1
-    bigger = {
-        r[0]
-        for r in hash_sample(
-            docs, "doc_id", 0.5, salt="s1", method="xxhash64"
-        ).select("doc_id").collect()
-    }
-    assert set(ids) <= bigger
-    md5_ids = sorted(
-        r[0]
-        for r in hash_sample(docs, "doc_id", 0.2, salt="s1")
-        .select("doc_id").collect()
-    )
-    assert ids != md5_ids  # independent hash, different draw
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        hash_sample(docs, "doc_id", 0.2, method="sha1")
-    nulls = spark.createDataFrame([(1,), (None,)], "k long")
-    kept_n = hash_sample(nulls, "k", 0.999999, method="xxhash64").collect()
-    assert None not in {r[0] for r in kept_n}
-
-
 def test_hash_sample_arm_agreement_property(spark):
-    """md5-vs-xxhash64 arm agreement (round-11 VERDICT task 4): for any
-    (fraction pair, salt) the two arms enforce the SAME contract —
-    identical NULL handling at every fraction INCLUDING the 1.0
-    boundary, per-arm superset monotonicity f1<=f2 => kept(f1) subset of
-    kept(f2), and kept-set sizes inside the same 6-sigma Bernoulli band.
-    The kept SETS differ between arms by design (independent hashes);
-    the contract must not."""
+    """For any (fraction pair, salt) hash_sample keeps its contract:
+    NULL keys dropped at every fraction INCLUDING the 1.0 boundary,
+    superset monotonicity f1<=f2 => kept(f1) subset of kept(f2), and
+    kept-set sizes inside the 6-sigma Bernoulli band."""
     import math
     import os
 
@@ -398,7 +328,7 @@ def test_hash_sample_arm_agreement_property(spark):
         deadline=None,
         suppress_health_check=list(HealthCheck),
     )
-    @example(f1=0.999999, f2=1.0, salt="")  # the round-11 ADVICE boundary
+    @example(f1=0.999999, f2=1.0, salt="")  # the early-return boundary
     @example(f1=0.0, f2=1.0, salt="s")
     @example(f1=1.0, f2=1.0, salt="x")
     @given(
@@ -410,17 +340,14 @@ def test_hash_sample_arm_agreement_property(spark):
     )
     def prop(f1, f2, salt):
         lo, hi = min(f1, f2), max(f1, f2)
-        for method in ("md5", "xxhash64"):
-            kept_lo = {r[0] for r in hash_sample(df, "k", lo, salt=salt,
-                                                 method=method).collect()}
-            kept_hi = {r[0] for r in hash_sample(df, "k", hi, salt=salt,
-                                                 method=method).collect()}
-            assert None not in kept_lo and None not in kept_hi
-            assert kept_lo <= kept_hi, (method, lo, hi, salt)
-            for frac, kept in ((lo, kept_lo), (hi, kept_hi)):
-                sigma = math.sqrt(n_real * frac * (1.0 - frac))
-                assert abs(len(kept) - frac * n_real) <= 6 * sigma + 1, (
-                    method, frac, salt, len(kept))
+        kept_lo = {r[0] for r in hash_sample(df, "k", lo, salt=salt).collect()}
+        kept_hi = {r[0] for r in hash_sample(df, "k", hi, salt=salt).collect()}
+        assert None not in kept_lo and None not in kept_hi
+        assert kept_lo <= kept_hi, (lo, hi, salt)
+        for frac, kept in ((lo, kept_lo), (hi, kept_hi)):
+            sigma = math.sqrt(n_real * frac * (1.0 - frac))
+            assert abs(len(kept) - frac * n_real) <= 6 * sigma + 1, (
+                frac, salt, len(kept))
 
     try:
         prop()
@@ -429,7 +356,7 @@ def test_hash_sample_arm_agreement_property(spark):
 
 
 def test_hash_sample_grouped_mixture_contract(spark):
-    """hash_sample_grouped (round 12): per-group content-addressed
+    """hash_sample_grouped: per-group content-addressed
     fractions — determinism under repartitioning, per-group 6-sigma
     bands, raising ONE group's fraction grows that group as a strict
     superset WITHOUT disturbing any other group (the property sampleBy
@@ -472,67 +399,27 @@ def test_hash_sample_grouped_mixture_contract(spark):
     en2 = {d for d, l in rows2 if l == "en"}
     assert en1 < en2
     assert {p for p in rows if p[1] != "en"} == {p for p in rows2 if p[1] != "en"}
-    # NULL key / NULL group handling, both arms
+    # NULL key / NULL group handling
     nulls = spark.createDataFrame(
         [(1, "en"), (None, "en"), (2, None), (3, "xx")],
         "k long, g string",
     )
-    for method in ("md5", "xxhash64"):
-        out = {(r["k"], r["g"]) for r in hash_sample_grouped(
-            nulls, "k", "g", {"en": 1.0, "xx": 1.0}, method=method
-        ).collect()}
-        assert out == {(1, "en"), (3, "xx")}, (method, out)
-        empty = hash_sample_grouped(nulls, "k", "g", {}, method=method)
-        assert empty.count() == 0  # everything at the 0.0 default
+    out = {(r["k"], r["g"]) for r in hash_sample_grouped(
+        nulls, "k", "g", {"en": 1.0, "xx": 1.0}
+    ).collect()}
+    assert out == {(1, "en"), (3, "xx")}, out
+    empty = hash_sample_grouped(nulls, "k", "g", {})
+    assert empty.count() == 0  # everything at the 0.0 default
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
         hash_sample_grouped(nulls, "k", "g", {"en": 1.5})
     with _pytest.raises(ValueError):
         hash_sample_grouped(nulls, "k", "g", {"en": 0.5}, default=-0.1)
-    with _pytest.raises(ValueError):
-        hash_sample_grouped(nulls, "k", "g", {"en": 0.5}, method="sha1")
-
-
-def test_hash_sample_grouped_arms_consistent(spark):
-    """The xxhash64 production arm carries the grouped contract too:
-    repartition-invariant kept set, group-1.0 keeps all, per-group
-    bands, and a different draw from the md5 arm (independent hash)."""
-    import math
-
-    from hiero_spark.functions.sampling import hash_sample_grouped
-
-    docs = load_table(spark, SF_ORACLE, "documents")
-    fr = {"en": 0.2, "zh": 1.0}
-    kept = hash_sample_grouped(docs, "doc_id", "lang", fr, salt="mx",
-                               method="xxhash64")
-    ids = sorted(r["doc_id"] for r in kept.collect())
-    again = sorted(
-        r["doc_id"]
-        for r in hash_sample_grouped(
-            docs.repartition(5), "doc_id", "lang", fr, salt="mx",
-            method="xxhash64",
-        ).collect()
-    )
-    assert ids == again
-    base = {r["lang"]: r["n"] for r in docs.groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("n")).collect()}
-    by_lang = {}
-    for r in kept.select("lang").collect():
-        by_lang[r["lang"]] = by_lang.get(r["lang"], 0) + 1
-    assert by_lang.get("zh", 0) == base["zh"]
-    sigma = math.sqrt(base["en"] * 0.2 * 0.8)
-    assert abs(by_lang.get("en", 0) - 0.2 * base["en"]) <= 6 * sigma + 1
-    md5_ids = sorted(
-        r["doc_id"]
-        for r in hash_sample_grouped(docs, "doc_id", "lang", fr, salt="mx")
-        .collect()
-    )
-    assert ids != md5_ids  # independent draw
 
 
 def test_kmin_sample_exact_size_monotone_mergeable(spark):
-    """kmin_sample (round 12): exact size, repartition-invariant,
+    """kmin_sample: exact size, repartition-invariant,
     k-prefix monotone, MERGEABLE (bottom-k of a union == bottom-k of
     per-shard bottom-k's — the property that makes per-shard sampling +
     k-row merge the 100 TB plan), NULL keys never selected, salt draws
@@ -572,7 +459,7 @@ def test_kmin_sample_exact_size_monotone_mergeable(spark):
 
     with _pytest.raises(ValueError):
         kmin_sample(docs, "doc_id", 0)
-    # temp-column collision (round-12 ADVICE): a caller whose input
+    # temp-column collision: a caller whose input
     # already carries '_kmin_h' must get its column back untouched
     clash = spark.createDataFrame(
         [(1, "keep1"), (2, "keep2"), (3, "keep3")], "k long, _kmin_h string"
@@ -585,7 +472,7 @@ def test_kmin_sample_exact_size_monotone_mergeable(spark):
 
 
 def test_kmin_sample_grouped_exact_per_group(spark):
-    """kmin_sample_grouped (round 13): exactly min(k, group size) per
+    """kmin_sample_grouped: exactly min(k, group size) per
     group, repartition-invariant, per-group prefix-monotone in k,
     NULL keys/groups dropped, salt draws an independent set."""
     from hiero_spark.functions.sampling import kmin_sample, kmin_sample_grouped
@@ -640,7 +527,7 @@ def test_kmin_sample_grouped_exact_per_group(spark):
 
 
 def test_weighted_kmin_sample_race_properties(spark):
-    """weighted_kmin_sample (round 13): exact size, repartition-
+    """weighted_kmin_sample: exact size, repartition-
     invariant, mergeable (bottom-k of per-shard bottom-k's), weight
     dominance (an overwhelming weight is always selected), NULL/zero/
     negative weights never selected, salt independence, temp-column
@@ -719,7 +606,7 @@ _FUZZ_EXAMPLES = int(__import__("os").environ.get("HIERO_FUZZ_EXAMPLES", "25"))
        k=st.integers(1, 120))
 def test_weighted_race_selection_set_engine_parity(spark, duck, salt, k):
     """Differential fuzz of weighted_kmin_sample's hash-verifiability
-    claim (round 13): for RANDOM salts and k, the selected SET must be
+    claim: for RANDOM salts and k, the selected SET must be
     identical across engines even though the E scores differ in the
     last ulp on ~18% of rows (measured) — the k-th/(k+1)-th boundary
     gap concentrates at relative size ~1/k, so engine libm differences

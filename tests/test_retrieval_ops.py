@@ -1,4 +1,4 @@
-"""Round-7 operators: BM25 ranking, triangle counting, systematic PPS
+"""BM25 ranking, triangle counting, systematic PPS
 sampling — unit-level properties beyond the registry oracles (which pin
 cross-engine parity on the documents corpus)."""
 
@@ -56,7 +56,7 @@ def test_bm25_rewards_term_coverage(spark):
 
 
 def test_bm25_query_terms_case_folded(spark, tmp_path):
-    """Round-7 ADVICE: a mixed-case query ('Alpha') must rank like the
+    """A mixed-case query ('Alpha') must rank like the
     lowercase one, in both the full-scan and the indexed probe."""
     from hiero_spark.functions.bm25 import bm25_topk_indexed, save_text_index
 
@@ -388,7 +388,7 @@ def test_prefix_pruned_read_skips_files(spark, tmp_path):
 
 
 def test_prefix_pruned_keeps_rows_above_uffff(spark, tmp_path):
-    """Round-7 ADVICE (medium): prefix+U+FFFF as the upper bound loses
+    """prefix+U+FFFF as the upper bound loses
     matching rows that sort ABOVE the sentinel — 'app\\uffffx' and a
     supplementary-plane char like U+1F600 both compare greater than
     U+FFFF.  The successor bound must keep them."""
@@ -446,9 +446,9 @@ def test_quantile_state_fold_equals_recompute(spark):
 
 
 def test_pps_sample_zero_and_negative_weights(spark):
-    """Round-7 ADVICE: total weight 0 previously reached the SQL as a
-    division by zero; negative weights silently broke the cumulative
-    line. Now: empty sample for zero totals, ValueError for negatives."""
+    """A zero total weight must not reach the SQL as a division by zero,
+    and negative weights would break the cumulative line: empty sample
+    for zero totals, ValueError for negatives."""
     import pytest as _pytest
 
     from hiero_spark.functions.sampling import systematic_pps_sample
@@ -468,7 +468,7 @@ def test_pps_sample_zero_and_negative_weights(spark):
 
 
 def test_quantile_state_floor_buckets_negative_cents(spark):
-    """Round-7 ADVICE: bucketing must use FLOOR semantics so negative
+    """Bucketing must use FLOOR semantics so negative
     cents (refunds) land in the bucket whose lower bound is below them —
     truncation would fold (-width, width) into one mislabeled bucket 0.
     Checked against Python's floor division, and the probe's lower-bound
@@ -500,8 +500,8 @@ def test_quantile_state_floor_buckets_negative_cents(spark):
 def test_quantile_oracle_floor_matches_duckdb(spark):
     """The s17 oracle's (x - nonneg_mod) // w construction must equal
     Python floor division in DuckDB — pinning the dialect fact that
-    DuckDB integer // truncates toward zero (NOT floor, contrary to the
-    round-7 ADVICE premise), so the explicit-mod form is required."""
+    DuckDB integer // truncates toward zero (NOT floor), so the
+    explicit-mod form is required."""
     import duckdb
 
     vals = [-250_001, -250_000, -199_999, -1, 0, 1, 99_999, 100_000, 250_000]
@@ -569,48 +569,6 @@ def test_containment_join_equals_brute_force(spark):
     assert (3, 4, 1.0) in got and (4, 3, 1.0) in got  # dup: both directions
 
 
-def test_containment_join_group_arm_matches_expanded(spark):
-    """expand_identical=False (the extreme-duplication scale arm) must be
-    the exact group-level compression of the member-level contract: a
-    duplicate group's self-row stands for its intra-group clique, and
-    count_a * count_b reproduces every cross-group pair multiplicity."""
-    from hiero_spark.functions.setsim import containment_join
-    from hiero_spark.sources.readers import synthetic_containment_corpus
-
-    docs = synthetic_containment_corpus(
-        spark, n=60, pages=12, quotes=5, doc_len=12, snip_len=6
-    )
-    expanded = sorted(
-        tuple(r)
-        for r in containment_join(docs, threshold=0.9, k=3).collect()
-    )
-    groups = containment_join(
-        docs, threshold=0.9, k=3, expand_identical=False
-    ).collect()
-
-    # rebuild member-level pairs from group rows using the corpus layout:
-    # ids [0,5) are verbatim copies (one group, rep id 0), everything
-    # else is a singleton group
-    members = {0: list(range(5))}
-    rebuilt = []
-    for r in groups:
-        ms_a = members.get(r["id_a"], [r["id_a"]])
-        ms_b = members.get(r["id_b"], [r["id_b"]])
-        assert r["count_a"] == len(ms_a) and r["count_b"] == len(ms_b)
-        for a in ms_a:
-            for b in ms_b:
-                if a != b:
-                    rebuilt.append(
-                        (a, b, r["n_common"], r["n_a"], r["containment"])
-                    )
-    assert sorted(rebuilt) == expanded
-    # the duplicate group is ONE self-row, quote-in-page is one row per page
-    self_rows = [r for r in groups if r["id_a"] == r["id_b"]]
-    assert len(self_rows) == 1 and self_rows[0]["count_a"] == 5
-    cross = [r for r in groups if r["id_a"] != r["id_b"]]
-    assert len(cross) == 12 and all(r["containment"] == 1.0 for r in cross)
-
-
 def test_containment_candidates_bounded_under_duplication(spark):
     """The skew-stress bound at test scale: candidate GROUP pairs are per
     distinct set (quote-group -> each quoting page), not per copy."""
@@ -625,29 +583,11 @@ def test_containment_candidates_bounded_under_duplication(spark):
     assert cands <= 25
 
 
-def test_containment_join_hashed_equals_string_arm(spark):
-    from hiero_spark.catalog import load_table
-    from hiero_spark.functions.setsim import containment_join
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    s = sorted(
-        tuple(r)
-        for r in containment_join(docs, threshold=0.8, k=3).collect()
-    )
-    h = sorted(
-        tuple(r)
-        for r in containment_join(docs, threshold=0.8, k=3, hashed=True).collect()
-    )
-    assert [x[2:] for x in s] == [x[2:] for x in h]  # same scores...
-    assert s == h                                    # ...and same pairs
-
-
 def test_jaccard_join_group_arm_matches_expanded(spark):
     """expand_identical=False (the extreme-duplication scale arm) must be
     the exact group-level compression of the member-level contract: a
     duplicate group's self-row stands for its intra-group clique, and
-    count_a * count_b reproduces every cross-group pair multiplicity
-    (the containment_join precedent, round-9 verdict #2)."""
+    count_a * count_b reproduces every cross-group pair multiplicity."""
     from hiero_spark.functions.setsim import jaccard_join
     from hiero_spark.sources.readers import synthetic_verbatim_corpus
 
@@ -697,9 +637,8 @@ def test_jaccard_join_group_arm_matches_expanded(spark):
 
 
 def test_jaccard_candidates_bounded_under_duplication(spark):
-    """The round-9 verdict's last quadratic: g verbatim copies used to
-    pass the PPJoin length filter verbatim and generate g^2/2 candidate
-    pairs.  Collapsed, the hot group is ONE distinct set — candidates
+    """g verbatim copies would pass the PPJoin length filter verbatim
+    and generate g^2/2 candidate pairs.  Collapsed, the hot group is ONE distinct set — candidates
     are per distinct-set pair, zero for a corpus whose only structural
     relationship is the intra-group clique."""
     from hiero_spark.functions.setsim import jaccard_candidates, jaccard_join
@@ -716,7 +655,7 @@ def test_jaccard_candidates_bounded_under_duplication(spark):
 
 
 def test_operator_caches_are_tracked_and_releasable(spark):
-    """Round-9 ADVICE: jaccard/containment/minhash persist internal
+    """jaccard/containment/minhash persist internal
     multi-consumer frames; a long-lived driver must be able to release
     them.  Every such persist registers in functions/_cachetrack; after
     release_caches() the tracker is empty and the frames are gone."""
@@ -774,9 +713,9 @@ def test_grouped_pps_distributed_prefix_matches_plain_window(spark):
 
 def test_grouped_pps_null_group_key_is_a_stratum(spark):
     """A NULL group key is a real stratum: the two-phase offset plan must
-    keep it (eqNullSafe join), matching the plain-window fallback —
-    before the round-11 fix the null-unsafe equi-join silently dropped
-    every null-group row on the fast path only."""
+    keep it (eqNullSafe join), matching the plain-window fallback — a
+    null-unsafe equi-join would silently drop every null-group row on
+    the fast path only."""
     from collections import Counter
 
     from hiero_spark.functions.sampling import systematic_pps_sample_grouped

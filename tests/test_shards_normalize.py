@@ -1,5 +1,4 @@
-"""Training-shard export (hashed production path) + unicode
-normalization unit tests."""
+"""Training-shard export + unicode normalization unit tests."""
 
 import glob
 
@@ -9,7 +8,7 @@ from hiero_spark.functions.normalize import normalize_text
 from hiero_spark.sources.layout import export_training_shards
 
 
-def test_hashed_shards_reproducible_and_complete(spark, tmp_path):
+def test_shards_reproducible_and_complete(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, f"text {i}") for i in range(200)], ["doc_id", "text"]
     )
@@ -17,7 +16,7 @@ def test_hashed_shards_reproducible_and_complete(spark, tmp_path):
     rows1 = {r["shard"]: r["n_rows"] for r in m1.collect()}
     assert sum(rows1.values()) == 200  # nothing lost or duplicated
     assert set(rows1) == {0, 1, 2, 3}
-    # hashed split is roughly balanced even though ids are a dense range
+    # a dense id range splits evenly
     assert all(30 <= n <= 70 for n in rows1.values()), rows1
     # membership is a pure function of the id: re-export identical
     m2 = export_training_shards(df, str(tmp_path / "b"), "doc_id", n_shards=4)

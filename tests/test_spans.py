@@ -1,5 +1,5 @@
 """ExactSubstr span removal: hand-built removals, intra-doc repeats,
-short-doc no-op, and string/hashed arm equivalence."""
+and the short-doc no-op."""
 
 from hiero_spark.functions.spans import remove_repeated_spans
 
@@ -46,14 +46,3 @@ def test_short_docs_untouched(spark):
     assert out[1]["n_removed"] == out[2]["n_removed"] == 0
     assert out[1]["clean_text"] == "short doc"
 
-
-def test_hashed_arm_matches_string_arm(spark):
-    rows = [
-        (i, _tok(range(i % 3, i % 3 + 20)) + f" unique{i}") for i in range(30)
-    ]
-    df = _docs(spark, rows)
-    a = sorted(map(tuple, remove_repeated_spans(df, "text", "doc_id").collect()))
-    b = sorted(
-        map(tuple, remove_repeated_spans(df, "text", "doc_id", hashed=True).collect())
-    )
-    assert a == b
